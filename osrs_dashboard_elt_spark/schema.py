@@ -28,6 +28,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .literals import literal_frame
+
 # reference storage types -> Spark types; timestamp-named TEXT columns
 # are promoted to real timestamps (§1.2 "schema-declared, not inferred")
 _TYPE_MAP = {
@@ -117,12 +119,14 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
 def kv_table(spark: SparkSession, values: dict[str, Any]) -> DataFrame:
     """Stringly-typed key/value metadata table; non-string values are
     JSON-encoded exactly like the reference's dashboard_config
-    (src/3_transform_data.py:89-96)."""
+    (src/3_transform_data.py:89-96).  A JVM ``VALUES`` relation
+    (``literals.literal_frame``), so writing it starts no Python
+    worker."""
     rows = [
         (k, v if isinstance(v, str) else json.dumps(v))
         for k, v in values.items()
     ]
-    return spark.createDataFrame(rows, "key string, value string")
+    return literal_frame(spark, rows, "key string, value string")
 
 
 def evolve_schema(

@@ -24,8 +24,21 @@ from datetime import date, datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..observability import ObservedMetrics
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop conf."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
 
 def _target_exists(spark: SparkSession, path: str) -> bool:
+    # an absent path is answered by the file system: a failed read
+    # would post a query failure to every execution listener
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
+        return False
     try:
         spark.read.parquet(path).schema
         return True
@@ -99,55 +112,59 @@ def dedup_append(
     instead of relying on per-file row-group stats
     (``test_sources.py`` asserts the PartitionFilters in the plan).
     This is the at-rest layout a 100-TB bronze table needs anyway
-    (retention drops = directory deletes)."""
+    (retention drops = directory deletes).
+
+    Into an absent target the batch is written in one pass and counted
+    by that pass (``_write_new``); into an existing one the anti-join
+    result is cached and counted first, so the write never re-scans the
+    table it appends to."""
     if date_partition_col is not None and ts_col is None:
         raise ValueError("date_partition_col requires ts_col")
     deduped = batch.dropDuplicates(keys)
     if date_partition_col is not None:
         deduped = deduped.withColumn(date_partition_col, F.to_date(F.col(ts_col)))
-    out = deduped
-    if _target_exists(spark, target_path):
-        existing = spark.read.parquet(target_path)
-        if ts_col is not None:
-            # cache the deduped batch: it feeds both the bounds agg and
-            # the anti-join probe side
-            deduped = deduped.cache()
-            out = deduped
-            bounds = deduped.agg(
-                F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
-            ).collect()[0]
-            if bounds["lo"] is not None:
-                existing = prune_to_window(
-                    existing, ts_col, bounds["lo"], bounds["hi"], lateness_seconds
-                )
-                if date_partition_col is not None:
-                    # literal date bounds -> partition pruning on the
-                    # Hive layout (the ts predicate alone only skips
-                    # row groups within already-listed files).  A
-                    # DateType ts_col collects as datetime.date, which
-                    # supports neither the timedelta slack's sub-day
-                    # precision nor .date() — branch like
-                    # prune_to_window does.
-                    if isinstance(bounds["lo"], datetime):
-                        slack = timedelta(seconds=lateness_seconds)
-                        d_lo = (bounds["lo"] - slack).date()
-                        d_hi = (bounds["hi"] + slack).date()
-                    else:
-                        slack_days = timedelta(
-                            days=-(-lateness_seconds // 86400)
-                        )
-                        d_lo = bounds["lo"] - slack_days
-                        d_hi = bounds["hi"] + slack_days
-                    existing = existing.filter(
-                        (F.col(date_partition_col) >= F.lit(d_lo))
-                        & (F.col(date_partition_col) <= F.lit(d_hi))
+    if not _target_exists(spark, target_path):
+        return _write_new(spark, deduped, target_path, date_partition_col)
+    existing = spark.read.parquet(target_path)
+    if ts_col is not None:
+        # cache the deduped batch: it feeds both the bounds agg and
+        # the anti-join probe side
+        deduped = deduped.cache()
+        bounds = deduped.agg(
+            F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
+        ).collect()[0]
+        if bounds["lo"] is not None:
+            existing = prune_to_window(
+                existing, ts_col, bounds["lo"], bounds["hi"], lateness_seconds
+            )
+            if date_partition_col is not None:
+                # literal date bounds -> partition pruning on the
+                # Hive layout (the ts predicate alone only skips
+                # row groups within already-listed files).  A
+                # DateType ts_col collects as datetime.date, which
+                # supports neither the timedelta slack's sub-day
+                # precision nor .date() — branch like
+                # prune_to_window does.
+                if isinstance(bounds["lo"], datetime):
+                    slack = timedelta(seconds=lateness_seconds)
+                    d_lo = (bounds["lo"] - slack).date()
+                    d_hi = (bounds["hi"] + slack).date()
+                else:
+                    slack_days = timedelta(
+                        days=-(-lateness_seconds // 86400)
                     )
-        out = new_rows_against(deduped, existing, keys)
-        if date_partition_col is not None:
-            # left_anti keeps batch columns; re-derive the partition
-            # column in case keys pruned it
-            if date_partition_col not in out.columns:
-                out = out.withColumn(date_partition_col, F.to_date(F.col(ts_col)))
+                    d_lo = bounds["lo"] - slack_days
+                    d_hi = bounds["hi"] + slack_days
+                existing = existing.filter(
+                    (F.col(date_partition_col) >= F.lit(d_lo))
+                    & (F.col(date_partition_col) <= F.lit(d_hi))
+                )
+    out = new_rows_against(deduped, existing, keys)
+    if date_partition_col is not None:
+        # left_anti keeps batch columns; re-derive the partition
+        # column in case keys pruned it
+        if date_partition_col not in out.columns:
+            out = out.withColumn(date_partition_col, F.to_date(F.col(ts_col)))
     # Materialize the anti-join BEFORE opening the writer: the write
     # must not re-scan the target while appending to it.
     rows = out.cache().count()
@@ -158,6 +175,25 @@ def dedup_append(
         w.parquet(target_path)
     out.unpersist()
     deduped.unpersist()
+    return rows
+
+
+def _write_new(
+    spark: SparkSession, df: DataFrame, target_path: str, date_partition_col: str | None
+) -> int:
+    """First write into an absent target: nothing to anti-join against,
+    so the rows go out in one pass and their count rides that pass.  A
+    zero-row write is removed again, so an empty batch still leaves no
+    readable table, as when nothing was written."""
+    obs = ObservedMetrics()
+    w = obs.observe(df, "write", rows=F.count(F.lit(1))).write.mode("append")
+    if date_partition_col is not None:
+        w = w.partitionBy(date_partition_col)
+    w.parquet(target_path)
+    rows = obs.get()["write"]["rows"]
+    if not rows:
+        fs, jpath = _hadoop_path(spark, target_path)
+        fs.delete(jpath, True)
     return rows
 
 

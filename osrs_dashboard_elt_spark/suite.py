@@ -1585,14 +1585,20 @@ def reset_memos() -> None:
     Scope: exactly the memos that cache COMPUTED artifacts keyed on
     the input dir.  ``_T_CACHE`` stays: it holds only the lazy
     analyzed relation (no data, no results).  The table-format
-    mutation fixtures (``_DELETE_PATH_CACHE`` etc.) stay too: they
-    cache a fixture TABLE the query then reads — rebuilding one per
-    rep would re-run a mutation on a fresh copy, which is setup, not
-    the declared computation (their build cost is reported once via
-    the warm run instead).  Cross-query sharing (kmeans centroids
-    feeding q_kmeans_centroids, q_semantic_dedup, q_ivfpq_topk) is a
-    per-PROCESS design for production reuse; clearing between timed
-    reps makes each query's bench entry self-contained."""
+    mutation fixtures stay too: ``_DELETE_PATH_CACHE``,
+    ``_DV_PATH_CACHE``, ``_CDF_PATH_CACHE``, ``_LIN_PATH_CACHE``,
+    ``_EVOLVE_PATH_CACHE``, ``_COMPACT_PATH_CACHE``,
+    ``_IVM_PATH_CACHE``, ``_MERGED_PATH_CACHE``,
+    ``_IVMSEG_PATH_CACHE`` and ``_CDC_STREAM_CACHE`` each cache a
+    fixture TABLE the query then reads — rebuilding one per rep would
+    re-run a mutation on a fresh copy, which is setup, not the
+    declared computation (their build cost is reported once via the
+    warm run instead).  ``tests/test_suite_memos.py`` fails on any
+    ``_*_CACHE`` dict that is neither cleared here nor named above.
+    Cross-query sharing (kmeans centroids feeding q_kmeans_centroids,
+    q_semantic_dedup, q_ivfpq_topk) is a per-PROCESS design for
+    production reuse; clearing between timed reps makes each query's
+    bench entry self-contained."""
     for memo in (
         _KM_CENTS_CACHE,
         _PQ_BOOKS_CACHE,
@@ -1601,6 +1607,7 @@ def reset_memos() -> None:
         _PROBE_W_CACHE,
         _ZORDER_PATH_CACHE,
         _BLOOM_PATH_CACHE,
+        _BPE_TRAIN_CACHE,
     ):
         memo.clear()
 

@@ -344,6 +344,7 @@ def run(
         # announces itself (operators/quality.py)
         from datetime import datetime, timezone
 
+        from osrs_dashboard_elt_spark.literals import literal_frame
         from osrs_dashboard_elt_spark.operators.quality import (
             metric_drift,
             metrics_history_append,
@@ -354,7 +355,8 @@ def run(
             name: int(inp[f"viol_{i}"])
             for i, (name, _) in enumerate(GATE_RULES)
         }
-        audit_df = spark.createDataFrame(
+        audit_df = literal_frame(
+            spark,
             [
                 (name, gate_audit[name], int(inp["rows"]))
                 for name, _ in GATE_RULES

@@ -16,6 +16,22 @@ bronze/silver/gold parquet:
                       blue/green so readers never see a half-written
                       table (reference src/3_transform_data.py:771-798)
 
+Execution rule: each output of a run is computed exactly once.
+
+- Every table is written once.  Row counts (silver appends, the price
+  quotes, the gold tables that feed the drift gate) are observed
+  metrics of the write itself (``observability.ObservedMetrics``), never
+  a second ``count()``.
+- The enriched broadcasts frame is persisted before the gold fan-out and
+  unpersisted after it, so the as-of enrichment runs once, not once per
+  report.
+- Literal tables (``run_metadata``, ``dashboard_config``, the drift
+  gate's row-count table) are JVM ``VALUES`` relations
+  (``literals.literal_frame``): the pipeline starts no Python worker.
+- The gold tables are independent, so they publish concurrently from a
+  thread pool as wide as the session's default parallelism; the first
+  failed publish fails the stage.
+
 Usage:
     python scripts/run_pipeline.py [sf_dir] [out_dir]
 
@@ -29,11 +45,17 @@ from __future__ import annotations
 import sys
 import tempfile
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 sys.path.insert(0, "/root/repo")
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from osrs_dashboard_elt_spark.literals import literal_frame
+from osrs_dashboard_elt_spark.observability import ObservedMetrics
 
 
 def synthesize_raw_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,6 +112,81 @@ def synthesize_raw_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("timestamp"),
         msg.alias("raw_content"),
     )
+
+
+def metadata_tables(spark: SparkSession, dashboard) -> dict[str, DataFrame]:
+    """The metadata k/v gold tables, same shape as the reference's
+    create_metadata_tables (src/3_transform_data.py:55-98):
+    ``run_metadata`` carries the publish timestamp, ``dashboard_config``
+    the stringly/JSON-encoded serving settings of ``dashboard`` (a
+    ``config_loader`` dashboard section)."""
+    from osrs_dashboard_elt_spark.schema import kv_table
+    from osrs_dashboard_elt_spark.suite import ANCHOR
+
+    return {
+        "run_metadata": literal_frame(
+            spark, [(ANCHOR.isoformat(),)], "last_updated_utc STRING"
+        ),
+        "dashboard_config": kv_table(
+            spark,
+            {
+                "custom_lookback_days": dashboard.custom_lookback_days,
+                "top_drops_limit": dashboard.top_drops_limit,
+                "pb_group_order": ["Bosses", "Raids"],
+                "clog_group_order": ["Bosses", "Other"],
+            },
+        ),
+    }
+
+
+def report_rows_frame(spark: SparkSession, rows: dict[str, int]) -> DataFrame:
+    """One run's gold row counts as the drift gate's ``(report,
+    n_rows)`` audit table."""
+    return literal_frame(
+        spark, sorted(rows.items()), "report string, n_rows long"
+    )
+
+
+def publish_all(
+    spark: SparkSession,
+    tables: dict[str, DataFrame],
+    root: str,
+    publish: Callable[[DataFrame, str], str],
+) -> dict[str, tuple[str, int]]:
+    """Publish each of ``tables`` to ``root/<name>`` with ``publish``
+    (blue/green), concurrently: one thread per table up to the
+    session's default parallelism.  Each table's row count is observed
+    on its own write.  Returns ``{name: (color, rows)}``; the first
+    failed publish is re-raised and the publishes not yet started are
+    cancelled.
+
+    The thread targets are wrapped one by one in
+    ``inheritable_thread_target``: each gets its own copy of the
+    caller's local properties (job tags, job group), so the jobs it
+    starts carry the caller's tags and concurrent SQL executions do not
+    share one property set."""
+    obs = ObservedMetrics()
+    observed = {
+        name: obs.observe(df, name, rows=F.count(F.lit(1)))
+        for name, df in tables.items()
+    }
+    width = min(len(tables), spark.sparkContext.defaultParallelism)
+    colors: dict[str, str] = {}
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = {
+            pool.submit(
+                inheritable_thread_target(spark)(publish), df, f"{root}/{name}"
+            ): name
+            for name, df in observed.items()
+        }
+        try:
+            for fut in as_completed(futures):
+                colors[futures[fut]] = fut.result()
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
+    rows = obs.get()
+    return {name: (colors[name], rows[name]["rows"]) for name in tables}
 
 
 def run_pipeline(
@@ -189,8 +286,12 @@ def run_pipeline(
             .groupBy("Item_Name", F.date_trunc("day", "Timestamp").alias("quote_ts"))
             .agg(F.avg("Item_Value").cast("long").alias("quoted_value"))
         )
-        publish_blue_green(quotes, f"{out_dir}/silver/item_quotes")
-        counters["n_quotes"] = quotes.count()
+        obs = ObservedMetrics()
+        publish_blue_green(
+            obs.observe(quotes, "quotes", rows=F.count(F.lit(1))),
+            f"{out_dir}/silver/item_quotes",
+        )
+        counters["n_quotes"] = obs.get()["quotes"]["rows"]
         print(
             f"[enrich]    {counters['n_quotes']} (item, day) price quotes "
             "published"
@@ -229,8 +330,25 @@ def run_pipeline(
                 ["raw_log_id", "Username"],
                 "left_anti",
             )
-            bc = rest.unionByName(enriched.select(*rest.columns))
-            counters["n_enriched"] = enriched.count()
+            obs = ObservedMetrics()
+            bc = rest.unionByName(
+                obs.observe(
+                    enriched.select(*rest.columns), "enriched",
+                    rows=F.count(F.lit(1)),
+                )
+            )
+        # every gold plan below reads bc: compute it (and the as-of
+        # enrichment inside it) once, before the fan-out
+        bc = bc.persist()
+        bc.count()
+        if quotes is not None:
+            counters["n_enriched"] = obs.get()["enriched"]["rows"]
+        try:
+            publish_reports(bc)
+        finally:
+            bc.unpersist()
+
+    def publish_reports(bc: DataFrame) -> None:
         periods = standard_periods(ANCHOR)
         reports = {
             "leaderboard_drops": leaderboard_report(
@@ -303,30 +421,16 @@ def run_pipeline(
         reports.update(
             generate_all_reports(spark, fan_cfg, chat, bc, ANCHOR)
         )
-        # metadata k/v tables, same shape as the reference's
-        # create_metadata_tables (src/3_transform_data.py:55-98):
-        # run_metadata carries the publish timestamp, dashboard_config
-        # the stringly/JSON-encoded serving settings
-        from osrs_dashboard_elt_spark.schema import kv_table
-
-        reports["run_metadata"] = spark.createDataFrame(
-            [(ANCHOR.isoformat(),)], "last_updated_utc STRING"
-        )
-        reports["dashboard_config"] = kv_table(
-            spark,
-            {
-                "custom_lookback_days": fan_cfg.dashboard.custom_lookback_days,
-                "top_drops_limit": fan_cfg.dashboard.top_drops_limit,
-                "pb_group_order": ["Bosses", "Raids"],
-                "clog_group_order": ["Bosses", "Other"],
-            },
+        reports.update(metadata_tables(spark, fan_cfg.dashboard))
+        published = publish_all(
+            spark, reports, f"{out_dir}/gold", publish_blue_green
         )
         for name, df in reports.items():
-            color = publish_blue_green(df, f"{out_dir}/gold/{name}")
+            color, rows = published[name]
             # row counts feed the stage-4 drift gate (the deequ
             # metrics-repository discipline, mirroring the corpus
             # pipeline's gate at run_corpus_pipeline.py stage 4)
-            counters[f"rows_{name}"] = df.count()
+            counters[f"rows_{name}"] = rows
             print(f"[transform] gold/{name} -> {color} ({df.columns})")
 
     # -- stage 4: run summary (S15) + notify (S14) --------------------
@@ -373,15 +477,13 @@ def run_pipeline(
             metrics_history_append,
         )
 
-        report_rows = [
-            (k[len("rows_"):], int(v))
-            for k, v in sorted(counters.items())
+        report_rows = {
+            k[len("rows_"):]: int(v)
+            for k, v in counters.items()
             if k.startswith("rows_")
-        ]
+        }
         if report_rows:
-            audit_df = spark.createDataFrame(
-                report_rows, "report string, n_rows long"
-            )
+            audit_df = report_rows_frame(spark, report_rows)
             run_day = time.strftime("%Y-%m-%d", time.gmtime())
             hist_path = f"{out_dir}/metrics_history/report_rows"
             metrics_history_append(audit_df, hist_path, run_day)

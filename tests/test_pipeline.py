@@ -7,14 +7,43 @@ import sys
 
 sys.path.insert(0, "/root/repo/scripts")
 
-from run_pipeline import run_pipeline  # noqa: E402
+from run_pipeline import publish_all, run_pipeline  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+GOLD = (
+    "leaderboard_drops", "timeseries_drops", "personal_bests",
+    "recent_achievements", "leaderboard_levels", "detailed_drops_all_time",
+    "detailed_drops_ytd", "detailed_drops_mtd", "detailed_drops_prev_month",
+    "detailed_drops_this_week", "detailed_drops_prev_week",
+    "detailed_drops_last_14d", "timeseries_levels", "run_metadata",
+    "dashboard_config",
+)
+
+
+def _assert_report_rows_match_gold(spark, out):
+    """The drift gate's latest recorded row count of every gold table
+    equals the published table's row count: the count observed on the
+    write came from that table's own frame, once."""
+    from osrs_dashboard_elt_spark.sources import read_published
+
+    hist = spark.read.parquet(f"{out}/metrics_history/report_rows")
+    day = hist.agg({"day": "max"}).collect()[0][0]
+    recorded = {
+        r["report"]: r["n_rows"]
+        for r in hist.filter(hist.day == day).collect()
+    }
+    published = {
+        name: read_published(spark, f"{out}/gold/{name}").count()
+        for name in GOLD
+    }
+    assert recorded == published
 
 
 def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     out = str(tmp_path / "lake")
     run_pipeline(spark, SF_DIR, out)
+    _assert_report_rows_match_gold(spark, out)
 
     bronze = spark.read.parquet(f"{out}/bronze/raw_logs")
     bc = spark.read.parquet(f"{out}/silver/clan_broadcasts")
@@ -41,6 +70,42 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     for t, n in counts_before.items():
         assert spark.read.parquet(f"{out}/{t}").count() == n, t
     assert read_published(spark, f"{out}/gold/leaderboard_drops").count() == lb.count()
+    _assert_report_rows_match_gold(spark, out)
+
+
+def test_publish_all_counts_on_the_write_and_reraises(spark, tmp_path):
+    """The concurrent gold publish: each table's row count is observed
+    on its own write, the caller's job tags reach every publish job,
+    and a failed publish fails the call."""
+    import pytest
+
+    from osrs_dashboard_elt_spark.sources import publish_blue_green, read_published
+
+    root = str(tmp_path / "gold")
+    tables = {
+        f"t{n}": spark.range(n).withColumnRenamed("id", "v")
+        for n in (0, 3, 7, 11, 20)
+    }
+    sc = spark.sparkContext
+    tag = "publish-all-test"
+    sc.addJobTag(tag)
+    try:
+        got = publish_all(spark, tables, root, publish_blue_green)
+    finally:
+        sc.removeJobTag(tag)
+    assert got == {f"t{n}": ("blue", n) for n in (0, 3, 7, 11, 20)}
+    for name, (_, rows) in got.items():
+        assert read_published(spark, f"{root}/{name}").count() == rows
+    tagged = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+    assert len(tagged) >= len(tables)
+
+    def publish_or_fail(df, path):
+        if path.endswith("/t7"):
+            raise RuntimeError("injected publish failure")
+        return publish_blue_green(df, path)
+
+    with pytest.raises(RuntimeError, match="injected publish failure"):
+        publish_all(spark, tables, root, publish_or_fail)
 
 
 def test_pipeline_survives_price_stage_failure(spark, tmp_path):

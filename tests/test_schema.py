@@ -59,3 +59,28 @@ def test_kv_table_json_encodes_nonstrings(spark):
     assert out["plain"] == "s"
     assert json.loads(out["n"]) == 3
     assert json.loads(out["order"]) == ["a", "b"]
+
+
+def _has_python_rdd(df) -> bool:
+    return "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_literal_tables_are_jvm_relations(spark):
+    """``kv_table`` and the batch pipeline's literal tables are JVM
+    ``VALUES`` relations, not ``createDataFrame`` RDDs: writing them
+    starts no Python worker."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from run_pipeline import metadata_tables, report_rows_frame
+
+    from osrs_dashboard_elt_spark.config_loader import DashboardSettings
+
+    assert not _has_python_rdd(kv_table(spark, {"plain": "s", "n": 3}))
+    frames = metadata_tables(spark, DashboardSettings())
+    frames["report_rows"] = report_rows_frame(spark, {"a": 2, "b": 0})
+    for name, df in frames.items():
+        assert not _has_python_rdd(df), name
+    assert [tuple(r) for r in frames["report_rows"].collect()] == [("a", 2), ("b", 0)]
+    assert dict(frames["report_rows"].dtypes) == {"report": "string", "n_rows": "bigint"}

@@ -51,6 +51,56 @@ def test_dedup_append_idempotent(spark, tmp_path):
     assert spark.read.parquet(target).count() == 3
 
 
+def test_dedup_append_into_absent_target_counts_the_write(spark, tmp_path):
+    """The first append into an absent target is one observed write:
+    its return value is the deduplicated row count, in the plain and in
+    the date-partitioned layout."""
+    import os
+
+    keys = ["timestamp", "raw_content"]
+    batch = _raw_logs(
+        spark,
+        [
+            (_ts("2025-01-01T10:00:00"), "msg-a"),
+            (_ts("2025-01-01T10:00:00"), "msg-a"),
+            (_ts("2025-01-02T10:00:00"), "msg-b"),
+            (_ts("2025-01-03T10:00:00"), "msg-c"),
+            (_ts("2025-01-03T10:00:00"), "msg-c"),
+        ],
+    )
+    plain = str(tmp_path / "plain")
+    assert dedup_append(spark, batch, plain, keys, ts_col="timestamp") == 3
+    assert spark.read.parquet(plain).count() == 3
+    parted = str(tmp_path / "parted")
+    assert (
+        dedup_append(
+            spark, batch, parted, keys, ts_col="timestamp", date_partition_col="ds"
+        )
+        == 3
+    )
+    assert spark.read.parquet(parted).count() == 3
+    assert len([d for d in os.listdir(parted) if d.startswith("ds=")]) == 3
+
+
+def test_dedup_append_empty_batch_leaves_no_table(spark, tmp_path):
+    """A zero-row batch into an absent target leaves no readable table,
+    so the next append still takes the first-write path."""
+    from osrs_dashboard_elt_spark.sources.parquet import _target_exists
+
+    keys = ["timestamp", "raw_content"]
+    empty = _raw_logs(spark, [])
+    for name, kw in (
+        ("plain", {}),
+        ("parted", {"ts_col": "timestamp", "date_partition_col": "ds"}),
+    ):
+        target = str(tmp_path / name)
+        assert dedup_append(spark, empty, target, keys, **kw) == 0
+        assert not _target_exists(spark, target)
+        one = _raw_logs(spark, [(_ts("2025-01-01T10:00:00"), "msg-a")])
+        assert dedup_append(spark, one, target, keys, **kw) == 1
+        assert spark.read.parquet(target).count() == 1
+
+
 def test_watermark_scan_with_overlap(spark, tmp_path):
     target = str(tmp_path / "raw_logs")
     rows = [
