@@ -13,8 +13,9 @@ parseable JSON line.
 Each query is executed through the same code path the correctness gate
 uses (``__spark_entry__.queries()``) and timed end-to-end including the
 action (count): per query, one untimed warm run at the bench SF, then
-``$SPARK_GRAFT_BENCH_REPS`` (default 1) timed runs with the minimum
-recorded (steady-state protocol — see the note in ``main``).
+``$SPARK_GRAFT_BENCH_REPS`` timed runs (default and minimum 2, plus one
+more when two disagree by over ``DISAGREE``x) with the minimum recorded
+(steady-state protocol — see the note in ``main``).
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import __spark_entry__  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -42,6 +45,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # 8 partitions so it measures per-core interference identically on
 # the driver's 32-core and 8-core passes.
 REF_NOMINAL_SEC = 0.14  # idle-host calibration, this round's protocol
+DISAGREE = 1.5  # max/min sample ratio that triggers one more timed run
 
 
 def _host_ref_sec(spark) -> float:
@@ -65,176 +69,12 @@ def _host_ref_sec(spark) -> float:
 # Headline queries: the FULL oracle-checked set — BENCH and
 # CORRECTNESS cover the same names, so every correctness row has a
 # matching timing.
-BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q03_top_revenue_orders",
-    "q05_region_revenue",
-    "q_filter_events",
-    "q_report_detailed",
-    "q_regex_extract_json",
-    "q_leaderboard_periods",
-    "q_grouping_sets_rollup",
-    "q_topn_per_group",
-    "q_dedup_keep_first",
-    "q_resample_daily_gapfill",
-    "q_cumulative_daily",
-    "q_sessionize_gap",
-    "q_near_best_band",
-    "q_asof_join",
-    "q_interval_join",
-    "q_skeleton_left_join",
-    "q_summary_stats",
-    "q_explode_word_counts",
-    "q_exact_dedup_docs",
-    "q_minhash_lsh_pairs",
-    "q_ngram_jaccard_pairs",
-    "q_cosine_topk",
-    "q_lsh_ann_topk",
-    "q_ivf_ann_topk",
-    "q_pq_ann_topk",
-    "q_ivfpq_topk",
-    "q_quality_probe",
-    "q_jl_projection",
-    "q_probe_calibration",
-    "q_bloom_semijoin",
-    "q_exact_quantiles",
-    "q_text_quality_by_lang",
-    "q_doc_fingerprint",
-    "q_media_features",
-    "q_media_frame_sample",
-    "q_media_neardup",
-    "q_crossmodal_dedup_clusters",
-    "q_kmeans_centroids",
-    "q_semantic_dedup",
-    "q_parse_engine",
-    "q_temporal_remap",
-    "q_exclusion_rules",
-    "q_duration_parse",
-    "q_embedding_neardup",
-    "q_report_timeseries_multi",
-    "q_report_collection_log",
-    "q_report_personal_bests",
-    "q_report_recent_achievements",
-    "q_incremental_append",
-    "q_per_key_watermark",
-    "q_hash_sample",
-    "q_train_val_test_split",
-    "q_leakage_safe_split",
-    "q_length_buckets",
-    "q_domain_mix_sample",
-    "q_temperature_mix",
-    "q_global_shuffle_order",
-    "q_contamination_report",
-    "q_decontaminate_by_lang",
-    "q_rest_timeseries",
-    "q_binned_interval_join",
-    "q_salted_agg",
-    "q_salted_join",
-    "q_pii_redaction",
-    "q_repetition_scores",
-    "q_derived_union_counts",
-    "q_language_id",
-    "q_name_change_parse",
-    "q_parse_game_mode",
-    "q_pattern_grammar",
-    "q_running_best_changelog",
-    "q_running_best_changelog_tws",
-    "q_stream_sessionize_timers",
-    "q_set_except",
-    "q_simhash_pairs",
-    "q_streaming_windowed_rollup",
-    "q_streaming_session_rollup",
-    "q_doc_chunks",
-    "q_pack_sequences",
-    "q_packed_shards",
-    "q_dedup_clusters",
-    "q13_customer_order_dist",
-    "q18_large_orders",
-    "q_brand_supplier_counts",
-    "q_rolling_range_window",
-    "q_retention_cohorts",
-    "q_unpivot_metrics",
-    "q_pivot_event_values",
-    "q_scd2_history",
-    "q_outlier_zscore",
-    "q_percentile_stats",
-    "q_hll_distinct_users",
-    "q_hll_user_overlap",
-    "q_hll_rolling_distinct",
-    "q_hll_rolling_at_rest",
-    "q_min_cost_supplier",
-    "q_waiting_orders",
-    "q_data_quality_events",
-    "q_weighted_sample",
-    "q_histogram_quantiles",
-    "q_funnel_conversion",
-    "q_incremental_agg",
-    "q_token_vocab",
-    "q_bpe_merges",
-    "q_bpe_encode",
-    "q_stream_topk_entries",
-    "q_stats_pruned_scan",
-    "q_point_lookup_pruned",
-    "q_pruned_in_list",
-    "q_targeted_delete",
-    "q_dv_delete",
-    "q_expectations",
-    "q_corpus_gate",
-    "q_metric_drift",
-    "q_topn_pruned",
-    "q_duplicate_ngram_spans",
-    "q_boilerplate_removal",
-    "q_scd2_as_of",
-    "q_stratified_fixed_k",
-    "q_table_checksum",
-    "q_cube_aggregate",
-    "q04_order_priority",
-    "q06_forecast_revenue",
-    "q07_volume_shipping",
-    "q08_market_share",
-    "q09_product_profit",
-    "q10_returned_items",
-    "q12_shipping_delay",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q20_quantity_share_suppliers",
-    "q22_idle_customers",
-    "q_supplier_share",
-    "q_window_functions",
-    "q_fuzzy_name_match",
-    "q_stream_interval_join",
-    "q_cms_heavy_hitters",
-    "q_cms_window_at_rest",
-    "q_histogram_window_at_rest",
-    "q_bm25_search",
-    "q_hybrid_rrf_search",
-    "q_ewma_by_user",
-    "q_lm_perplexity",
-    "q_unigram_kl_drift",
-    "q_token_rarity",
-    "q_cdc_merge",
-    "q_item_copurchase",
-    "q_copurchase_pagerank",
-    "q_event_transitions",
-    "q_targeted_upsert",
-    "q_change_feed",
-    "q_time_travel",
-    "q_schema_evolution",
-    "q_compact_table",
-    "q_incremental_view",
-    "q_ivm_segmented",
-    "q_merge_distributed",
-    "q_asof_lineage",
-    "q_cdc_stream",
-]
+BENCH_QUERIES = list(__spark_entry__.queries())
 
 
 def main() -> None:
     from osrs_dashboard_elt_spark.session import get_spark
     from osrs_dashboard_elt_spark.suite import reset_memos
-    import __spark_entry__ as entrymod
 
     spark = get_spark(
         app_name="osrs-elt-bench",
@@ -242,7 +82,7 @@ def main() -> None:
         extra_conf={"spark.sql.shuffle.partitions": str(max(int(CPUS), 8))},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    qs = __spark_entry__.queries()
 
     # Steady-state protocol (JMH-style): each query is warmed UNTIMED
     # at the BENCH SF immediately before its timed run.  The warm run
@@ -251,10 +91,8 @@ def main() -> None:
     # engine, and primes the parquet footers at the scale being
     # measured (warming at a smaller SF left ±1 s of
     # first-run-at-scale noise in the recorded numbers and produced
-    # phantom round-over-round regressions).  One timed run after a
-    # same-SF warm keeps the whole suite ~2x a cold pass — bounded
-    # enough for an external runner's timeout; set
-    # SPARK_GRAFT_BENCH_REPS>1 for a min-of-N steady-state estimate
+    # phantom round-over-round regressions).  Set
+    # SPARK_GRAFT_BENCH_REPS>2 for a min-of-N steady-state estimate
     # when wall-clock budget allows.  Interleaving (rather than one
     # warm pass over the whole suite) keeps each query's compiled
     # classes resident in the codegen cache.
@@ -263,11 +101,10 @@ def main() -> None:
     # measured 0.55 s vs 1.52 s on one sub-second query across two
     # driver runs (scheduler/JIT noise), which read as a phantom 2.8x
     # regression.  min-of-2 kills most of that; when even the two
-    # samples disagree by more than the ratio below, one more sample
-    # resolves which of them was the outlier.  Reported value = min of
-    # all samples (steady-state estimate — GC pauses and compilation
-    # only ever ADD time).
-    disagree = float(os.environ.get("SPARK_GRAFT_BENCH_DISAGREE", "1.5"))
+    # samples disagree by more than DISAGREE, one more sample resolves
+    # which of them was the outlier.  Reported value = min of all
+    # samples (steady-state estimate — GC pauses and compilation only
+    # ever ADD time).
     qs["q_summary_stats"](spark, SF_DIR).count()
 
     # Subset filter for controlled experiments (drift attribution,
@@ -286,7 +123,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     t_all = 0.0
     for name in BENCH_QUERIES:
-        if name not in qs or (only is not None and name not in only):
+        if only is not None and name not in only:
             continue
         try:
             qs[name](spark, SF_DIR).count()  # warm, untimed
@@ -303,7 +140,7 @@ def main() -> None:
             t0 = time.time()
             qs[name](spark, SF_DIR).count()
             samples.append(time.time() - t0)
-        if max(samples) > disagree * min(samples):
+        if max(samples) > DISAGREE * min(samples):
             reset_memos()
             t0 = time.time()
             qs[name](spark, SF_DIR).count()

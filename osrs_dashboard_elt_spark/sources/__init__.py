@@ -21,7 +21,6 @@ from .parquet import (
     new_rows_against,
     prune_to_window,
     per_key_watermark,
-    publish_overwrite,
     read_new_since,
 )
 from .rest import (
@@ -44,7 +43,6 @@ __all__ = [
     "prune_to_window",
     "per_key_watermark",
     "publish_blue_green",
-    "publish_overwrite",
     "publish_versioned",
     "read_bucketed",
     "read_new_since",

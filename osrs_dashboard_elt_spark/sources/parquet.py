@@ -11,10 +11,9 @@ pattern here:
   prunes to the overlap window first.
 - S2/S9 watermark scans                  -> ``max_watermark`` /
   ``per_key_watermark`` + ``read_new_since``.
-- S10/S12 replace-mode + blue/green      -> ``publish_overwrite``
-  (parquet dir overwrite is already atomic-enough for a single
-  writer; a Delta/Iceberg table commit is the real-cluster answer and
-  slots in here).
+- S10/S12 replace-mode + blue/green      -> ``sources.io.publish_blue_green``
+  (a parquet dir overwrite deletes, then writes, so a replace-mode
+  publish writes the inactive color and flips a manifest).
 """
 
 from __future__ import annotations
@@ -222,10 +221,3 @@ def read_new_since(
     if watermark is None:
         return df
     return df.filter(F.col(ts_col) > F.lit(watermark))
-
-
-def publish_overwrite(df: DataFrame, target_path: str) -> None:
-    """Replace-mode publish of a gold table (reference S10's
-    ``if_exists='replace'`` + S12's blue/green double buffer; Spark's
-    overwrite gives the atomic swap for free on a real table format)."""
-    df.write.mode("overwrite").parquet(target_path)

@@ -36,19 +36,20 @@ def test_bench_compact_line_bounded():
 
 def test_priority_window_spans_all_families():
     """The driver's CORRECTNESS artifact records only the first 50
-    queries() entries; that window must contain an ORACLE-checked
-    representative of every operator family (round-3 verdict: all 57
-    round-3 queries sat outside it)."""
+    queries() entries; that window must be exactly the ``gate=True``
+    queries and contain an ORACLE-checked representative of every
+    operator family (round-3 verdict: all 57 round-3 queries sat
+    outside it)."""
     import __spark_entry__ as e
     from osrs_dashboard_elt_spark import suite
 
-    pr = suite._PRIORITY
-    assert len(pr) == 50 and len(set(pr)) == 50
+    gated = [n for n in suite.QUERIES if n in suite.GATE]
+    assert len(gated) == 50
     first50 = list(e.queries())[:50]
-    assert first50 == list(pr)
+    assert first50 == gated
     # every windowed entry must be hash-gated, not rows-only
     oracles = e.oracle_sql()
-    missing = [n for n in pr if n not in oracles]
+    missing = [n for n in gated if n not in oracles]
     assert not missing, f"priority queries without oracles: {missing}"
     # one representative per family group (guards future edits)
     families = {
