@@ -366,7 +366,7 @@ def read_change_feed(
     from .stats_manifest import _load_meta
     from pyspark.sql.types import StructType
 
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     schema = StructType.fromJson(meta["schema"])
     empty_cols = [F.col(f.name) for f in schema.fields] + [
         F.lit(None).cast("string").alias("_change_type"),
@@ -453,7 +453,7 @@ def _snapshot_file_state(
         _norm,
     )
 
-    epoch, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     pinned = StructType.fromJson(meta["schema"])
     current = {
         _norm(f)
@@ -464,7 +464,7 @@ def _snapshot_file_state(
     # files or a crashed append's orphan must fall back, not serve
     recorded = {
         _norm(r["file"])
-        for r in _manifest_df(spark, path, epoch, meta)
+        for r in _manifest_df(spark, path, meta)
         .select("file")
         .collect()
     }
@@ -620,7 +620,7 @@ def read_table_as_of(
             )
         if snap is not None:
             files, dv_exclude = snap
-            _, meta = _load_meta(spark, path)
+            _, meta = _load_meta(path)
             pinned = StructType.fromJson(meta["schema"])
             if not files:
                 df = spark.createDataFrame([], pinned)
@@ -1109,7 +1109,7 @@ def stream_change_feed(
 
     from .stats_manifest import _load_meta
 
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     schema = StructType.fromJson(meta["schema"])
     feed_schema = StructType(
         list(schema.fields)

@@ -252,6 +252,19 @@ def publish_bytes(path: str, data: bytes) -> None:
     _BACKEND.put(path, data)
 
 
+def check_format_version(path: str, found, expected: int) -> None:
+    """Refuse a persisted meta whose ``format_version`` is not the one
+    this code writes: a missing or different version is a layout this
+    reader does not know, and guessing at it would misread silently."""
+    if found != expected:
+        raise ValueError(
+            f"{path}: on-disk layout has format_version "
+            f"{'none' if found is None else found}, expected "
+            f"{expected} — refusing to read an unknown layout; "
+            "rebuild it with the current writer"
+        )
+
+
 def try_claim(path: str, data: bytes = b"") -> bool:
     """One-shot create-if-absent claim; True = this caller won."""
     return _BACKEND.put_if_absent(path, data)

@@ -270,7 +270,7 @@ def compact_files(
     n_files = max(1, math.ceil(total / target_bytes))
     df = spark.read.parquet(src)
     if has_stats_manifest(src):
-        _, meta = _load_meta(spark, src)
+        _, meta = _load_meta(src)
         if meta.get("dv"):
             # a dv-carrying table must compact through the DV-aware
             # reader, or the snapshot would resurrect tombstoned rows
@@ -562,7 +562,7 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
             from .stats_manifest import _load_meta as _lm
             from .stats_manifest import deletion_vector_pairs
 
-            _, meta = _lm(spark, path)
+            _, meta = _lm(path)
             pairs = deletion_vector_pairs(
                 spark, path, meta, dvc["col"]
             )
@@ -594,7 +594,7 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
                     try:
                         from .stats_manifest import _load_meta as _lm2
 
-                        _, m2 = _lm2(spark, path)
+                        _, m2 = _lm2(path)
                         segs = (
                             (m2.get("dv") or {})
                             .get(dvc["col"], {})
@@ -683,7 +683,7 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
 
             record_physical_break(path)
     if completed:
-        _, meta = _load_meta(spark, path)
+        _, meta = _load_meta(path)
         # a journaled rewrite/remove that finished before the crash
         # vanished its original through the DV-aware reader — its DV
         # entries are dead and must be cleared here too, or the crash
@@ -698,7 +698,7 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
             from .stats_manifest import clear_deletion_vector_files
 
             clear_deletion_vector_files(spark, path, vanished)
-            _, meta = _load_meta(spark, path)
+            _, meta = _load_meta(path)
         _refresh(spark, path, meta["cols"])
     cj = journal.get("changes")
     if cj:
@@ -921,7 +921,7 @@ def _occ_validate(
             raise _OccConflict(
                 f"planned file changed size under this mutation: {f}"
             )
-    _, m2 = _load_meta(spark, path)
+    _, m2 = _load_meta(path)
     if _occ_meta_fingerprint(m2, meta_fields) != meta_fp:
         raise _OccConflict(
             f"table metadata (schema/DV/stats config) changed under "
@@ -1354,7 +1354,7 @@ def _targeted_delete_impl(
             plan_listing = _occ_listing_fingerprint(path)
     else:
         _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — publish a "
@@ -1364,7 +1364,7 @@ def _targeted_delete_impl(
     if not affected:
         return _noop_result(0)
     pinned = StructType.fromJson(meta["schema"])
-    data_cols, part_cols = _data_columns(spark, path, meta, affected[0])
+    data_cols, part_cols = _data_columns(meta)
     if col in part_cols:
         raise ValueError(
             f"{col!r} is a partition column of {path} — partition "
@@ -1728,7 +1728,7 @@ def apply_deletion_vectors(
     from .stats_manifest import refresh_stats_manifest as _refresh
 
     _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     dv_cols = sorted((meta.get("dv") or {}).keys())
     if not dv_cols:
         return {
@@ -1761,9 +1761,7 @@ def apply_deletion_vectors(
     rows_purged = 0
     if existing:
         pinned = StructType.fromJson(meta["schema"])
-        data_cols, _part = _data_columns(
-            spark, path, meta, existing[0]
-        )
+        data_cols, _part = _data_columns(meta)
         base = (
             spark.read.schema(pinned).option("basePath", path)
             .parquet(*existing)
@@ -1882,32 +1880,15 @@ def apply_deletion_vectors(
     }
 
 
-def _data_columns(
-    spark: SparkSession, path: str, meta: dict, sample_file: str | None
-) -> tuple[list[str], list[str]]:
-    """(data columns, partition columns) of a manifest-backed table.
-    Metas recorded since partition tracking use ``partition_cols``
-    (which also distinguishes evolution-added columns — absent from
-    OLD footers but still data columns, materialized as NULL on
-    rewrite); legacy metas fall back to the footer diff of one file,
-    which predates evolution and is exact for them.  ``sample_file``
-    may be None when the table has zero data files (a fully
-    taken-down corpus is a legal state — ``_full_read``'s contract):
-    modern metas don't need it, and a legacy meta with zero files has
-    no partition dirs left to honor, so every pinned column is a data
-    column."""
+def _data_columns(meta: dict) -> tuple[list[str], list[str]]:
+    """(data columns, partition columns) of a manifest-backed table,
+    from the meta's ``partition_cols`` (which also distinguishes
+    evolution-added columns — absent from OLD footers but still data
+    columns, materialized as NULL on rewrite)."""
     from pyspark.sql.types import StructType
 
     pinned = StructType.fromJson(meta["schema"])
-    part_cols = meta.get("partition_cols")
-    if part_cols is None:
-        if sample_file is None:
-            return [f.name for f in pinned.fields], []
-        data_cols = spark.read.parquet(sample_file).columns
-        part_cols = [
-            f.name for f in pinned.fields if f.name not in data_cols
-        ]
-        return data_cols, part_cols
+    part_cols = meta["partition_cols"]
     return (
         [f.name for f in pinned.fields if f.name not in part_cols],
         list(part_cols),
@@ -2048,17 +2029,14 @@ def _table_append_impl(
             _reconcile_delete_journal(spark, path)
     else:
         _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — publish a "
             "new version with the rows instead of appending in place"
         )
     pinned = StructType.fromJson(meta["schema"])
-    first = _table_files(spark, path, meta)
-    data_cols, part_cols = _data_columns(
-        spark, path, meta, first[0] if first else None
-    )
+    data_cols, part_cols = _data_columns(meta)
     all_cols = [f.name for f in pinned.fields]
     missing = [c for c in all_cols if c not in rows.columns]
     if missing:
@@ -2292,17 +2270,14 @@ def _targeted_upsert_impl(
             plan_listing = _occ_listing_fingerprint(path)
     else:
         _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — publish a "
             "new version with the merge applied instead"
         )
     pinned = StructType.fromJson(meta["schema"])
-    all_files = _table_files(spark, path, meta)
-    data_cols, part_cols = _data_columns(
-        spark, path, meta, all_files[0] if all_files else None
-    )
+    data_cols, part_cols = _data_columns(meta)
     all_cols = [f.name for f in pinned.fields]
     key_cols = (
         [key_col] if isinstance(key_col, str) else list(key_col)
@@ -2852,7 +2827,7 @@ def _compact_table_impl(
             _reconcile_delete_journal(spark, path)
     else:
         _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — compact "
@@ -2862,9 +2837,7 @@ def _compact_table_impl(
     all_files = _table_files(spark, path, meta)
     if not all_files:
         return {"files_compacted": 0, "files_written": 0, "rows": 0}
-    data_cols, part_cols = _data_columns(
-        spark, path, meta, all_files[0]
-    )
+    data_cols, part_cols = _data_columns(meta)
     if part_cols:
         raise ValueError(
             f"{path} is hive-partitioned on {sorted(part_cols)} — "

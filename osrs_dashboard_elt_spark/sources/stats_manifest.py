@@ -45,11 +45,13 @@ delete-then-rename would expose).  An epoch's meta names the live
 SEGMENT dirs (each holding some files' rows) plus tombstoned file
 names: a refresh appends one O(batch) segment instead of rewriting the
 world, and folds to a single segment when the segment/tombstone bounds
-trip.  Vacuum keeps every dir referenced by the last two committed
-metas, so an in-flight reader of the previous meta always finds all of
-its segments.  Epoch numbers are claimed with O_CREAT|O_EXCL markers
-(the ``publish_versioned`` discipline) so concurrent refreshers cannot
-collide on a dir.
+trip.  Vacuum keeps every dir referenced by the last ``keep_metas``
+committed metas, so an in-flight reader of an older meta always finds
+all of its segments.  Epoch numbers are claimed with O_CREAT|O_EXCL
+markers (the ``publish_versioned`` discipline) so concurrent
+refreshers cannot collide on a dir.  Every meta carries
+``format_version``; readers refuse a meta without it or with another
+value, and refuse parquet written flat under ``_stats_manifest/``.
 
 Hive-partitioned dirs are supported: file subsets are read with
 ``basePath`` so partition columns keep their values (a leaf-file read
@@ -82,6 +84,9 @@ from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_stats_manifest"
 _META = "_meta.json"
+# layout of an epoch meta and its segment dirs; readers refuse any
+# other value (bump it with any change to either)
+_FORMAT_VERSION = 1
 _BUCKET_BITS = 32768  # bits per Spark bitmap bucket (engine constant)
 
 
@@ -152,27 +157,18 @@ def _bounded_write(man: DataFrame, n_rows: int, edir: str) -> None:
 
 
 def _manifest_df(
-    spark: SparkSession, path: str, epoch: int, meta: dict
+    spark: SparkSession, path: str, meta: dict
 ) -> DataFrame:
     """The LIVE manifest rows: union of the meta's segment dirs minus
-    its tombstoned file names (legacy flat manifests read the root)."""
-    if meta.get("_data_dir"):
-        return spark.read.parquet(meta["_data_dir"])
+    its tombstoned file names."""
     root = _manifest_root(path)
-    segs = meta.get("segments", [epoch])
-    man = spark.read.parquet(*[_epoch_dir(root, e) for e in segs])
-    tomb = meta.get("tombstones", [])
+    man = spark.read.parquet(
+        *[_epoch_dir(root, e) for e in meta["segments"]]
+    )
+    tomb = meta["tombstones"]
     if tomb:
         man = man.filter(~_norm_col(F.col("file")).isin(tomb))
     return man
-
-
-def _legacy_manifest(root: str) -> bool:
-    """Pre-epoch flat layout: parquet directly under the manifest
-    root (written before the commit protocol existed)."""
-    return os.path.isdir(root) and any(
-        f.endswith(".parquet") for f in os.listdir(root)
-    )
 
 
 def _committed_epochs(root: str) -> list[int]:
@@ -188,46 +184,39 @@ def _committed_epochs(root: str) -> list[int]:
     return sorted(out)
 
 
-def _load_meta(spark: SparkSession, path: str) -> tuple[int, dict]:
-    """(epoch, meta) of the newest committed manifest, or raise.
+def _load_meta(path: str) -> tuple[int, dict]:
+    """(epoch, meta) of the newest committed manifest.  Raises
+    FileNotFoundError when there is none, and ValueError when the
+    meta's ``format_version`` is missing or not this module's — as it
+    is for parquet written flat under ``_stats_manifest/``, a layout
+    no reader here understands."""
+    from .commitio import check_format_version
 
-    Pre-epoch manifests (parquet directly under ``_stats_manifest/``,
-    written before the commit protocol existed) are read with
-    SYNTHESIZED meta: stats columns recovered from the min_*/max_*
-    column names, no blooms, mutable (so the listing freshness check
-    — the old behavior — still applies), schema inferred from the
-    data dir.  The first refresh/rewrite migrates them to the epoch
-    layout."""
     root = _manifest_root(path)
     epochs = _committed_epochs(root)
-    if epochs:
-        epoch = epochs[-1]
-        with open(os.path.join(_epoch_dir(root, epoch), _META)) as f:
-            return epoch, json.load(f)
-    if not _legacy_manifest(root):
+    if not epochs:
+        if os.path.isdir(root) and any(
+            n.endswith(".parquet") for n in os.listdir(root)
+        ):
+            check_format_version(root, None, _FORMAT_VERSION)
         raise FileNotFoundError(
             f"no stats manifest under {path} — write one with "
             "write_stats_manifest (or pass stats_cols to the writer)"
         )
-    man_cols = spark.read.parquet(root).columns
-    return 0, {
-        "epoch": 0,
-        "cols": [c[4:] for c in man_cols if c.startswith("min_")],
-        "bloom_cols": [],
-        "bloom_bits": 1 << 20,
-        "bloom_hashes": 5,
-        "immutable": False,
-        "schema": spark.read.parquet(path).schema.jsonValue(),
-        "file_count": None,
-        "_data_dir": root,
-    }
+    epoch = epochs[-1]
+    meta_path = os.path.join(_epoch_dir(root, epoch), _META)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    check_format_version(
+        meta_path, meta.get("format_version"), _FORMAT_VERSION
+    )
+    return epoch, meta
 
 
 def has_stats_manifest(path: str) -> bool:
-    """Whether a readable manifest (epoch or legacy layout) exists —
-    the bootstrap-vs-refresh probe for incremental maintainers."""
-    root = _manifest_root(path)
-    return bool(_committed_epochs(root)) or _legacy_manifest(root)
+    """Whether a committed manifest exists — the bootstrap-vs-refresh
+    probe for incremental maintainers."""
+    return bool(_committed_epochs(_manifest_root(path)))
 
 
 def _claim_epoch(root: str, start: int) -> int:
@@ -266,8 +255,10 @@ def _commit_gate(root: str, timeout: float = 30.0):
 
 def _commit_epoch(root: str, epoch: int, meta: dict) -> None:
     """Atomically publish the epoch (write-temp + rename of its meta —
-    the commit point), then vacuum epochs not referenced by the last
-    ``keep_metas`` committed metas (kept so an in-flight reader of an
+    the commit point, and the one write point, so every meta carries
+    this module's ``format_version``), then vacuum epochs not
+    referenced by the last ``keep_metas`` committed metas (kept so an
+    in-flight reader of an
     older manifest finishes — under a streaming refresh cadence, a
     reader that loaded a meta several refreshes ago would otherwise
     have its segment dirs deleted mid-read; raise ``keep_metas`` at
@@ -293,7 +284,7 @@ def _commit_epoch(root: str, epoch: int, meta: dict) -> None:
         parent = meta.get("parent_epoch")
         if parent is not None:
             pre = _committed_epochs(root)
-            head = pre[-1] if pre else 0  # 0 = legacy flat layout
+            head = pre[-1] if pre else 0
             if head != parent:
                 raise ManifestCommitConflict(
                     f"manifest head under {root} moved from epoch "
@@ -301,22 +292,25 @@ def _commit_epoch(root: str, epoch: int, meta: dict) -> None:
                     "the refresh must recompute from the new head"
                 )
         # the commit point: one atomic blob publish under the gate
-        commitio.publish_json(os.path.join(edir, _META), meta)
+        commitio.publish_json(
+            os.path.join(edir, _META),
+            dict(meta, format_version=_FORMAT_VERSION),
+        )
     committed = _committed_epochs(root)
     # keep every epoch dir REFERENCED by the last keep_metas committed
     # metas' segment sets (plus those metas' own dirs): an in-flight
     # reader of any retained meta must find all of its segments
-    keep_n = max(2, int(meta.get("keep_metas") or 2))
+    keep_n = max(2, int(meta["keep_metas"]))
     keep = set(committed[-keep_n:])
     for e in committed[-keep_n:]:
         try:
             with open(os.path.join(_epoch_dir(root, e), _META)) as f:
                 m = json.load(f)
-            keep |= set(m.get("segments", [e]))
+            keep |= set(m["segments"])
             # deletion-vector sidecars live in their own epoch dirs
             # and must survive as long as a retained meta cites them
             for info in (m.get("dv") or {}).values():
-                keep |= set(info.get("segments", []))
+                keep |= set(info["segments"])
         except FileNotFoundError:
             continue
     for old in committed:
@@ -583,7 +577,7 @@ def evolve_table_schema(
         )
     if not added_ddl:
         raise ValueError("added_ddl is empty — nothing to evolve")
-    epoch, meta = _load_meta(spark, path)
+    epoch, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — publish a "
@@ -609,7 +603,6 @@ def evolve_table_schema(
         schema=new_schema.jsonValue(),
         parent_epoch=epoch,
     )
-    new_meta.pop("_data_dir", None)
     try:
         _commit_epoch(root, new_epoch, new_meta)
     except ManifestCommitConflict:
@@ -676,7 +669,7 @@ def _refresh_once(
     manifest raises: the dir was published as never-changing, so an
     append under it is a protocol violation, not a refresh case."""
     try:
-        epoch, meta = _load_meta(spark, path)
+        epoch, meta = _load_meta(path)
     except FileNotFoundError:
         n = write_stats_manifest(
             spark, path, cols,
@@ -726,7 +719,7 @@ def _refresh_once(
         )
     current = {_norm(f) for f in full.inputFiles()}
     root = _manifest_root(path)
-    old = _manifest_df(spark, path, epoch, meta)
+    old = _manifest_df(spark, path, meta)
     # driver sees FILE NAMES only: manifest rows carry bloom bitmaps
     # (100s of KB each), so collecting whole rows — as a naive
     # keep-list rebuild would — moves GBs through the driver on a
@@ -749,8 +742,8 @@ def _refresh_once(
             spark, path, fresh_reader, meta["cols"], meta["bloom_cols"],
             meta["bloom_bits"], meta["bloom_hashes"],
         ).select(*old.columns)
-    segments = meta.get("segments", [epoch])
-    tombstones = list(meta.get("tombstones", [])) + sorted(removed)
+    segments = meta["segments"]
+    tombstones = list(meta["tombstones"]) + sorted(removed)
     # a file REAPPEARING under a tombstoned name (backup restore,
     # deterministic part names) must force a fold: merely dropping the
     # tombstone would resurrect hidden duplicate rows from earlier
@@ -760,8 +753,7 @@ def _refresh_once(
     # plus the fresh row: exactly one live row per file again.
     resurrected = set(new_files) & set(tombstones)
     compact = (
-        meta.get("_data_dir") is not None  # legacy: fold into epochs
-        or bool(resurrected)
+        bool(resurrected)
         # only count the new segment when one will actually be written
         # (a removal-only refresh is a meta-only tombstone epoch)
         or len(segments) + (1 if fresh is not None else 0) > _MAX_SEGMENTS
@@ -809,7 +801,6 @@ def _refresh_once(
         # the epoch it was computed from — _commit_epoch enforces it
         parent_epoch=epoch,
     )
-    meta.pop("_data_dir", None)  # legacy marker is never persisted
     try:
         _commit_epoch(root, new_epoch, meta)
     except ManifestCommitConflict:
@@ -920,8 +911,8 @@ def files_for_values_df(
 def _files_for_values_any(
     spark: SparkSession, path: str, col: str, values
 ) -> list[str]:
-    epoch, meta = _load_meta(spark, path)
-    man = _manifest_df(spark, path, epoch, meta)
+    _, meta = _load_meta(path)
+    man = _manifest_df(spark, path, meta)
     if not meta["immutable"]:
         full = _full_read(
             spark, path, StructType.fromJson(meta["schema"])
@@ -1072,7 +1063,7 @@ def append_deletion_vectors(
     concurrent writer surfaces as :class:`ManifestCommitConflict`;
     re-run the delete (it is idempotent — already-tombstoned rows are
     invisible to the classification scan)."""
-    epoch, meta = _load_meta(spark, path)
+    epoch, meta = _load_meta(path)
     if meta["immutable"]:
         raise ValueError(
             f"{path} is an immutable published snapshot — publish a "
@@ -1093,7 +1084,6 @@ def append_deletion_vectors(
         "count": int(info["count"]) + int(n_new),
     }
     new_meta = dict(meta, epoch=new_epoch, dv=dv, parent_epoch=epoch)
-    new_meta.pop("_data_dir", None)
     try:
         _commit_epoch(root, new_epoch, new_meta)
     except ManifestCommitConflict:
@@ -1115,13 +1105,13 @@ def clear_deletion_vectors(
     remaining sidecars (bounded by ``_MAX_DV_ENTRIES``).  The cleared
     dirs age out of the vacuum keep-set once no retained meta cites
     them."""
-    epoch, meta = _load_meta(spark, path)
+    epoch, meta = _load_meta(path)
     root = _manifest_root(path)
     dv: dict = {}
     for c, info in (meta.get("dv") or {}).items():
         drop = set(segments_by_col.get(c, []))
         remaining = [
-            s for s in info.get("segments", []) if s not in drop
+            s for s in info["segments"] if s not in drop
         ]
         if remaining:
             n = spark.read.parquet(
@@ -1132,7 +1122,6 @@ def clear_deletion_vectors(
     edir = _epoch_dir(root, new_epoch)
     os.makedirs(edir, exist_ok=True)
     new_meta = dict(meta, epoch=new_epoch, dv=dv, parent_epoch=epoch)
-    new_meta.pop("_data_dir", None)
     try:
         _commit_epoch(root, new_epoch, new_meta)
     except ManifestCommitConflict:
@@ -1161,7 +1150,7 @@ def clear_deletion_vector_files(
     ``meta['dv']``.  One epoch commit for all columns; returns the
     number of entries dropped (0 = no epoch written)."""
     gone = {_as_uri(str(f)) for f in files}
-    epoch, meta = _load_meta(spark, path)
+    epoch, meta = _load_meta(path)
     dv = dict(meta.get("dv") or {})
     if not gone or not dv:
         return 0
@@ -1247,7 +1236,6 @@ def clear_deletion_vector_files(
     edir = _epoch_dir(root, new_epoch)
     os.makedirs(edir, exist_ok=True)
     new_meta = dict(meta, epoch=new_epoch, dv=new_dv, parent_epoch=epoch)
-    new_meta.pop("_data_dir", None)
     try:
         _commit_epoch(root, new_epoch, new_meta)
     except ManifestCommitConflict:
@@ -1280,7 +1268,7 @@ def deletion_vector_pairs(
     ``exclude_epochs`` drops sidecar segments appended after a target
     change-feed seq — the snapshot-served as-of read's dv state."""
     info = (meta.get("dv") or {}).get(col)
-    if not info or not info.get("segments"):
+    if not info or not info["segments"]:
         return None
     segs = [
         e
@@ -1348,7 +1336,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     query should use once a table may carry DVs (a bare
     ``spark.read.parquet`` cannot see tombstones; that is the
     documented trade of deferring the rewrite)."""
-    epoch, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     schema = StructType.fromJson(meta["schema"])
     if not meta["immutable"]:
         full = _full_read(spark, path, schema)
@@ -1360,7 +1348,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
                 "manifest's pinned schema — rebuild with "
                 "write_stats_manifest"
             )
-        man = _manifest_df(spark, path, epoch, meta)
+        man = _manifest_df(spark, path, meta)
         current = {_norm(f) for f in full.inputFiles()}
         recorded = {
             _norm(r["file"]) for r in man.select("file").collect()
@@ -1529,8 +1517,8 @@ def pruned_scan(
         raise ValueError("pruned_scan needs bounds and/or points")
     _validate_bounds(bounds)
     _validate_points(points, bounds)
-    epoch, meta = _load_meta(spark, path)
-    man = _manifest_df(spark, path, epoch, meta)
+    _, meta = _load_meta(path)
+    man = _manifest_df(spark, path, meta)
     schema = StructType.fromJson(meta["schema"])
     if not meta["immutable"]:
         full = _full_read(spark, path, schema)
@@ -1593,8 +1581,8 @@ def manifest_file_count(
     """How many files a probe would read (no bounds/points = all files
     with stats) — the planning-time metric the pruning tests assert
     on, without touching any data file."""
-    epoch, meta = _load_meta(spark, path)
-    man = _manifest_df(spark, path, epoch, meta)
+    _, meta = _load_meta(path)
+    man = _manifest_df(spark, path, meta)
     if not bounds and not points:
         return man.count()
     bounds = dict(bounds or {})

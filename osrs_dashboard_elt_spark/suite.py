@@ -8485,7 +8485,7 @@ def _ivm_events(spark, sf_dir) -> str:
 
     from .literals import literal_frame
     from .sources.change_feed import enable_change_feed
-    from .sources.ivm import init_view, refresh_view
+    from .sources.ivm import init_view_segmented, refresh_view_segmented
     from .sources.maintenance import targeted_delete, targeted_upsert
     from .sources.stats_manifest import write_stats_manifest
 
@@ -8500,7 +8500,7 @@ def _ivm_events(spark, sf_dir) -> str:
         bloom_cols=["event_id"], bloom_bits=1 << 16,
     )
     enable_change_feed(path)
-    init_view(spark, path, path + "_view", ["user_id"], ["value"])
+    init_view_segmented(spark, path, path + "_view", ["user_id"], ["value"])
     targeted_delete(spark, path, "event_id", _IVM_DELETE_IDS)
     targeted_upsert(
         spark, path, "event_id",
@@ -8509,7 +8509,7 @@ def _ivm_events(spark, sf_dir) -> str:
             "event_id long, user_id long, value decimal(18,2)",
         ),
     )
-    refresh_view(spark, path, path + "_view")
+    refresh_view_segmented(spark, path, path + "_view")
     return path
 
 
@@ -8538,19 +8538,19 @@ def q_incremental_view(spark, sf_dir):
     (sources/ivm.py): a per-user count/sum aggregate bootstraps once
     from the table, then FOLDS the delete/merge deltas — insert /
     update_postimage +1, delete / update_preimage −1, one aggregate
-    over the window + one outer-join against the affected-groups
-    slice of the state, O(changes), never a table re-scan (the
-    reference recomputes every gold aggregate from the full fact
-    table per run, /root/reference/src/3_transform_data.py).  State
-    versions publish through the immutable-snapshot machinery with a
-    bound (last_seq, version) checkpoint, so crashes re-derive rather
-    than double-apply (tests/test_ivm.py).  The sums are maintained
+    over the window + one join against the affected-groups slice of
+    the state, O(changes), never a table re-scan (the reference
+    recomputes every gold aggregate from the full fact table per run,
+    its src/3_transform_data.py).  Each refresh writes only the
+    affected groups' rows as a new state segment under a bound
+    (last_seq, segments) checkpoint, so crashes re-derive rather than
+    double-apply (tests/test_ivm.py).  The sums are maintained
     over DECIMAL, so the folded state is bit-equal to the oracle's
     direct aggregate over the mutated table — incremental == 
     recompute, exactly."""
-    from .sources.ivm import read_view
+    from .sources.ivm import read_view_segmented
 
-    view = read_view(spark, _ivm_events(spark, sf_dir) + "_view")
+    view = read_view_segmented(spark, _ivm_events(spark, sf_dir) + "_view")
     return view.select(
         "user_id",
         F.col("__n").alias("n"),

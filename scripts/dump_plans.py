@@ -42,7 +42,7 @@ HEADLINERS = {
     "q_change_feed": "ONE relation scan over every committed change dir (no Union — the commit sequence is a regexp over input_file_name), projection only: CDC consumption costs O(changes), zero table I/O",
     "q_time_travel": "exactly one Union (current table ⊎ inverse deltas) feeding one partial+final hash aggregate over all columns, then the multiplicity re-expansion — plan depth constant in the number of recorded mutations",
     "q_compact_table": "post-OPTIMIZE read: a plain scan over the packed files + one partial+final hash agg — compaction left ordinary parquet (fewer, bigger files) and physically dropped the dv-tombstoned rows, so not even the broadcast anti-join remains",
-    "q_incremental_view": "reading the maintained state: a plain scan of the current state version + projection — the maintenance fold (delta aggregate + affected-groups outer join) already ran, and nothing about the read pays for it",
+    "q_incremental_view": "reading the maintained state: one newest-row-per-group aggregate (max_by over the state segments) + projection — the maintenance fold (delta aggregate + affected-groups join) already ran, and nothing about the read pays for it",
     "q_schema_evolution": "post-evolution read: one scan under the pinned (evolved) schema — old files yield NULL for the added column inside the scan itself; no cast/backfill operator anywhere",
 }
 

@@ -62,8 +62,8 @@ def build(spark, path: str, n_files: int, cdf: bool = False) -> list:
     )
     if cdf:
         enable_change_feed(path)
-    epoch, meta = _load_meta(spark, path)
-    man = _manifest_df(spark, path, epoch, meta)
+    _, meta = _load_meta(path)
+    man = _manifest_df(spark, path, meta)
     # one update key per file: every file is genuinely affected
     return [
         int(r["min_doc_id"])
@@ -157,59 +157,5 @@ def main() -> None:
     }), flush=True)
 
 
-
-
-def probe_ivm() -> None:
-    """Claim: refresh_view cost is O(changes), independent of table
-    size — the same 3-mutation window refreshes in ~constant time
-    while init_view (the one O(table) pass) grows with the table."""
-    import tempfile
-
-    from osrs_dashboard_elt_spark.session import get_spark
-    from osrs_dashboard_elt_spark.sources.change_feed import (
-        enable_change_feed,
-    )
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view,
-        refresh_view,
-    )
-
-    spark = get_spark(app_name="probe-ivm")
-    spark.sparkContext.setLogLevel("ERROR")
-    for scale in (1, 4, 16):
-        n = 200_000 * scale
-        path = tempfile.mkdtemp(prefix="ivmp_") + "/tbl"
-        df = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            (F.col("id") % 1000).alias("grp"),
-            (F.col("id") % 97).cast("decimal(18,2)").alias("amount"),
-        )
-        df.repartition(16 * scale, "doc_id").write.parquet(path)
-        from osrs_dashboard_elt_spark.sources.stats_manifest import (
-            write_stats_manifest,
-        )
-
-        write_stats_manifest(
-            spark, path, ["grp"], bloom_cols=["doc_id"],
-            bloom_bits=1 << 16,
-        )
-        enable_change_feed(path)
-        t0 = time.time()
-        init_view(spark, path, path + "_v", ["grp"], ["amount"])
-        t_init = time.time() - t0
-        targeted_delete(spark, path, "doc_id", [5, 6, 7])
-        t0 = time.time()
-        res = refresh_view(spark, path, path + "_v")
-        t_refresh = time.time() - t0
-        print(json.dumps({
-            "op": "ivm", "rows": n, "init_sec": round(t_init, 3),
-            "refresh_sec": round(t_refresh, 3),
-            "groups_changed": res["groups_changed"],
-        }), flush=True)
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "ivm":
-        probe_ivm()
-    else:
-        main()
+    main()

@@ -66,7 +66,7 @@ def main() -> None:
     enable_change_feed(path)
     init_view_segmented(
         spark, path, root, ["grp"], ["amount"],
-        distinct_cols=["doc_id"], ring_k=0, distinct_k=64,
+        distinct_cols=["doc_id"], distinct_k=64,
     )
     real_read = sm.read_table
     calls = {"n": 0}

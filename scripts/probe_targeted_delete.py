@@ -50,8 +50,8 @@ def build(spark, path: str, n_files: int) -> list:
         spark, path, ["doc_id"], bloom_cols=["doc_id"],
         bloom_bits=1 << 14,
     )
-    epoch, meta = _load_meta(spark, path)
-    man = _manifest_df(spark, path, epoch, meta)
+    _, meta = _load_meta(path)
+    man = _manifest_df(spark, path, meta)
     # one target per file: every file is genuinely affected
     return [
         int(r["min_doc_id"])

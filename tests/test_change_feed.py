@@ -703,9 +703,9 @@ def test_partial_upsert_crash_rolls_back_landed_inserts(
 
     from osrs_dashboard_elt_spark.literals import local_frame
     from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view,
-        read_view,
-        refresh_view,
+        init_view_segmented,
+        read_view_segmented,
+        refresh_view_segmented,
     )
     from osrs_dashboard_elt_spark.sources.maintenance import (
         targeted_upsert,
@@ -723,7 +723,7 @@ def test_partial_upsert_crash_rolls_back_landed_inserts(
     )
     enable_change_feed(path)
     root = str(tmp_path / "view")
-    init_view(spark, path, root, ["day"], ["amount"])
+    init_view_segmented(spark, path, root, ["day"], ["amount"])
     ups = local_frame(
         spark,
         # one update + two inserts landing in DIFFERENT partitions
@@ -760,10 +760,10 @@ def test_partial_upsert_crash_rolls_back_landed_inserts(
     ins = feed.filter("_change_type = 'insert'")
     assert sorted(r["doc_id"] for r in ins.collect()) == [1000, 1001]
     # and the IVM view folds to exactly the direct recompute
-    refresh_view(spark, path, root)
+    refresh_view_segmented(spark, path, root)
     view = {
         (r["day"], r["__n"], float(r["sum_amount"]))
-        for r in read_view(spark, root).collect()
+        for r in read_view_segmented(spark, root).collect()
     }
     direct = {
         (r["day"], r["__n"], float(r["sum_amount"]))
@@ -1254,8 +1254,8 @@ def test_vacuum_respects_consumer_registry(spark, tmp_path):
         vacuum_change_feed,
     )
     from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view,
-        refresh_view,
+        init_view_segmented,
+        refresh_view_segmented,
     )
 
     path = str(tmp_path / "tbl")
@@ -1273,7 +1273,7 @@ def test_vacuum_respects_consumer_registry(spark, tmp_path):
     with pytest.raises(ValueError, match="no registered"):
         vacuum_change_feed(path)
     # an IVM view registers itself and lags at seq 0 until refreshed
-    init_view(spark, path, str(tmp_path / "view0"), ["grp"], [])
+    init_view_segmented(spark, path, str(tmp_path / "view0"), ["grp"], [])
     register_feed_consumer(path, "index-sync", last_seq=1)
     cons = feed_consumers(path)
     assert set(cons.values()) == {1, 3}  # sync at 1, view at head 3
@@ -1297,7 +1297,7 @@ def test_vacuum_respects_consumer_registry(spark, tmp_path):
             "doc_id long, grp long, text string",
         ),
     )
-    refresh_view(spark, path, str(tmp_path / "view0"))
+    refresh_view_segmented(spark, path, str(tmp_path / "view0"))
     assert 4 in set(feed_consumers(path).values())
     # force decommissions a laggard deliberately
     register_feed_consumer(path, "dead-sync", last_seq=0)
@@ -1433,17 +1433,14 @@ def test_consumers_refuse_vacuumed_windows(spark, tmp_path):
         vacuum_change_feed,
     )
     from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view,
         init_view_segmented,
-        refresh_view,
         refresh_view_segmented,
     )
 
     path = str(tmp_path / "tbl")
     _mk_feed_tbl(spark, path, n=50, files=1)
-    v1, v2 = str(tmp_path / "v1"), str(tmp_path / "v2")
-    init_view(spark, path, v1, ["grp"], [])
-    init_view_segmented(spark, path, v2, ["grp"], [])
+    view = str(tmp_path / "view")
+    init_view_segmented(spark, path, view, ["grp"], [])
     for i in range(2):
         table_append(
             spark, path,
@@ -1454,9 +1451,7 @@ def test_consumers_refuse_vacuumed_windows(spark, tmp_path):
         )
     vacuum_change_feed(path, keep_since_seq=2, force=True)
     with pytest.raises(ValueError, match="vacuumed"):
-        refresh_view(spark, path, v1)
-    with pytest.raises(ValueError, match="vacuumed"):
-        refresh_view_segmented(spark, path, v2)
+        refresh_view_segmented(spark, path, view)
     with pytest.raises(ValueError, match="vacuumed"):
         apply_takedowns_from_feed(spark, path, "doc_id", since_seq=0)
     with pytest.raises(ValueError, match="vacuumed"):

@@ -207,7 +207,7 @@ def test_epoch_commit_conflict_over_object_store(spark, tmp_path):
             F.col("id").alias("doc_id"), (F.col("id") % 3).alias("g")
         ).write.parquet(path)
         write_stats_manifest(spark, path, ["g"])
-        epoch, meta = _load_meta(spark, path)
+        epoch, meta = _load_meta(path)
         root = _manifest_root(path)
         m1 = dict(meta, epoch=epoch + 1, parent_epoch=epoch)
         m2 = dict(meta, epoch=epoch + 2, parent_epoch=epoch)

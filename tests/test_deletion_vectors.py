@@ -143,7 +143,7 @@ def test_apply_deletion_vectors_compacts(spark, tmp_path):
         _load_meta,
     )
 
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     assert not meta.get("dv")
     assert apply_deletion_vectors(spark, path)["rows_purged"] == 0
     assert pruned_scan(spark, path, points={"doc_id": 6}).count() == 1
@@ -272,7 +272,7 @@ def test_compaction_clears_dv_entries_of_removed_files(
     compact_table(spark, path, target_bytes=1 << 30)
     # the compacted-away file's entry is dead (tombstone physically
     # applied by the DV-aware group read) and must be GONE
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     assert not meta.get("dv")
     # a legitimate re-insert of the tombstoned value...
     table_append(
@@ -309,11 +309,11 @@ def test_rewrite_delete_clears_dv_entries_of_touched_files(
     path = str(tmp_path / "tbl")
     _tbl(spark, path, n=200, files=1)
     targeted_delete(spark, path, "doc_id", [10, 11], mode="dv")
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     assert meta["dv"]["doc_id"]["count"] == 2
     # rewrite-mode delete of ANOTHER value in the same (only) file
     targeted_delete(spark, path, "doc_id", [50])
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     assert not meta.get("dv")
     got = read_table(spark, path)
     assert got.count() == 197
@@ -338,7 +338,7 @@ def test_reconcile_clears_dv_entries_for_vanished_originals(
     path = str(tmp_path / "tbl")
     _tbl(spark, path, n=100, files=2)
     targeted_delete(spark, path, "doc_id", [5], mode="dv")
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     [cited] = [
         r["file"]
         for r in spark.read.parquet(
@@ -354,5 +354,5 @@ def test_reconcile_clears_dv_entries_for_vanished_originals(
     os.remove(local)
     _write_delete_journal(path, {}, [local])
     _reconcile_delete_journal(spark, path)
-    _, meta = _load_meta(spark, path)
+    _, meta = _load_meta(path)
     assert not meta.get("dv")

@@ -1,9 +1,12 @@
 """Incremental view maintenance from the change feed
-(sources/ivm.py): count/sum aggregates fold delta windows instead of
+(sources/ivm.py): aggregates fold delta windows instead of
 re-scanning the table, refreshes equal full recomputes exactly, and
-inconsistent feeds surface loudly."""
+inconsistent feeds and unknown state layouts surface loudly."""
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,9 +15,9 @@ from osrs_dashboard_elt_spark.sources.change_feed import (
     enable_change_feed,
 )
 from osrs_dashboard_elt_spark.sources.ivm import (
-    init_view,
-    read_view,
-    refresh_view,
+    init_view_segmented,
+    read_view_segmented,
+    refresh_view_segmented,
 )
 from osrs_dashboard_elt_spark.sources.maintenance import (
     table_append,
@@ -40,6 +43,18 @@ def _tbl(spark, path, n=500, files=4):
     enable_change_feed(path)
 
 
+def _small_tbl(spark, path, rows):
+    spark.createDataFrame(
+        rows, "doc_id long, grp long, amount double"
+    ).withColumn(
+        "amount", F.col("amount").cast("decimal(18,2)")
+    ).coalesce(1).write.parquet(path)
+    write_stats_manifest(
+        spark, path, ["grp"], bloom_cols=["doc_id"], bloom_bits=1 << 12
+    )
+    enable_change_feed(path)
+
+
 def _direct(spark, path):
     return {
         (r["grp"], r["__n"], float(r["sum_amount"]))
@@ -56,15 +71,15 @@ def _direct(spark, path):
 def _view(spark, root):
     return {
         (r["grp"], r["__n"], float(r["sum_amount"]))
-        for r in read_view(spark, root).collect()
+        for r in read_view_segmented(spark, root).collect()
     }
 
 
 def test_refresh_equals_recompute_across_mutations(spark, tmp_path):
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path)
-    res = init_view(spark, path, root, ["grp"], ["amount"])
-    assert res["version"] == 1 and res["last_seq"] == 0
+    res = init_view_segmented(spark, path, root, ["grp"], ["amount"])
+    assert res == {"segments": [1], "last_seq": 0}
     assert _view(spark, root) == _direct(spark, path)
     targeted_delete(spark, path, "doc_id", [3, 10, 17])     # seq 1
     table_append(
@@ -81,56 +96,37 @@ def test_refresh_equals_recompute_across_mutations(spark, tmp_path):
             "doc_id long, grp long, amount double",
         ).withColumn("amount", F.col("amount").cast("decimal(18,2)")),
     )                                                        # seq 3
-    res = refresh_view(spark, path, root)
-    assert res["last_seq"] == 3 and res["version"] == 2
+    res = refresh_view_segmented(spark, path, root)
+    assert res["last_seq"] == 3 and res["segments"] == [1, 2]
     assert res["groups_changed"] >= 2
     assert _view(spark, root) == _direct(spark, path)
     # grp 99 appeared via inserts only — a brand-new group
     assert any(g == 99 and n == 2 for g, n, _ in _view(spark, root))
     # no-op refresh: nothing new
-    res2 = refresh_view(spark, path, root)
+    res2 = refresh_view_segmented(spark, path, root)
     assert res2 == {
-        "version": 2, "last_seq": 3, "groups_changed": 0
+        "segments": [1, 2], "last_seq": 3, "groups_changed": 0
     }
 
 
 def test_group_vanishes_at_zero_count(spark, tmp_path):
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
-    spark.createDataFrame(
-        [(1, 10, 5.00), (2, 10, 7.00), (3, 20, 9.00)],
-        "doc_id long, grp long, amount double",
-    ).withColumn(
-        "amount", F.col("amount").cast("decimal(18,2)")
-    ).coalesce(1).write.parquet(path)
-    write_stats_manifest(
-        spark, path, ["grp"], bloom_cols=["doc_id"], bloom_bits=1 << 12
-    )
-    enable_change_feed(path)
-    init_view(spark, path, root, ["grp"], ["amount"])
+    _small_tbl(spark, path, [(1, 10, 5.00), (2, 10, 7.00), (3, 20, 9.00)])
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
     targeted_delete(spark, path, "doc_id", [1, 2])
-    refresh_view(spark, path, root)
+    refresh_view_segmented(spark, path, root)
     got = _view(spark, root)
     assert got == {(20, 1, 9.0)}  # grp 10 dropped out entirely
 
 
 def test_inconsistent_feed_raises(spark, tmp_path):
     """A duplicated delta (or a mutation bypassing the feed) drives a
-    count negative — publish must refuse, not emit garbage."""
+    count negative — the refresh must refuse, not emit garbage."""
     import shutil
-    import os
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
-    spark.createDataFrame(
-        [(1, 10, 5.00), (2, 10, 7.00), (3, 20, 9.00)],
-        "doc_id long, grp long, amount double",
-    ).withColumn(
-        "amount", F.col("amount").cast("decimal(18,2)")
-    ).coalesce(1).write.parquet(path)
-    write_stats_manifest(
-        spark, path, ["grp"], bloom_cols=["doc_id"], bloom_bits=1 << 12
-    )
-    enable_change_feed(path)
-    init_view(spark, path, root, ["grp"], ["amount"])
+    _small_tbl(spark, path, [(1, 10, 5.00), (2, 10, 7.00), (3, 20, 9.00)])
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
     # grp 10 holds 2 rows; the doubled delete delta subtracts 4
     targeted_delete(spark, path, "doc_id", [1, 2])
     cr = os.path.join(path, "_stats_manifest", "_changes")
@@ -138,21 +134,21 @@ def test_inconsistent_feed_raises(spark, tmp_path):
         os.path.join(cr, "c0000001"), os.path.join(cr, "c0000002")
     )
     with pytest.raises(ValueError, match="NEGATIVE"):
-        refresh_view(spark, path, root)
+        refresh_view_segmented(spark, path, root)
 
 
 def test_crash_between_publish_and_checkpoint_is_safe(
     spark, tmp_path, monkeypatch
 ):
-    """The (last_seq, version) pair binds atomically: a crash after
-    the state publish but before the checkpoint write leaves an
-    orphan version; the retry re-reads the RECORDED version and
-    re-derives the same state — never a double-applied window."""
+    """The (last_seq, segments) pair binds atomically: a crash after
+    the segment write but before the checkpoint write leaves an orphan
+    segment; the retry re-reads the RECORDED segments and re-derives
+    the same state — never a double-applied window."""
     import osrs_dashboard_elt_spark.sources.ivm as ivm
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path, n=100, files=2)
-    init_view(spark, path, root, ["grp"], ["amount"])
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
     targeted_delete(spark, path, "doc_id", [4, 11])
     real = ivm._write_view_meta
     calls = {"n": 0}
@@ -165,35 +161,37 @@ def test_crash_between_publish_and_checkpoint_is_safe(
 
     monkeypatch.setattr(ivm, "_write_view_meta", dying)
     with pytest.raises(RuntimeError, match="crash before"):
-        refresh_view(spark, path, root)
-    # retry: applies the SAME window onto the recorded version
-    res = refresh_view(spark, path, root)
-    assert res["last_seq"] == 1
+        refresh_view_segmented(spark, path, root)
+    assert ivm._read_view_meta(root)["segments"] == [1]
+    # retry: applies the SAME window onto the recorded segments
+    res = refresh_view_segmented(spark, path, root)
+    assert res["last_seq"] == 1 and res["segments"] == [1, 2]
     assert _view(spark, root) == _direct(spark, path)
 
 
 def test_min_max_not_supported_semantics(spark, tmp_path):
-    """Only COUNT/SUM are maintained; the state schema is pinned to
-    __n / sum_<col> — a consumer wanting MIN/MAX recomputes via
-    init_view (documented), it cannot sneak through refresh."""
+    """A view asked only for sums stores exactly __n / sum_<col> per
+    group: the ring and value-map state rides along only for the
+    min/max and distinct columns a caller names."""
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path, n=20, files=1)
-    init_view(spark, path, root, ["grp"], ["amount"])
-    cols = read_view(spark, root).columns
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
+    cols = read_view_segmented(spark, root).columns
     assert cols == ["grp", "__n", "sum_amount"]
 
 
 def test_streaming_materialized_view(spark, tmp_path):
-    """The stream triggers refresh_view per micro-batch; the view's
-    own (last_seq, version) checkpoint keeps it exactly-once even
-    though the stream is only the wake-up signal."""
+    """The stream triggers a refresh per micro-batch; the view's own
+    (last_seq, segments) checkpoint keeps it exactly-once even though
+    the stream is only the wake-up signal."""
     from osrs_dashboard_elt_spark.sources.ivm import (
+        _read_view_meta,
         maintain_view_stream,
     )
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path, n=300, files=4)
-    init_view(spark, path, root, ["grp"], ["amount"])
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
     targeted_delete(spark, path, "doc_id", [3, 10])
     targeted_delete(spark, path, "doc_id", [17])
     q = maintain_view_stream(
@@ -210,8 +208,6 @@ def test_streaming_materialized_view(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert _view(spark, root) == _direct(spark, path)
-    from osrs_dashboard_elt_spark.sources.ivm import _read_view_meta
-
     assert _read_view_meta(root)["last_seq"] == 3
 
 
@@ -220,8 +216,6 @@ def test_stream_opts_are_routed_not_dropped(spark, tmp_path):
     passed to maintain_view_stream were applied to the writeStream,
     where Spark silently ignores them.  They now ride the readStream;
     unknown options raise instead of vanishing."""
-    import pytest
-
     from osrs_dashboard_elt_spark.sources.ivm import (
         maintain_view_stream,
     )
@@ -229,7 +223,7 @@ def test_stream_opts_are_routed_not_dropped(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _tbl(spark, path, n=100, files=2)
     state = str(tmp_path / "state")
-    init_view(spark, path, state, ["grp"], ["amount"])
+    init_view_segmented(spark, path, state, ["grp"], ["amount"])
     with pytest.raises(ValueError, match="unknown stream options"):
         maintain_view_stream(
             spark, path, state, str(tmp_path / "ckpt0"),
@@ -252,12 +246,81 @@ def test_stream_opts_are_routed_not_dropped(spark, tmp_path):
     assert _view(spark, state) == _direct(spark, path)
 
 
+def test_view_meta_without_format_version_is_refused(spark, tmp_path):
+    """A view meta from an unknown layout (no ``format_version``, or
+    another value) is refused by name on read AND refresh — never
+    folded into as if it were this layout."""
+    path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
+    _small_tbl(spark, path, [(1, 10, 5.00), (2, 20, 7.00)])
+    init_view_segmented(spark, path, root, ["grp"], ["amount"])
+    meta_path = os.path.join(root, "_view.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["format_version"] == 1
+    targeted_delete(spark, path, "doc_id", [1])
+    for bad in ({k: v for k, v in meta.items() if k != "format_version"},
+                dict(meta, format_version=2)):
+        with open(meta_path, "w") as f:
+            json.dump(bad, f)
+        with pytest.raises(ValueError, match="format_version") as e:
+            read_view_segmented(spark, root)
+        assert meta_path in str(e.value)
+        with pytest.raises(ValueError, match="format_version") as e:
+            refresh_view_segmented(spark, path, root)
+        assert meta_path in str(e.value)
+
+
+def test_rings_and_value_maps_cannot_be_disabled(spark, tmp_path):
+    path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
+    _small_tbl(spark, path, [(1, 10, 5.00)])
+    for bad in ({"ring_k": 0}, {"distinct_k": 0}):
+        with pytest.raises(ValueError, match="at least 1") as e:
+            init_view_segmented(
+                spark, path, root, ["grp"], ["amount"],
+                minmax_cols=["amount"], distinct_cols=["doc_id"], **bad,
+            )
+        assert root in str(e.value)
+    assert not os.path.exists(root)
+
+
+def test_segmented_deletes_fold_with_zero_table_reads(
+    spark, tmp_path, monkeypatch
+):
+    """Default-run representative of the ring and value-map folds: a
+    window deleting one group's MINIMUM and one distinct value must
+    refresh from state alone (``read_table`` poisoned) and stay equal
+    to a direct recompute."""
+    from osrs_dashboard_elt_spark.sources import stats_manifest as sm
+
+    path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
+    _small_tbl(
+        spark, path,
+        [(i, i % 3, float(i)) for i in range(30)],
+    )
+    init_view_segmented(
+        spark, path, root, ["grp"], ["amount"],
+        minmax_cols=["amount"], distinct_cols=["doc_id"],
+    )
+    # doc 1 is group 1's minimum; doc 14 is one distinct id of group 2
+    targeted_delete(spark, path, "doc_id", [1, 14])
+
+    def poisoned(*a, **k):
+        raise AssertionError("refresh read the table")
+
+    monkeypatch.setattr(sm, "read_table", poisoned)
+    refresh_view_segmented(spark, path, root)
+    monkeypatch.undo()
+    assert _seg_rows(read_view_segmented(spark, root)) == _seg_rows(
+        _seg_direct(spark, path)
+    )
+
+
 def _seg_direct(spark, path):
     from osrs_dashboard_elt_spark.sources.ivm import _full_state
 
     s = _full_state(
         read_table(spark, path), ["grp"], ["amount"], ["amount"],
-        ["doc_id"], 9,
+        ["doc_id"], 9, 8, 64,
     )
     return s.withColumn(
         "sum_amount", F.col("sum_amount").cast("decimal(28,2)")
@@ -286,12 +349,6 @@ def test_segmented_view_bit_equal_across_delete_heavy_history(
     registers — bit-equal to direct recomputation across a
     delete-heavy history including extremum retraction (min deleted),
     a whole-group kill (tombstone row), and an insert/update merge."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
-
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     spark.range(500).select(
         F.col("id").alias("doc_id"),
@@ -347,20 +404,13 @@ def test_segmented_view_writes_only_affected_groups_and_folds(
     spark, tmp_path
 ):
     """The O(changes)-WRITE claim, pinned: a 1-group change writes a
-    segment with exactly 1 row (the versioned mode rewrites all
-    groups); segment count folds at the bound; derived estimates
-    (finalize) equal direct hll_distinct exactly."""
-    import json as _json
-
+    segment with exactly 1 row, not the whole state; segment count
+    folds at the bound; derived estimates (finalize) equal direct
+    hll_distinct exactly."""
     from osrs_dashboard_elt_spark.operators.sketches import (
         hll_distinct,
     )
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        _seg_dir,
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
+    from osrs_dashboard_elt_spark.sources.ivm import _seg_dir
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     spark.range(500).select(
@@ -394,7 +444,7 @@ def test_segmented_view_writes_only_affected_groups_and_folds(
                 _seg_dir(root, res["segments"][-1])
             )
             assert seg.count() == 1
-    meta = _json.load(open(str(tmp_path / "view" / "_view.json")))
+    meta = json.load(open(str(tmp_path / "view" / "_view.json")))
     assert len(meta["segments"]) <= 8  # folded at the bound
     fin = read_view_segmented(spark, root, finalize=True)
     direct_nd = {
@@ -421,11 +471,6 @@ def test_composed_stream_loop_flat_job_count(spark, tmp_path):
     from osrs_dashboard_elt_spark.sources.change_feed import (
         apply_inserts_from_feed,
     )
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        refresh_view_segmented,
-    )
-
     path = str(tmp_path / "tbl")
     _tbl(spark, path, n=200, files=2)
     view = str(tmp_path / "view")
@@ -467,12 +512,6 @@ def test_segmented_view_killed_group_rebirth(spark, tmp_path):
     feed its dead min/max and HLL registers back into the merge — a
     reborn group inherited min=old and an inflated distinct.  A
     zero-count state row now acts as ABSENT."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
-
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     spark.createDataFrame(
         [(1, 7, 1.0)], "doc_id long, grp long, amount double"
@@ -522,12 +561,6 @@ def test_segmented_view_born_and_partially_deleted(spark, tmp_path):
     never marked dirty — the fold kept the deleted insert's value as
     the extremum.  A delete with an absent state extremum now counts
     as dirty and takes the group-targeted rebuild."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
-
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     spark.createDataFrame(
         [(1, 1, 50.0)], "doc_id long, grp long, amount double"
@@ -599,11 +632,6 @@ def test_segmented_view_rings_absorb_retractions(
     exhaustion."""
     from osrs_dashboard_elt_spark.sources import ivm as ivm_mod
     from osrs_dashboard_elt_spark.sources import stats_manifest as sm
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path)  # 500 rows, 7 groups, amounts id % 100
@@ -624,8 +652,8 @@ def test_segmented_view_rings_absorb_retractions(
             read_view_segmented(spark, root)
         ) == _seg_rows(_seg_direct(spark, path))
 
-    # a view WITH distinct_cols still rebuilds on any delete (the
-    # register algebra needs it) — rings must not regress exactness
+    # a view WITH distinct_cols: rings and value maps fold in the
+    # same refresh — rings must not regress exactness
     for batch in ([0, 2], [1], [5, 6]):
         targeted_delete(spark, path, "doc_id", batch)
         refresh_view_segmented(spark, path, root)
@@ -719,12 +747,7 @@ def test_segmented_view_null_group_keys(spark, tmp_path):
     main merge but plain-equality joins in the register fold, the
     dirty rebuild, and the fold anti-join — a delete in the NULL group
     was silently lost.  All group joins are now null-safe."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        _full_state,
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
+    from osrs_dashboard_elt_spark.sources.ivm import _full_state
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     spark.createDataFrame(
@@ -756,7 +779,7 @@ def test_segmented_view_null_group_keys(spark, tmp_path):
     refresh_view_segmented(spark, path, root)
     direct = _full_state(
         read_table(spark, path), ["grp"], ["amount"], ["amount"],
-        ["doc_id"], 9,
+        ["doc_id"], 9, 8, 64,
     ).withColumn("sum_amount", F.col("sum_amount").cast("decimal(28,2)"))
     rows = lambda df: sorted(
         (
@@ -774,33 +797,10 @@ def test_segmented_view_null_group_keys(spark, tmp_path):
     assert rows(read_view_segmented(spark, root)) == rows(direct)
 
 
-def test_mode_mismatch_raises_descriptively(spark, tmp_path):
-    """Self-review finding: refresh_view on a segmented root died with
-    a bare KeyError deep inside foreachBatch; both directions now
-    raise the targeted mode error."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view,
-        refresh_view,
-    )
-
-    path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
-    _tbl(spark, path, n=50, files=1)
-    init_view_segmented(spark, path, root, ["grp"], ["amount"])
-    with pytest.raises(ValueError, match="SEGMENTED"):
-        refresh_view(spark, path, root)
-    with pytest.raises(ValueError, match="SEGMENTED"):
-        read_view(spark, root)
-
-
 def test_stream_maintains_segmented_view(spark, tmp_path):
-    """maintain_view_stream dispatches on the state mode: a segmented
-    view streams through the same foreachBatch trigger."""
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        maintain_view_stream,
-        read_view_segmented,
-    )
+    """maintain_view_stream under its default availableNow trigger
+    folds an append into the view through foreachBatch."""
+    from osrs_dashboard_elt_spark.sources.ivm import maintain_view_stream
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     _tbl(spark, path, n=100, files=2)
@@ -838,11 +838,6 @@ def test_segmented_view_value_maps_absorb_distinct_retractions(
     poisoning read_table) while staying BIT-EQUAL to recompute; only
     above-threshold (spilled) groups still rebuild."""
     from osrs_dashboard_elt_spark.sources import stats_manifest as sm
-    from osrs_dashboard_elt_spark.sources.ivm import (
-        init_view_segmented,
-        read_view_segmented,
-        refresh_view_segmented,
-    )
 
     path, root = str(tmp_path / "tbl"), str(tmp_path / "view")
     # 7 groups x 30 distinct doc_ids — all groups under the threshold

@@ -365,8 +365,8 @@ def test_takedown_planning_is_join_shaped(spark, tmp_path):
     sm.write_stats_manifest(
         spark, path, ["tag"], bloom_cols=["doc_id"], bloom_bits=1 << 15
     )
-    epoch, meta = sm._load_meta(spark, path)
-    man = sm._manifest_df(spark, path, epoch, meta)
+    _, meta = sm._load_meta(path)
+    man = sm._manifest_df(spark, path, meta)
     # reproduce the candidate plan for a 500-value list
     from pyspark.sql.types import LongType, StructField, StructType
 

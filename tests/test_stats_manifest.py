@@ -378,47 +378,55 @@ def test_refresh_preserves_bloom_config(spark, tmp_path):
     assert len(got.inputFiles()) < n_all
 
 
-def test_legacy_flat_manifest_still_readable(spark, tmp_path):
-    """Manifests written before the epoch-commit protocol (parquet
-    directly under _stats_manifest/) must stay readable — synthesized
-    meta, old listing-freshness behavior — and migrate to the epoch
-    layout on first refresh."""
+def test_flat_manifest_layout_is_refused(spark, tmp_path):
+    """Parquet written straight under ``_stats_manifest/`` (no epoch
+    dirs, no meta) is a layout this reader does not know: a pruned
+    scan refuses it by name instead of guessing at its columns."""
     import os
 
-    from osrs_dashboard_elt_spark.sources.stats_manifest import (
-        refresh_stats_manifest,
-    )
+    path = str(tmp_path / "tbl")
+    _grid(spark).repartition(4).write.parquet(path)
+    full = spark.read.parquet(path)
+    flat = os.path.join(path, "_stats_manifest")
+    full.select(F.input_file_name().alias("file"), "x").groupBy(
+        "file"
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min("x").alias("min_x"),
+        F.max("x").alias("max_x"),
+    ).coalesce(1).write.parquet(flat)
+    with pytest.raises(ValueError, match="format_version none") as e:
+        pruned_scan(spark, path, {"x": (0, 3)})
+    assert flat in str(e.value)
+
+
+def test_manifest_meta_format_version_is_checked(spark, tmp_path):
+    """Every committed meta carries ``format_version``; a meta without
+    it, or with another value, is refused by path on read."""
+    import json
+    import os
+
+    from osrs_dashboard_elt_spark.sources import stats_manifest as sm
 
     path = str(tmp_path / "tbl")
-    df = _grid(spark)
-    df.repartition(4).write.parquet(path)
-    # hand-write the LEGACY layout: stats parquet straight in the root
-    full = spark.read.parquet(path)
-    stats = (
-        full.select(F.input_file_name().alias("file"), "x")
-        .groupBy("file")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("x").alias("min_x"),
-            F.max("x").alias("max_x"),
-        )
+    _grid(spark).repartition(4).write.parquet(path)
+    write_stats_manifest(spark, path, ["x"])
+    epoch, meta = sm._load_meta(path)
+    assert meta["format_version"] == sm._FORMAT_VERSION == 1
+    meta_path = os.path.join(
+        sm._epoch_dir(sm._manifest_root(path), epoch), sm._META
     )
-    legacy_dir = os.path.join(path, "_stats_manifest")
-    stats.coalesce(1).write.parquet(legacy_dir)
-    got = pruned_scan(spark, path, {"x": (0, 3)})
-    want = full.filter("x >= 0 AND x <= 3")
-    assert _rows(got) == _rows(want)
-    # refresh migrates: append a file, refresh, epoch layout appears
-    df.limit(9).coalesce(1).write.mode("append").parquet(path)
-    added, removed = refresh_stats_manifest(spark, path, ["x"])
-    assert added == 1 and removed == 0
-    assert any(
-        n.startswith("m") and n[1:].isdigit()
-        for n in os.listdir(legacy_dir)
-    )
-    got = pruned_scan(spark, path, {"x": (0, 0)})
-    want = spark.read.parquet(path).filter("x = 0")
-    assert _rows(got) == _rows(want)
+    for bad, found in (
+        ({k: v for k, v in meta.items() if k != "format_version"}, "none"),
+        (dict(meta, format_version=2), "2"),
+    ):
+        with open(meta_path, "w") as f:
+            json.dump(bad, f)
+        with pytest.raises(
+            ValueError, match=f"format_version {found}, expected 1"
+        ) as e:
+            pruned_scan(spark, path, {"x": (0, 3)})
+        assert meta_path in str(e.value)
 
 
 def test_refresh_bloom_mismatch_raises(spark, tmp_path):
@@ -735,7 +743,7 @@ def test_commit_lineage_guard_rejects_stale_parent(spark, tmp_path):
     ).parquet(path)
     sm.refresh_stats_manifest(spark, path, ["x"])  # head is now 2
     root = sm._manifest_root(path)
-    epoch, meta = sm._load_meta(spark, path)
+    epoch, meta = sm._load_meta(path)
     assert epoch == 2
     stale = dict(meta, epoch=99, parent_epoch=1, segments=[1])
     os.makedirs(sm._epoch_dir(root, 99), exist_ok=True)
@@ -759,7 +767,7 @@ def test_interleaved_refreshes_both_segments_survive(
     path = str(tmp_path / "t")
     spark.range(10).selectExpr("id AS x").coalesce(1).write.parquet(path)
     write_stats_manifest(spark, path, ["x"])
-    stale = sm._load_meta(spark, path)  # both writers loaded epoch 1
+    stale = sm._load_meta(path)  # both writers loaded epoch 1
 
     # writer A appends fileA and commits cleanly -> epoch 2
     spark.range(10, 20).selectExpr("id AS x").coalesce(1).write.mode(
@@ -774,9 +782,9 @@ def test_interleaved_refreshes_both_segments_survive(
     real_load = sm._load_meta
     calls = {"n": 0}
 
-    def stale_then_real(s, p):
+    def stale_then_real(p):
         calls["n"] += 1
-        return stale if calls["n"] == 1 else real_load(s, p)
+        return stale if calls["n"] == 1 else real_load(p)
 
     monkeypatch.setattr(sm, "_load_meta", stale_then_real)
     added, removed = sm.refresh_stats_manifest(spark, path, ["x"])
@@ -787,7 +795,7 @@ def test_interleaved_refreshes_both_segments_survive(
     assert manifest_file_count(spark, path) == 3
     got = pruned_scan(spark, path, bounds={"x": (0, 100)}).count()
     assert got == 30
-    epoch, meta = sm._load_meta(spark, path)
+    epoch, meta = sm._load_meta(path)
     assert meta["parent_epoch"] == 2  # lineage records the real parent
 
 
@@ -828,7 +836,7 @@ def test_manifest_writes_bounded_not_single_task(
             f"id + {2000 + i * 100} AS x"
         ).coalesce(1).write.mode("append").parquet(path)
         sm.refresh_stats_manifest(spark, path, ["x"])
-    epoch, meta = sm._load_meta(spark, path)
+    epoch, meta = sm._load_meta(path)
     assert meta["segments"] == [3, 4]  # 3 = the fold epoch
     assert len(parts(3)) == 3  # fold wrote 12 rows / 4 per file
     # reader behavior unchanged: exact and fresh

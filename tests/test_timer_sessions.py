@@ -279,3 +279,70 @@ def test_start_time_ids_and_closed_key_state_clears(spark, tmp_path):
     )
     keys = sorted(r["key"]["key"] for r in state.collect())
     assert keys == [9], keys
+
+
+def test_session_id_continues_after_timer_close_one_key(spark, tmp_path):
+    """Default-run representative of the soak test above: key 1's
+    first session closes BY TIMER at the end of run 1 (no key-1 event
+    follows it there), then run 2 — a restart on the same checkpoint
+    and one state partition — brings one new key-1 event, which must
+    number as session 2.  Key 9 only advances the watermark."""
+    from osrs_dashboard_elt_spark.compat import tws_runtime_executable
+    from osrs_dashboard_elt_spark.streaming.timer_sessions import (
+        timer_sessionize,
+    )
+
+    if not tws_runtime_executable(spark):
+        pytest.skip("JVM env lacks the vendored protobuf PYTHONPATH")
+    src = tmp_path / "in"
+    ckpt = str(tmp_path / "ckpt")
+    out = timer_sessionize(
+        spark.readStream.schema("key long, ts timestamp").parquet(
+            str(src / "d=*")
+        ),
+        "key", "ts",
+    )
+
+    def run(d, rows) -> dict:
+        spark.createDataFrame(rows, "key long, ts timestamp").coalesce(
+            1
+        ).write.parquet(str(src / f"d={d}"))
+        got: dict = {}
+
+        def collect(batch, _batch_id) -> None:
+            for r in batch.collect():
+                got[(r.key, r.session_id)] = r.session_start
+
+        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
+        try:
+            q = (
+                out.writeStream.foreachBatch(collect)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            spark.conf.unset(
+                "spark.sql.streaming.stateStore.providerClass"
+            )
+        assert q.awaitTermination(180), "stream did not finish"
+        return got
+
+    first = run(0, [
+        (1, datetime(2024, 1, 1, 10, 0)),
+        (9, datetime(2024, 1, 1, 13, 0)),  # watermark past 10:30
+    ])
+    assert first == {(1, 1): datetime(2024, 1, 1, 10, 0)}
+    second = run(1, [
+        (1, datetime(2024, 1, 1, 14, 0)),
+        (9, datetime(2024, 1, 2, 12, 0)),  # closes key 1's session 2
+    ])
+    assert second[(1, 2)] == datetime(2024, 1, 1, 14, 0)
+    assert (1, 1) not in second

@@ -278,3 +278,136 @@ def test_map_state_ttl_expires_dedup_horizon(spark, tmp_path):
         for r in spark.table(qname).orderBy("value").collect()
     ]
     assert got == [("a", 1, 4.0), ("a", 1, 5.0)]
+
+
+def _write_events(path, events) -> None:
+    import json
+
+    path.write_text(
+        "".join(
+            json.dumps({"k": "a", "event_id": e, "value": v, "ts": t})
+            + "\n"
+            for e, v, t in events
+        )
+    )
+
+
+def _drive_once(out, ckpt: str) -> set:
+    """One availableNow run of ``out`` on one state partition (pinned
+    into a fresh checkpoint; a resumed one keeps its own), collected
+    through foreachBatch — a memory sink cannot resume a checkpoint."""
+    spark = out.sparkSession
+    got: set = set()
+
+    def collect(batch, _batch_id) -> None:
+        got.update(
+            (r.key, r.event_id, r.value) for r in batch.collect()
+        )
+
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        q = (
+            out.writeStream.foreachBatch(collect)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert q.awaitTermination(300)
+    return got
+
+
+@pytest.mark.skipif(
+    not _tws_runtime_available(),
+    reason="transformWithState runtime needs google.protobuf",
+)
+def test_tws_restart_recovers_state_one_key(spark, tmp_path):
+    """Default-run representative of the restart soak above: one key,
+    one state partition, one restart.  Run 2 must see run 1's
+    ListState (a value worse than the recovered top-1 stays out) and
+    its MapState (a redelivered id is a no-op, even with a better
+    value)."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out = streaming_topk_entries(
+        spark.readStream.schema(SCHEMA).json(str(src)),
+        "k", "event_id", "value", "ts", 1,
+    )
+    _write_events(src / "b1.json", [(1, 5.0, "2024-01-01T10:00:00Z")])
+    assert _drive_once(out, ckpt) == {("a", 1, 5.0)}
+    _write_events(
+        src / "b2.json",
+        [
+            (1, 0.5, "2024-01-01T11:00:00Z"),  # redelivered id
+            (2, 9.0, "2024-01-01T12:00:00Z"),  # worse than top-1
+            (3, 3.0, "2024-01-01T13:00:00Z"),  # genuine improvement
+        ],
+    )
+    assert _drive_once(out, ckpt) == {("a", 3, 3.0)}
+
+
+@pytest.mark.skipif(
+    not _tws_runtime_available(),
+    reason="transformWithState runtime needs google.protobuf",
+)
+def test_per_id_seen_checkpoint_is_refused(spark, tmp_path):
+    """A checkpoint written with the per-id ``seen`` MapState layout
+    (event_id long -> one tinyint, the layout before the bucketed
+    map) must not be resumed by the bucketed operator: Spark's
+    state-schema check refuses the incompatible value schema instead
+    of letting the bucketed reader misread the old entries."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.stateful_processor import (
+        StatefulProcessor,
+    )
+
+    class PerIdSeen(StatefulProcessor):
+        def init(self, handle) -> None:
+            self._topk = handle.getListState("topk", "value double, seq long")
+            self._seen = handle.getMapState(
+                "seen", "event_id long", "one tinyint"
+            )
+
+        def handleInputRows(self, key, rows, timerValues):
+            for pdf in rows:
+                for eid in pdf["event_id"]:
+                    self._seen.updateValue((int(eid),), (1,))
+            yield from ()
+
+        def close(self) -> None:
+            pass
+
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    events = spark.readStream.schema(SCHEMA).json(str(src))
+    old = (
+        events.select(
+            F.col("k").alias("key"), "event_id", "value", "ts"
+        )
+        .groupBy("key")
+        .transformWithStateInPandas(
+            statefulProcessor=PerIdSeen(),
+            outputStructType=TOPK_OUT_SCHEMA,
+            outputMode="Append",
+            timeMode="None",
+        )
+    )
+    _write_events(src / "b1.json", [(1, 5.0, "2024-01-01T10:00:00Z")])
+    assert _drive_once(old, ckpt) == set()
+    _write_events(src / "b2.json", [(2, 3.0, "2024-01-01T11:00:00Z")])
+    new = streaming_topk_entries(events, "k", "event_id", "value", "ts", 1)
+    with pytest.raises(
+        StreamingQueryException,
+        match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE",
+    ):
+        _drive_once(new, ckpt)
