@@ -5,19 +5,28 @@ vectors by nearest CENTROID — until now the centroids were a
 deterministic sample.  This trains them properly: classic Lloyd's,
 Spark-shaped —
 
-- centroids live driver-side (k x d doubles — tiny) and are inlined
-  into the assignment expression each round, exactly how the
-  hyperplane/centroid fragments in `similarity.py` already work
-  (broadcast-by-literal; no Python in the scan);
-- each iteration is ONE scan + one bounded shuffle: the per-(cell,
-  dim) sums partial-aggregate map-side, so the exchange carries at
-  most k*d rows per upstream partition regardless of data size;
+- centroids live driver-side (k x d doubles — tiny) and are written
+  as exact literals into the round's SQL text (broadcast-by-literal;
+  no Python in the scan);
+- each round is ONE SQL statement over the projected vectors
+  (``_round_sql``): element extraction, chunked score arrays and the
+  first-index-at-max cell, then the per-cell aggregate.  The driver
+  builds it as one string and hands it to ``spark.sql`` in one call,
+  so building a round costs the same few driver->JVM calls at any
+  k*d (a Column object per element would cost a round trip each);
+- each round is one scan + one bounded shuffle: the per-(cell, dim)
+  sums partial-aggregate map-side, so the exchange carries at most
+  k*d values per upstream partition regardless of data size;
 - the update is EXACT: float32-origin elements integerize exactly
   via a power-of-two scale (x * 2^50, an exponent shift), sum as
   DECIMAL integers (order-independent), and scale back exactly — one
   IEEE division per (cell, dim) is the only rounding, so a DuckDB
   oracle reproduces every centroid bit-for-bit, iteration by
   iteration, and so does any re-run on any partitioning.
+
+The same generators serve PQ (``operators/pq.py``: one round trains
+every subspace codebook, one statement encodes every subspace) and
+the semantic-dedup cell assignment.
 
 At 100 TB: K iterations = K scan jobs (cache the projected vector
 column once if memory allows); the shuffle is k*d*partitions rows of
@@ -36,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dlit, plane_dot_sql, vd_cast
+from .similarity import _dlit, vd_cast
 
 
 def valid_vec(dim: int, col: str = "__vd"):
@@ -119,69 +128,84 @@ def kmeans_iterate(
     computes the global min |nonzero element| (the exact-mean
     magnitude guard) and stores it under ``floor_out["floor"]`` —
     the fit folds its validation scan into round 1 this way instead
-    of paying a separate full pass (round 13; guide §1.2: don't add
-    passes the pipeline already makes)."""
+    of paying a separate full pass (guide §1.2: don't add passes the
+    pipeline already makes)."""
     dim = len(centroids[0])
-    assigned = _with_cell(
-        df.select(vd_cast(vec_col).alias("__vd")).filter(valid_vec(dim)),
-        centroids,
-    )
-    floor_cols = []
-    if floor_out is not None:
-        # min over the row's nonzero |elements| (NULL when none), then
-        # MIN-aggregated per cell — rides the same scan + exchange
-        floor_cols = [
-            F.min(
-                F.array_min(
-                    F.transform(
-                        F.col("__vd"),
-                        lambda x: F.when(x != 0.0, F.abs(x)),
-                    )
-                )
-            ).alias("__floor")
-        ]
-    # one aggregate row per cell, one sum column per dim: no row
-    # amplification (vs posexplode'ing dim x rows through the agg)
-    # and the exchange carries k rows x (dim+1) columns per partition
-    agg_df = (
-        assigned.groupBy("__cell")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            *floor_cols,
-            *[
-                F.sum(
-                    (
-                        F.element_at(F.col("__vd"), d + 1) * F.lit(_SCALE_UP)
-                    ).cast("decimal(38,0)")
-                ).alias(f"__s{d}")
-                for d in range(dim)
-            ],
-        )
-        .select(
-            "__cell",
-            *(["__floor"] if floor_cols else []),
-            *[
-                (
-                    (F.col(f"__s{d}").cast("double") / F.col("__n"))
-                    * F.lit(_SCALE_DOWN)
-                ).alias(f"__m{d}")
-                for d in range(dim)
-            ],
-        )
-    )
-    # NOTE: at k*dim >= ~512 the fused project+agg overflows janino's
-    # method limit — Spark logs one "Failed to compile" and falls
-    # back to interpreted evaluation for the stage.  Correctness is
-    # unaffected; the fixed per-iteration planning cost dominates at
-    # test scale either way (SCALE.md "serialized expression trees").
-    stats = agg_df.collect()
+    base = df.select(vd_cast(vec_col).alias("__vd")).filter(valid_vec(dim))
+    return _lloyd_round(base, [centroids], floor_out)[0]
+
+
+def _lloyd_round(
+    base: DataFrame,
+    books: list[list[list[float]]],
+    floor_out: dict | None = None,
+) -> list[list[list[float]]]:
+    """One Lloyd's round for every codebook in ``books`` at once:
+    codebook ``j`` covers elements ``j*sub .. (j+1)*sub - 1`` of the
+    valid vectors ``base`` carries as ``__vd`` (k-means is the one-
+    codebook case, a PQ round has one per subspace).  The whole round
+    is ONE SQL statement (:func:`_round_sql`) and one ``collect`` —
+    one scan, one shuffle bounded by the (codebook, cell) count — so
+    building it costs a fixed number of driver->JVM calls at any
+    k*dim.  Empty cells keep their codeword."""
+    sub = len(books[0][0])
+    stats = base.sparkSession.sql(
+        _round_sql(books, floor_out is not None), base=base
+    ).collect()
     if floor_out is not None:
         floors = [r["__floor"] for r in stats if r["__floor"] is not None]
         floor_out["floor"] = min(floors) if floors else None
-    new = [list(c) for c in centroids]  # empty cells keep old
+    new = [[list(cw) for cw in cb] for cb in books]  # empty cells keep old
     for r in stats:
-        new[r["__cell"]] = [float(r[f"__m{d}"]) for d in range(dim)]
+        new[r["j"]][r["cell"]] = [float(r[f"__m{d}"]) for d in range(sub)]
     return new
+
+
+def _round_sql(books: list[list[list[float]]], floor: bool) -> str:
+    """The round's statement over ``{base}``: the cell columns
+    ``__c{j}`` (:func:`_cells_sql`), one ``(j, cell, e0..)`` row per
+    codebook (``inline`` of ``named_struct``s over the SAME extracted
+    elements), and per (j, cell) the count, the DECIMAL(38,0) sums of
+    the 2^50-scaled elements and the means.  ``floor`` adds
+    ``__floor``, the min |nonzero element| of the rows."""
+    m, sub = len(books), len(books[0][0])
+    cells = _cells_sql(
+        [f"__x{i}" for i in range(m * sub)],
+        [(f"__c{j}", cb) for j, cb in enumerate(books)],
+    )
+    rows = ", ".join(
+        f"named_struct('j', {j}, 'cell', __c{j}, "
+        + ", ".join(f"'e{d}', __x{j * sub + d}" for d in range(sub))
+        + ")"
+        for j in range(m)
+    )
+    aggs = ["count(1) AS __n"]
+    if floor:
+        nonzero = ", ".join(
+            f"CASE WHEN e{d} != {_dlit(0.0)} THEN abs(e{d}) END"
+            for d in range(sub)
+        )
+        aggs.append(f"min(array_min(array({nonzero}))) AS __floor")
+    aggs += [
+        f"sum(CAST(e{d} * {_dlit(_SCALE_UP)} AS DECIMAL(38,0))) AS __s{d}"
+        for d in range(sub)
+    ]
+    outs = (["__floor"] if floor else []) + [
+        f"((CAST(__s{d} AS DOUBLE) / __n) * {_dlit(_SCALE_DOWN)}) AS __m{d}"
+        for d in range(sub)
+    ]
+    # NOTE: past 512 score terms per codebook (k=16 at dim=64, or k=32
+    # at PQ's subdim 16) the round's stage — the projections fused
+    # with the partial aggregate — overflows janino's 64 KB method
+    # limit even though each score chunk stays within it: Spark logs
+    # one "Failed to compile" and runs that stage without whole-stage
+    # codegen.  Results are unaffected, and the assignment-only
+    # frames (kmeans_assignments, pq_encode) compile at those sizes.
+    return (
+        f"SELECT j, cell, {', '.join(outs)} FROM ("
+        f"SELECT j, cell, {', '.join(aggs)} FROM ("
+        f"SELECT inline(array({rows})) FROM ({cells})) GROUP BY j, cell)"
+    )
 
 
 # centroids per scores-array chunk: each chunk expression carries
@@ -190,83 +214,75 @@ def kmeans_iterate(
 _CHUNK_TERMS = 512
 
 
-def _with_cell(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Append ``__cell`` to a frame carrying ``__vd``: first-index-at-
-    max over the score expressions — smallest index wins ties,
-    matching the oracle's (score DESC, cell ASC) rank.
+def _score_sql(xs: list[str], c: list[float]) -> str:
+    """``x . c - |c|^2/2`` over the extracted element columns ``xs``,
+    as the left fold from 0.0 the oracle's ``list_dot_product``
+    replays, with every literal exact (``_dlit``)."""
+    terms = " + ".join(f"{x} * {_dlit(v)}" for x, v in zip(xs, c))
+    return f"({_dlit(0.0)} + {terms} - {_dlit(_half_sq_norm(c))})"
 
-    Scores live in CHUNKED arrays of <= ~512 terms each, so every
-    generated method stays under janino's size limit at ANY k (a
-    single k*dim array fails compilation past ~512 terms, and Spark
-    then pays an expensive failed-compile + interpreted fallback per
-    stage — measured 3x wall on a k=32, dim=64 assignment).  The
-    argmax is a CASE over per-chunk maxes: first chunk holding the
-    global max, first position within it — the same
-    first-index-at-max rule as the single-array form.  Each chunk
-    column and the global max get their OWN projection and are
-    referenced more than once downstream, so CollapseProject keeps
-    them materialized instead of re-fusing one giant expression."""
-    dim = len(centroids[0])
-    # extract each element ONCE into a scalar column: element_at
-    # generates bounds-check + error-branch code, so referencing the
-    # array 8x per dim bloats the fused method past janino's limit —
-    # extracted attrs are plain locals and CollapseProject keeps the
-    # extraction separate (non-cheap expr, referenced k times)
-    xs = [f"__x{d}" for d in range(dim)]
-    extracted = df.select(
-        "*",
-        *[
-            F.element_at(F.col("__vd"), d + 1).alias(xs[d])
-            for d in range(dim)
-        ],
-    )
 
-    def score(c: list[float]) -> str:
-        terms = " + ".join(
-            f"{xs[d]} * {_dlit(v)}" for d, v in enumerate(c)
-        )
-        return f"({_dlit(0.0)} + {terms} - {_dlit(_half_sq_norm(c))})"
+def _cells_sql(
+    keep: list[str], spaces: list[tuple[str, list[list[float]]]]
+) -> str:
+    """SQL text over ``{base}`` (a frame carrying ``__vd``): the
+    columns ``keep`` plus, per ``(name, centroids)`` space, an INT
+    column ``name`` holding the first-index-at-max of that space's
+    scores — smallest index wins ties, matching the oracle's (score
+    DESC, cell ASC) rank.  Space ``j`` scores the next
+    ``len(centroids[0])`` elements of ``__vd`` after those of the
+    spaces before it.  ``keep`` may name the extracted elements
+    ``__x0 ..``.
 
-    per = max(1, _CHUNK_TERMS // dim)
-    if len(centroids) <= per:
-        arr = "ARRAY(" + ", ".join(score(c) for c in centroids) + ")"
-        return (
-            extracted.withColumn("__scores", F.expr(arr))
-            .withColumn(
-                "__cell",
-                F.expr(
-                    "CAST(array_position(__scores, array_max(__scores)) - 1 AS INT)"
-                ),
+    The element extraction is ONE projection of every
+    ``element_at(__vd, i)`` as a plain column ``__x{i-1}``:
+    element_at generates bounds-check + error-branch code, so
+    referencing the array k times per element would bloat the fused
+    method past janino's limit, while an extracted column referenced
+    k times is kept as its own projection by CollapseProject.  Scores
+    live in CHUNKED arrays of <= ~``_CHUNK_TERMS`` terms each, so
+    every generated method stays under janino's size limit at ANY k
+    (a single k*dim array fails compilation past ~512 terms, and
+    Spark then pays an expensive failed-compile + interpreted
+    fallback per stage — measured 3x wall on a k=32, dim=64
+    assignment).  The argmax is a CASE over per-chunk maxes: first
+    chunk holding the space's max ``__b{j}``, first position within
+    it.  The chunk arrays and ``__b{j}`` each get their OWN
+    projection and are referenced more than once above it, so
+    CollapseProject keeps them materialized instead of re-fusing one
+    giant expression."""
+    dim = sum(len(cents[0]) for _, cents in spaces)
+    xs = [f"__x{i}" for i in range(dim)]
+    arrays, bests, cells = [], [], []
+    first = 0
+    for j, (name, cents) in enumerate(spaces):
+        sub = len(cents[0])
+        per = max(1, _CHUNK_TERMS // sub)
+        chunks = [f"__sc{j}_{g}" for g in range((len(cents) + per - 1) // per)]
+        for g, sc in enumerate(chunks):
+            scores = ", ".join(
+                _score_sql(xs[first : first + sub], c)
+                for c in cents[g * per : (g + 1) * per]
             )
-            .drop("__scores", *xs)
+            arrays.append(f"ARRAY({scores}) AS {sc}")
+        maxes = [f"array_max({sc})" for sc in chunks]
+        best = f"greatest({', '.join(maxes)})" if len(maxes) > 1 else maxes[0]
+        bests.append(f"{best} AS __b{j}")
+        whens = " ".join(
+            f"WHEN {mx} = __b{j} THEN "
+            f"CAST({g * per} + array_position({sc}, __b{j}) - 1 AS INT)"
+            for g, (sc, mx) in enumerate(zip(chunks, maxes))
         )
-    groups = [
-        centroids[i : i + per] for i in range(0, len(centroids), per)
-    ]
-    sc = [f"__sc{g}" for g in range(len(groups))]
-    chunked = extracted.select(
-        "*",
-        *[
-            F.expr(
-                "ARRAY(" + ", ".join(score(c) for c in grp) + ")"
-            ).alias(sc[g])
-            for g, grp in enumerate(groups)
-        ],
-    )
-    best = "greatest(" + ", ".join(f"array_max({c})" for c in sc) + ")"
-    case = (
-        "CASE "
-        + " ".join(
-            f"WHEN array_max({c}) = __best THEN "
-            f"CAST({g * per} + array_position({c}, __best) - 1 AS INT)"
-            for g, c in enumerate(sc)
-        )
-        + " END"
+        cells.append(f"CASE {whens} END AS {name}")
+        first += sub
+    extract = ", ".join(
+        f"element_at(__vd, {i + 1}) AS {x}" for i, x in enumerate(xs)
     )
     return (
-        chunked.withColumn("__best", F.expr(best))
-        .withColumn("__cell", F.expr(case))
-        .drop("__best", *sc, *xs)
+        f"SELECT {', '.join(keep + cells)} FROM ("
+        f"SELECT *, {', '.join(bests)} FROM ("
+        f"SELECT *, {', '.join(arrays)} FROM ("
+        f"SELECT *, {extract} FROM {{base}})))"
     )
 
 
@@ -328,9 +344,9 @@ def kmeans_assignments(
     (NULL, wrong length, null elements) are dropped, matching the
     training-pass contract."""
     dim = len(centroids[0])
-    return _with_cell(
-        df.select(F.col(id_col), vd_cast(vec_col).alias("__vd")).filter(
-            valid_vec(dim)
-        ),
-        centroids,
-    ).select(F.col(id_col), F.col("__cell").alias("cell"))
+    base = df.select(F.col(id_col), vd_cast(vec_col).alias("__vd")).filter(
+        valid_vec(dim)
+    )
+    return base.sparkSession.sql(
+        _cells_sql([f"`{id_col}`"], [("cell", centroids)]), base=base
+    )

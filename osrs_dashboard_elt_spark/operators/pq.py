@@ -15,11 +15,19 @@ driver-side and inlined into a scan expression, so scoring a code is
 
 Spark shape:
 
-- training: ``m`` independent :func:`~.kmeans.kmeans_fit` runs over
-  SLICES of the same projected vector column — each is K scans with a
-  k*subdim-bounded shuffle; the slices never materialize as tables;
+- training: one Lloyd's round updates ALL ``m`` codebooks from one
+  scan of the full vectors (``kmeans._lloyd_round``): every element
+  is extracted once, subspace ``j`` scores its own ``subdim``
+  elements, and one aggregate keyed (subspace, cell) carries every
+  codebook's sums — ``n_iter`` scans in total, each with an
+  m*k*subdim-bounded shuffle; the slices never materialize;
+- the round and the encode pass are each ONE SQL statement handed
+  to ``spark.sql`` with the projected frame as its input, so the
+  driver builds them with a fixed handful of JVM calls at any
+  m*k*subdim (a Column object per element would cost a round trip
+  each);
 - encoding: ONE narrow pass — all ``m`` cell assignments are
-  scan-side chunked-codegen expressions (``kmeans._with_cell``), no
+  scan-side chunked-codegen expressions (``kmeans._cells_sql``), no
   shuffle, output is (id, array<int> codes);
 - search: one scan of the CODES table (m ints/row, not d floats),
   LUT lookups inlined as literals, ``TakeOrderedAndProject`` top-k —
@@ -46,9 +54,8 @@ from pyspark.sql import functions as F
 
 from .kmeans import (
     _MIN_EXACT_ABS,
-    _SCALE_DOWN,
-    _SCALE_UP,
-    _with_cell,
+    _cells_sql,
+    _lloyd_round,
     kmeans_init,
     valid_vec,
 )
@@ -98,37 +105,34 @@ def pq_train(
     # of the same row set (the encode contract), and the shared scans
     # below run once instead of once per subspace
     base = df.select(
-        F.col(id_col), vd_cast(vec_col).alias("__fv")
-    ).filter(valid_vec(dim, "__fv"))
+        F.col(id_col), vd_cast(vec_col).alias("__vd")
+    ).filter(valid_vec(dim))
     # one md5-ordered init pick over the full vectors, sliced
     # driver-side (the pick order depends only on ids, so it is the
     # same for every subspace); one magnitude-floor scan covers all
     # slices because their union IS the full element set
-    full_init = kmeans_init(base, "__fv", k, id_col, seed)
+    full_init = kmeans_init(base, "__vd", k, id_col, seed)
     if len(full_init) < k:
         raise ValueError(
             f"pq_train: need >= {k} valid vectors, got {len(full_init)}"
         )
-    # Shared-pass subspace training (round 13): every round updates
-    # ALL m codebooks from ONE scan — the per-subspace Lloyd's rounds
-    # are independent given the current codebooks, so their m
-    # assignment expressions ride the same pass and one aggregate
-    # keyed (subspace, cell) carries every codebook's sums (the same
-    # share-the-pass move as the round-12 multi-quantile narrowing:
-    # n_iter passes total instead of m * n_iter, identical at any
-    # scale because each pass is a full corpus scan).  Bit-exact to
-    # the per-subspace form: assignments use the same _with_cell
-    # chunked argmax over the same slices, sums integerize through
-    # the same decimal path, and empty cells keep their codeword —
-    # pinned by tests/test_pq.py::test_pq_train_shared_pass_matches_
-    # per_subspace.
+    # Shared-pass subspace training: every round updates ALL m
+    # codebooks from ONE scan — the per-subspace Lloyd's rounds are
+    # independent given the current codebooks, so their m assignments
+    # ride the same pass and one aggregate keyed (subspace, cell)
+    # carries every codebook's sums (kmeans._lloyd_round: n_iter
+    # passes total instead of m * n_iter).  Bit-exact to m separate
+    # kmeans_fit runs over the slices: the same first-index-at-max
+    # assignment over the same elements, the same integerized decimal
+    # means, and empty cells keep their codeword — pinned by
+    # tests/test_pq.py::test_pq_train_shared_pass_matches_per_subspace.
     books = [
         [v[j * sub : (j + 1) * sub] for v in full_init] for j in range(m)
     ]
     floor_out: dict = {}
     for i in range(n_iter):
-        books = _pq_iterate_all(
-            base, books, sub, floor_out=floor_out if i == 0 else None
+        books = _lloyd_round(
+            base, books, floor_out=floor_out if i == 0 else None
         )
         if i == 0:
             # exact-mean magnitude guard, folded into round 1's
@@ -144,81 +148,6 @@ def pq_train(
                     "embeddings."
                 )
     return books
-
-
-def _pq_iterate_all(
-    base: DataFrame,
-    books: list[list[list[float]]],
-    sub: int,
-    floor_out: dict | None = None,
-) -> list[list[list[float]]]:
-    """One Lloyd's round for EVERY subspace in one pass: assign each
-    row to its nearest codeword per subspace (m chunked-codegen
-    argmaxes in the same projection), explode to (subspace, cell,
-    elements) rows, and aggregate exact integerized sums per
-    (subspace, cell) — one scan, one m*k-bounded shuffle.
-    ``floor_out`` rides the exact-mean magnitude guard on the same
-    aggregate (see pq_train)."""
-    m = len(books)
-    out = base
-    for j, cb in enumerate(books):
-        out = _with_cell(
-            out.withColumn("__vd", F.slice("__fv", j * sub + 1, sub)), cb
-        ).withColumnRenamed("__cell", f"__cj{j}").drop("__vd")
-    structs = [
-        F.struct(
-            F.lit(j).alias("j"),
-            F.col(f"__cj{j}").alias("cell"),
-            *[
-                F.element_at(F.col("__fv"), j * sub + d + 1).alias(f"e{d}")
-                for d in range(sub)
-            ],
-        )
-        for j in range(m)
-    ]
-    rows = out.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
-    floor_cols = []
-    if floor_out is not None:
-        nz_min = F.least(
-            *[
-                F.when(F.col(f"e{d}") != 0.0, F.abs(F.col(f"e{d}")))
-                for d in range(sub)
-            ]
-        ) if sub > 1 else F.when(F.col("e0") != 0.0, F.abs(F.col("e0")))
-        floor_cols = [F.min(nz_min).alias("__floor")]
-    agg = (
-        rows.groupBy("j", "cell")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            *floor_cols,
-            *[
-                F.sum(
-                    (F.col(f"e{d}") * F.lit(_SCALE_UP)).cast("decimal(38,0)")
-                ).alias(f"__s{d}")
-                for d in range(sub)
-            ],
-        )
-        .select(
-            "j",
-            "cell",
-            *(["__floor"] if floor_cols else []),
-            *[
-                (
-                    (F.col(f"__s{d}").cast("double") / F.col("__n"))
-                    * F.lit(_SCALE_DOWN)
-                ).alias(f"__m{d}")
-                for d in range(sub)
-            ],
-        )
-    )
-    stats = agg.collect()
-    if floor_out is not None:
-        floors = [r["__floor"] for r in stats if r["__floor"] is not None]
-        floor_out["floor"] = min(floors) if floors else None
-    new = [[list(cw) for cw in cb] for cb in books]  # empty cells keep old
-    for r in stats:
-        new[r["j"]][r["cell"]] = [float(r[f"__m{d}"]) for d in range(sub)]
-    return new
 
 
 def pq_encode(
@@ -241,17 +170,17 @@ def pq_encode(
     sub = len(codebooks[0][0])
     dim = m * sub
     carry = list(carry_cols or [])
-    out = df.select(
-        F.col(id_col), *carry, vd_cast(vec_col).alias("__full")
-    ).filter(valid_vec(dim, "__full"))
-    ccols = []
-    for j, cb in enumerate(codebooks):
-        out = _with_cell(
-            out.withColumn("__vd", F.slice("__full", j * sub + 1, sub)), cb
-        ).withColumnRenamed("__cell", f"__c{j}").drop("__vd")
-        ccols.append(f"__c{j}")
-    return out.select(
-        F.col(id_col), F.array(*ccols).alias(codes_col), *carry
+    base = df.select(
+        F.col(id_col), *carry, vd_cast(vec_col).alias("__vd")
+    ).filter(valid_vec(dim))
+    idc, carried = f"`{id_col}`", [f"`{c}`" for c in carry]
+    cells = _cells_sql(
+        [idc, *carried], [(f"__c{j}", cb) for j, cb in enumerate(codebooks)]
+    )
+    codes = ", ".join(f"__c{j}" for j in range(m))
+    out = [idc, f"array({codes}) AS `{codes_col}`", *carried]
+    return base.sparkSession.sql(
+        f"SELECT {', '.join(out)} FROM ({cells})", base=base
     )
 
 

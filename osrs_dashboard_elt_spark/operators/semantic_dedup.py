@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _drop_hot_keys
-from .kmeans import _with_cell, valid_vec
+from .kmeans import _cells_sql, valid_vec
 from .similarity import (
     _score6,
     dot_sql,
@@ -76,19 +76,16 @@ def _members(
     # norm + unit-scale in FOLD form: unrolled, they fuse with the
     # k*dim score array into one whole-stage method past janino's
     # 64 KB cap — the compile fails and the corpus scan (the widest
-    # stage of the whole dedup) runs interpreted (round-9 judge).
-    # Fold values are bit-identical (same left-fold / per-element
-    # ops), and the score array's own stage compiles again
-    withn = _with_cell(base, centroids).select(
-        id_col,
-        F.col("__cell").alias("cell"),
-        "__vd",
-        F.expr(fold_norm_sql("__vd")).alias("nrm"),
-    )
-    out = withn.select(
-        id_col,
-        "cell",
-        F.expr(fold_unit_array_sql("__vd", "nrm")).alias("uv"),
+    # stage of the whole dedup) runs interpreted.  Fold values are
+    # bit-identical (same left-fold / per-element ops), and the score
+    # array's own stage compiles again
+    idc = f"`{id_col}`"
+    cells = _cells_sql([idc, "__vd"], [("cell", centroids)])
+    out = base.sparkSession.sql(
+        f"SELECT {idc}, cell, {fold_unit_array_sql('__vd', 'nrm')} AS uv "
+        f"FROM (SELECT {idc}, cell, __vd, {fold_norm_sql('__vd')} AS nrm "
+        f"FROM ({cells}))",
+        base=base,
     )
     # _checkpoint=False exposes the raw plan (the checkpoint swaps it
     # for an ExistingRDD scan) for the janino-safety plan gate

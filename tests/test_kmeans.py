@@ -29,22 +29,28 @@ def vecs(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _numpy_replay(vecs, k: int, n_iter: int, seed: int) -> np.ndarray:
+    """Lloyd's rounds in float64 numpy from the same md5 init."""
+    X = np.array(
+        [r["embedding"] for r in vecs.orderBy("vec_id").collect()],
+        dtype="float64",
+    )
+    C = np.array(kmeans_init(vecs, "embedding", k, "vec_id", seed))
+    for _ in range(n_iter):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2)
+        lab = d2.argmin(1)
+        for c in range(k):
+            if (lab == c).any():
+                C[c] = X[lab == c].mean(0)
+    return C
+
+
 def test_fit_is_deterministic_and_matches_numpy(spark, vecs):
     c1 = kmeans_fit(vecs, "embedding", k=3, n_iter=4, seed=11)
     c2 = kmeans_fit(vecs, "embedding", k=3, n_iter=4, seed=11)
     assert c1 == c2  # bit-for-bit across runs/partitionings
 
-    X = np.array(
-        [r["embedding"] for r in vecs.orderBy("vec_id").collect()],
-        dtype="float64",
-    )
-    C = np.array(kmeans_init(vecs, "embedding", 3, "vec_id", 11))
-    for _ in range(4):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2)
-        lab = d2.argmin(1)
-        for c in range(3):
-            if (lab == c).any():
-                C[c] = X[lab == c].mean(0)
+    C = _numpy_replay(vecs, 3, 4, 11)
     assert float(np.abs(np.array(c1) - C).max()) < 1e-9
 
     # with 3 clusters and 4 rounds every blob gets its own centroid
@@ -55,6 +61,15 @@ def test_fit_is_deterministic_and_matches_numpy(spark, vecs):
         .collect()
     )
     assert sorted(r["count"] for r in sizes) == [30, 30, 30]
+
+
+def test_two_round_fit_is_deterministic_and_matches_numpy(spark, vecs):
+    """Default-run representative of the soak-gated test above: k=3,
+    two rounds, one determinism repeat, the numpy replay."""
+    c1 = kmeans_fit(vecs, "embedding", k=3, n_iter=2, seed=11)
+    assert kmeans_fit(vecs, "embedding", k=3, n_iter=2, seed=11) == c1
+    C = _numpy_replay(vecs, 3, 2, 11)
+    assert float(np.abs(np.array(c1) - C).max()) < 1e-9
 
 
 def test_empty_cell_keeps_previous_centroid(spark, vecs):
