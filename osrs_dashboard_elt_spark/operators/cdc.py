@@ -15,9 +15,11 @@ ONE full-outer join on the key, then a row-level decision projection:
   change D, target     -> drop
   change U/D, no match -> ignored (or kept as insert when upsert=True)
 
-Composes with the publish family: apply to the current
-``read_version`` head, ``publish_versioned`` the result — an
-ACID-ish MERGE with time travel.
+The result is the whole next snapshot, so it publishes through
+``sources.io.publish_blue_green`` (atomic flip between two buffers).
+The in-place form on a manifest-backed table is
+``sources.maintenance.targeted_upsert``, whose change-feed deltas give
+time travel through ``sources.change_feed.read_table_as_of``.
 
 Scale: one shuffle of each side on the key (or zero with
 ``sources.bucketed`` layouts); the decision is a scan-side

@@ -48,8 +48,7 @@ from .kmeans import _cells_sql, valid_vec
 from .similarity import (
     _score6,
     dot_sql,
-    fold_norm_sql,
-    fold_unit_array_sql,
+    fold_unit_sql,
     vd_cast,
 )
 
@@ -82,9 +81,7 @@ def _members(
     idc = f"`{id_col}`"
     cells = _cells_sql([idc, "__vd"], [("cell", centroids)])
     out = base.sparkSession.sql(
-        f"SELECT {idc}, cell, {fold_unit_array_sql('__vd', 'nrm')} AS uv "
-        f"FROM (SELECT {idc}, cell, __vd, {fold_norm_sql('__vd')} AS nrm "
-        f"FROM ({cells}))",
+        f"SELECT {idc}, cell, {fold_unit_sql('__vd')} AS uv FROM ({cells})",
         base=base,
     )
     # _checkpoint=False exposes the raw plan (the checkpoint swaps it

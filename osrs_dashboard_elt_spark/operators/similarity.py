@@ -185,10 +185,17 @@ def fold_norm_sql(a: str) -> str:
     return f"SQRT({fold_self_dot_sql(a)})"
 
 
-def fold_unit_array_sql(v: str, nrm: str) -> str:
-    """Element-wise unit scaling in HOF form — one division per
-    element, identical values to :func:`unit_array_sql`."""
-    return f"transform({v}, x -> x / {nrm})"
+def fold_unit_sql(v: str) -> str:
+    """Element-wise unit scaling in HOF form: the self-dot of
+    :func:`fold_norm_sql` folds ONCE per row, and its finish lambda
+    divides every element by the square root — identical values to
+    :func:`unit_array_sql` over that norm.  A norm projected as its
+    own column does not stay separate: CollapseProject inlines it
+    into the per-element lambda, refolding the vector per element."""
+    return (
+        f"aggregate(transform({v}, x -> x * x), cast(0.0 as double), "
+        f"(acc, x) -> acc + x, s -> transform({v}, x -> x / SQRT(s)))"
+    )
 
 
 def _fold_norm(vec: Sequence[float]) -> float:

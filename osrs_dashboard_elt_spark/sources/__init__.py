@@ -8,13 +8,6 @@ from .io import (
     publish_blue_green,
     read_published,
 )
-from .maintenance import (
-    compact_files,
-    list_versions,
-    publish_versioned,
-    read_version,
-    vacuum_versions,
-)
 from .parquet import (
     dedup_append,
     max_watermark,
@@ -32,23 +25,18 @@ from .rest import (
 __all__ = [
     "RestTimeSeriesDataSource",
     "cached_item_mapping",
-    "compact_files",
     "dedup_append",
     "filter_newer_than_watermarks",
     "incremental_scan",
     "is_bucketed_on",
-    "list_versions",
     "max_watermark",
     "new_rows_against",
     "prune_to_window",
     "per_key_watermark",
     "publish_blue_green",
-    "publish_versioned",
     "read_bucketed",
     "read_new_since",
     "read_published",
-    "read_version",
     "register_rest_source",
-    "vacuum_versions",
     "write_bucketed",
 ]

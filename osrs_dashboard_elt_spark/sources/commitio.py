@@ -4,11 +4,11 @@ Every crash-safety and single-writer guarantee in the manifest /
 change-feed / mutation tier reduces to three control-plane
 primitives, all on SMALL metadata blobs:
 
-- **publish**: atomically replace a blob (version logs, epoch metas,
-  commit markers, intent journals, consumer checkpoints) — readers
+- **publish**: atomically replace a blob (epoch metas, commit
+  markers, intent journals, consumer checkpoints) — readers
   see the old bytes or the new bytes, never a torn write;
-- **claim**: atomically create a blob iff absent (sequence / epoch /
-  version claim markers, mutex lock files) — exactly one of N
+- **claim**: atomically create a blob iff absent (sequence / epoch
+  claim markers, mutex lock files) — exactly one of N
   concurrent claimants wins;
 - **delete / get / exists** on those blobs.
 
@@ -276,7 +276,7 @@ def release(path: str) -> None:
 
 def claim_slot(fmt: str, start: int, limit: int | None = None) -> int:
     """Probe-increment slot claim: the first ``fmt``-named blob this
-    caller creates wins slot ``n`` (versions, epochs, change seqs).
+    caller creates wins slot ``n`` (epochs, change seqs).
     One conditional PUT per probe.  Only the BASENAME of ``fmt`` is a
     format template — the directory part is used verbatim, so a table
     rooted at a path containing ``{`` or ``}`` claims normally

@@ -75,10 +75,11 @@ _COLORS = ("blue", "green")
 
 
 def _read_manifest(root: str) -> str | None:
-    # FileNotFoundError ONLY (maintenance._read_log's rule): a
-    # transient EACCES/EIO must raise, not read as "no manifest" —
-    # that would target _COLORS[0], which may be the ACTIVE color, and
-    # overwrite the directory concurrent readers are scanning
+    # FileNotFoundError ONLY: a missing file is the one failure that
+    # means "never published".  A transient EACCES/EIO must raise, not
+    # read as "no manifest" — that would target _COLORS[0], which may
+    # be the ACTIVE color, and overwrite the directory concurrent
+    # readers are scanning
     try:
         with open(os.path.join(root, _MANIFEST)) as f:
             color = f.read().strip()

@@ -1,43 +1,32 @@
-"""Table maintenance: versioned snapshot publish (time travel) and
-small-file compaction.
+"""Table maintenance: in-place mutation and small-file compaction of
+manifest-backed tables (``sources/stats_manifest.py``).
 
 Extends the S12/T5 publish story (``io.publish_blue_green`` keeps
 exactly two buffers, like the reference's two SQLite files,
-src/3_transform_data.py:771-798):
+src/3_transform_data.py:771-798) to tables that change row by row:
 
-- ``publish_versioned`` keeps N immutable snapshot dirs plus an
-  append-only JSON version log with per-version row counts and an
-  order-independent table checksum (``operators.quality
-  .table_checksum``'s digest discipline).  New readers resolve the
-  log's head; a pinned reader gets version k forever — the micro form
-  of a Delta/Iceberg commit log, kept format-agnostic.  The log
-  append is write-temp + atomic rename, same as the manifest flip,
-  and concurrent publishers are safe: version numbers are claimed
-  via create-if-absent markers and the log read-modify-write runs
-  under a short lock (loud bounded-timeout on a stale lock) — all
-  through the injectable ``commitio`` backend (O_EXCL/rename on
-  POSIX, conditional PUT on an object store).
-- ``vacuum_versions`` deletes expired snapshots but never the head or
-  an explicitly-retained version — the retention contract that makes
-  time travel safe to run on a cron.
-- ``compact_files`` rewrites a parquet dir to ~``target_bytes``
-  files.  Streaming/micro-batch appends produce many small files; at
+- ``table_append`` adds files; ``targeted_delete`` (rewrite or
+  deletion-vector mode) and ``targeted_upsert`` (MERGE) rewrite only
+  the files their keys touch.  Every swap rides one intent journal
+  with deterministic names, so the next call replays or rolls back a
+  crashed mutation exactly.
+- ``compact_table`` is the in-place OPTIMIZE: small files are
+  bin-packed into ~``target_bytes`` files in one rewrite job, and the
+  file lineage it records keeps time travel snapshot-served across
+  it.  Streaming/micro-batch appends produce many small files; at
   100 TB the file count — not the byte count — is what breaks
-  listing, planning, and scan throughput.  The rewrite is one job:
-  read -> repartition(ceil(bytes/target)) -> publish_versioned (so
-  compaction is itself atomic and time-travelable).
+  listing, planning, and scan throughput.
 
-Scale notes: the version log holds one small JSON object per publish
-(metadata only); snapshots are plain parquet dirs so every reader
-optimization (pruning, pushdown, vectorized scan) applies unchanged.
-The checksum is computed from the DataFrame being published in the
-same job — one extra aggregate over data already in memory/cache.
+Time travel and retention live on the same table: the change feed
+records each mutation's delta (``change_feed.read_table_as_of``), and
+``change_feed.vacuum_change_feed`` expires history behind registered
+consumers.  Mutations serialize under a per-table gate, or with
+``occ=True`` overlap their data work and validate at commit.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import tempfile
@@ -47,239 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dataio
-
-_LOG = "_versions.json"
-_LOCK = "_versions.lock"
-
-
-def _claim_version(root: str, start: int) -> int:
-    """Atomically claim the next free version number >= ``start``.
-
-    A version is claimed by creating ``.claim-v{n}`` with
-    a create-if-absent claim (``commitio.claim_slot``: O_EXCL on
-    POSIX, conditional PUT on an object store), so two concurrent
-    publishers can never claim the same number (the
-    second gets EEXIST and moves on).  Claim markers are never deleted
-    for live versions (a 0-byte file per publish); ``vacuum_versions``
-    removes the markers of vacuumed snapshots.  A publisher that
-    crashes between claim and log-append leaves a gap in the version
-    sequence — harmless, and far better than the silent snapshot
-    clobber an unclaimed read-modify-write allows.
-    """
-    from . import commitio
-
-    return commitio.claim_slot(
-        os.path.join(root, ".claim-v{}"), start, limit=100_000
-    )
-
-
-def _log_lock(root: str, timeout: float = 30.0):
-    """Short-lived mutex around the version-log read-modify-write —
-    ``commitio.mutex`` (O_EXCL on POSIX, conditional PUT on an object
-    store).  Bounded spin: a publisher that died holding the lock
-    surfaces as a loud timeout naming the stale lock blob rather than
-    a silent lost update."""
-    from . import commitio
-
-    return commitio.mutex(
-        os.path.join(root, _LOCK), timeout, "version log lock",
-        poll=0.05,
-    )
-
-
-def _read_log(root: str) -> list[dict]:
-    # FileNotFoundError ONLY: any other read failure (permissions, a
-    # transient remote-fs error) must raise — treating it as "no log"
-    # would reset the version counter and let the next publish
-    # overwrite the real v1 snapshot
-    try:
-        with open(os.path.join(root, _LOG)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return []
-
-
-def _write_log(root: str, entries: list[dict]) -> None:
-    from . import commitio
-
-    commitio.publish_json(os.path.join(root, _LOG), entries)
-
-
-def publish_versioned(
-    df: DataFrame,
-    root: str,
-    checksum_cols: list[str] | None = None,
-    stats_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
-    bloom_bits: int = 1 << 20,
-) -> int:
-    """Write ``df`` as the next immutable snapshot under ``root`` and
-    append it to the version log.  Returns the new version number.
-
-    Concurrency-safe on a POSIX filesystem: the version NUMBER is
-    claimed atomically (O_CREAT|O_EXCL marker) before any data is
-    written, so two concurrent publishers get distinct numbers and
-    distinct snapshot dirs, and the log append runs under a short
-    O_EXCL lock with a re-read — neither publisher can clobber the
-    other's snapshot or drop its log entry.  The snapshot dir is
-    written BEFORE the log append, so a crash between the two leaves
-    a dangling claimed dir (harmless, vacuumable) — never a log entry
-    pointing at missing data.
-    """
-    os.makedirs(root, exist_ok=True)
-    log = _read_log(root)
-    version = _claim_version(root, (log[-1]["version"] + 1) if log else 1)
-    path = os.path.join(root, f"v{version}")
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    if stats_cols:
-        # per-file min/max manifest inside the (immutable) snapshot
-        # dir: selective readers of this version prune files at
-        # planning time (sources/stats_manifest.py); written before
-        # the log append, so a logged version always has its stats.
-        # immutable=True is the version handshake: the snapshot never
-        # changes, so pruned_scan trusts the manifest and skips the
-        # per-probe directory listing entirely
-        from .stats_manifest import write_stats_manifest
-
-        # bloom_cols serve point lookups on the snapshot (id reads on
-        # keys the layout doesn't cluster); min/max serve range probes
-        write_stats_manifest(
-            spark, path, stats_cols,
-            bloom_cols=bloom_cols, bloom_bits=bloom_bits,
-            immutable=True,
-        )
-    written = spark.read.parquet(path)
-    entry = {
-        "version": version,
-        "path": f"v{version}",
-        "rows": written.count(),
-        "ts": time.time(),
-    }
-    if checksum_cols:
-        from ..operators.quality import table_checksum
-
-        entry["checksum"] = str(
-            table_checksum(written, checksum_cols).collect()[0]["checksum"]
-        )
-    # Re-read under the lock: another publisher may have appended a
-    # DIFFERENT version while this snapshot was being written; append
-    # ours and keep the log version-sorted.  A duplicate of OUR number
-    # here means the claim discipline was bypassed — fail loudly
-    # rather than point two log entries at one dir.
-    with _log_lock(root):
-        log = _read_log(root)
-        if any(e["version"] == version for e in log):
-            raise RuntimeError(
-                f"version {version} already in the log under {root} — "
-                "claim marker was removed or the log was hand-edited"
-            )
-        log.append(entry)
-        log.sort(key=lambda e: e["version"])
-        _write_log(root, log)
-    return version
-
-
-def read_version(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Read the head snapshot, or time-travel to ``version``."""
-    log = _read_log(root)
-    if not log:
-        raise FileNotFoundError(f"no versioned table under {root}")
-    if version is None:
-        entry = log[-1]
-    else:
-        matches = [e for e in log if e["version"] == version]
-        if not matches:
-            known = [e["version"] for e in log]
-            raise ValueError(
-                f"version {version} not in log (known: {known}) — "
-                "it may have been vacuumed"
-            )
-        entry = matches[0]
-    return spark.read.parquet(os.path.join(root, entry["path"]))
-
-
-def vacuum_versions(
-    root: str, keep_last: int = 2, retain: set[int] | None = None
-) -> list[int]:
-    """Delete snapshots older than the last ``keep_last``, except any
-    in ``retain``.  Removes them from the log first (a reader that
-    resolved the entry earlier may still be scanning — mirror Delta's
-    retention caveat by keeping ``keep_last`` >= the longest reader),
-    then deletes the dirs.  Returns the vacuumed version numbers."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (the head is never vacuumed)")
-    retain = retain or set()
-    with _log_lock(root):
-        log = _read_log(root)
-        keep = {e["version"] for e in log[-keep_last:]} | retain
-        dropped = [e for e in log if e["version"] not in keep]
-        _write_log(root, [e for e in log if e["version"] in keep])
-    out = []
-    for e in dropped:
-        shutil.rmtree(os.path.join(root, e["path"]), ignore_errors=True)
-        # the claim marker of a vacuumed version is dead: new claims
-        # start above the log head, which keep_last >= 1 preserves
-        try:
-            os.remove(os.path.join(root, f".claim-v{e['version']}"))
-        except FileNotFoundError:
-            pass
-        out.append(e["version"])
-    return out
-
-
-def list_versions(root: str) -> list[dict]:
-    """The version log (metadata only — no data read)."""
-    return _read_log(root)
-
-
-def compact_files(
-    spark: SparkSession,
-    src: str,
-    dest_root: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    checksum_cols: list[str] | None = None,
-    stats_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
-) -> int:
-    """Rewrite the parquet dir ``src`` into ~``target_bytes`` files,
-    published as a new version under ``dest_root``.  Returns the new
-    version.
-
-    File count comes from on-disk bytes (compressed parquet), so the
-    output files land near ``target_bytes`` each regardless of row
-    width.  ``repartition`` (round-robin) balances rows evenly —
-    unlike ``coalesce``, which merges unevenly and can undo the size
-    targeting; the shuffle it costs IS the compaction work."""
-    from .stats_manifest import (
-        _MANIFEST_DIR,
-        _load_meta,
-        has_stats_manifest,
-        read_table,
-    )
-
-    total = 0
-    for dirpath, _dirs, files in os.walk(src):
-        if _MANIFEST_DIR in dirpath:
-            continue  # sidecar manifest bytes are not table data
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(dirpath, fn))
-    n_files = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(src)
-    if has_stats_manifest(src):
-        _, meta = _load_meta(src)
-        if meta.get("dv"):
-            # a dv-carrying table must compact through the DV-aware
-            # reader, or the snapshot would resurrect tombstoned rows
-            df = read_table(spark, src)
-    df = df.repartition(n_files)
-    return publish_versioned(
-        df, dest_root, checksum_cols=checksum_cols,
-        stats_cols=stats_cols, bloom_cols=bloom_cols,
-    )
 
 
 def _local(uri: str) -> str:
@@ -863,7 +619,7 @@ def _with_mutation_gate(fn):
 # removes the original, so "each planned victim still exists at its
 # plan-time size" proves the staged rewrite is still exact.  The
 # metadata fingerprint catches the non-file conflicts: a schema
-# evolution, an immutability flip, or a deletion-vector epoch that
+# evolution, a stats-config change, or a deletion-vector epoch that
 # tombstoned rows AFTER the stager's DV-aware read (without it, the
 # staged rewrite would resurrect those rows at swap time).
 
@@ -890,12 +646,10 @@ def _occ_meta_fingerprint(meta: dict, fields: tuple) -> str:
     )
 
 
-# append stages only NEW files, so only a schema/immutability change
-# can invalidate it; rewrites also conflict on DV/stats-config change
-_OCC_META_FIELDS_APPEND = ("schema", "immutable")
-_OCC_META_FIELDS_REWRITE = (
-    "schema", "immutable", "dv", "cols", "bloom_cols",
-)
+# append stages only NEW files, so only a schema change can
+# invalidate it; rewrites also conflict on DV/stats-config change
+_OCC_META_FIELDS_APPEND = ("schema",)
+_OCC_META_FIELDS_REWRITE = ("schema", "dv", "cols", "bloom_cols")
 
 
 def _occ_validate(
@@ -1268,9 +1022,7 @@ def targeted_delete(
 
     In-place deletes on a live dir are NOT snapshot-isolated — a
     concurrent reader can transiently see both the original and the
-    replacement; takedowns needing isolation should re-publish through
-    ``publish_versioned`` instead (immutable snapshot manifests refuse
-    this function outright).  Rows with a NULL ``col`` never match
+    replacement.  Rows with a NULL ``col`` never match
     (values are non-null ids).  Partition-column deletes are rejected:
     those are directory drops, not row rewrites.  Returns counts:
     files_affected / rewritten / removed, rows_deleted (plus
@@ -1355,11 +1107,6 @@ def _targeted_delete_impl(
     else:
         _reconcile_delete_journal(spark, path)
     _, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — publish a "
-            "new version without the rows instead of in-place deletion"
-        )
     affected = files_for_values(spark, path, col, values)
     if not affected:
         return _noop_result(0)
@@ -2030,11 +1777,6 @@ def _table_append_impl(
     else:
         _reconcile_delete_journal(spark, path)
     _, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — publish a "
-            "new version with the rows instead of appending in place"
-        )
     pinned = StructType.fromJson(meta["schema"])
     data_cols, part_cols = _data_columns(meta)
     all_cols = [f.name for f in pinned.fields]
@@ -2271,11 +2013,6 @@ def _targeted_upsert_impl(
     else:
         _reconcile_delete_journal(spark, path)
     _, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — publish a "
-            "new version with the merge applied instead"
-        )
     pinned = StructType.fromJson(meta["schema"])
     data_cols, part_cols = _data_columns(meta)
     all_cols = [f.name for f in pinned.fields]
@@ -2769,9 +2506,7 @@ def compact_table(
     and each group is rewritten as ONE file; files already at target
     size are left byte-untouched, so the cost is O(small files), not
     O(table) — the difference between an OPTIMIZE you run every hour
-    behind a streaming ingest and one you can only afford weekly
-    (``compact_files`` remains the whole-table form, publishing a new
-    immutable version).
+    behind a streaming ingest and one you can only afford weekly.
 
     Execution is O(1) Spark jobs: ONE rewrite job shuffled by group id
     writes every group's output (``repartition(groups) +
@@ -2828,11 +2563,6 @@ def _compact_table_impl(
     else:
         _reconcile_delete_journal(spark, path)
     _, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — compact "
-            "through compact_files into a new version instead"
-        )
     pinned = StructType.fromJson(meta["schema"])
     all_files = _table_files(spark, path, meta)
     if not all_files:

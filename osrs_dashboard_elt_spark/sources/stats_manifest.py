@@ -13,7 +13,7 @@ ignore) mapping ``file -> (n_rows, min_c, max_c, ..., bloom_c, ...)``
 for the chosen columns, written right after the data, consulted BEFORE
 any data file is touched.
 
-Three pruning regimes:
+Two pruning regimes:
 
 - **Range bounds** (``pruned_scan(bounds=...)``): min/max interval
   overlap — composes with z-ordering (``operators/zorder.py``), which
@@ -30,12 +30,10 @@ Three pruning regimes:
   data.  Membership is tested with native byte/bit expressions over
   the manifest (no data file touched; the driver receives file names
   only).  False positives only ⇒ extra files read, never missed rows.
-- **Version-epoch freshness** (``immutable=True``, set by
-  ``publish_versioned``): a manifest over an immutable snapshot is
-  trusted outright — ``pruned_scan`` skips the data-dir listing
-  entirely (the schema is stored in the manifest meta), which at a
-  million files removes the dominant planning cost.  Mutable dirs keep
-  the loud listing-vs-manifest freshness check.
+
+Freshness: every reader lists the data dir and checks it against the
+manifest, failing loudly on drift (a file written or removed without
+a manifest refresh).
 
 Commit protocol: each manifest write lands in a fresh epoch dir
 (``_stats_manifest/m0000001/...``) and becomes visible only when its
@@ -47,11 +45,11 @@ names: a refresh appends one O(batch) segment instead of rewriting the
 world, and folds to a single segment when the segment/tombstone bounds
 trip.  Vacuum keeps every dir referenced by the last ``keep_metas``
 committed metas, so an in-flight reader of an older meta always finds
-all of its segments.  Epoch numbers are claimed with O_CREAT|O_EXCL
-markers (the ``publish_versioned`` discipline) so concurrent
-refreshers cannot collide on a dir.  Every meta carries
-``format_version``; readers refuse a meta without it or with another
-value, and refuse parquet written flat under ``_stats_manifest/``.
+all of its segments.  Epoch numbers are claimed with create-if-absent
+markers (``commitio.claim_slot``) so concurrent refreshers cannot
+collide on a dir.  Every meta carries ``format_version``; readers
+refuse a meta without it or with another value, and refuse parquet
+written flat under ``_stats_manifest/``.
 
 Hive-partitioned dirs are supported: file subsets are read with
 ``basePath`` so partition columns keep their values (a leaf-file read
@@ -76,7 +74,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,7 +83,7 @@ _MANIFEST_DIR = "_stats_manifest"
 _META = "_meta.json"
 # layout of an epoch meta and its segment dirs; readers refuse any
 # other value (bump it with any change to either)
-_FORMAT_VERSION = 1
+_FORMAT_VERSION = 2
 _BUCKET_BITS = 32768  # bits per Spark bitmap bucket (engine constant)
 
 
@@ -396,20 +393,14 @@ def write_stats_manifest(
     bloom_cols: list[str] | None = None,
     bloom_bits: int = 1 << 20,
     bloom_hashes: int = 5,
-    immutable: bool = False,
     keep_metas: int = 2,
 ) -> int:
     """Record per-file (n_rows, min/max per stats column, optional
     bloom per ``bloom_cols``) for every parquet file under ``path``.
     Returns the file count.  Call right after the data write
-    (``write_zordered`` and ``publish_versioned`` do this when given
-    ``stats_cols``); re-call or :func:`refresh_stats_manifest` after
-    any append or compaction — readers verify freshness.
-
-    ``immutable=True`` (set by ``publish_versioned`` for its snapshot
-    dirs) stamps the manifest as covering a dir that will NEVER
-    change: readers then trust it outright and skip the per-probe
-    directory listing — the point of a version handshake.
+    (``write_zordered`` does this when given ``stats_cols``); re-call
+    or :func:`refresh_stats_manifest` after any append or compaction
+    — readers verify freshness.
 
     Bloom sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k for n
     distinct values per file, m = ``bloom_bits``, k = ``bloom_hashes``
@@ -460,7 +451,6 @@ def write_stats_manifest(
         "bloom_cols": list(bloom_cols or []),
         "bloom_bits": bloom_bits,
         "bloom_hashes": bloom_hashes,
-        "immutable": bool(immutable),
         "schema": reader.schema.jsonValue(),
         "partition_cols": [
             f.name
@@ -534,6 +524,29 @@ def _schema_compatible(
     return _fields_subset(merged, pinned)
 
 
+def _check_schema(
+    spark: SparkSession, path: str, pinned: StructType, full: DataFrame
+) -> None:
+    """Refuse a data dir whose schema drifted from the manifest's
+    pinned one.  Partition-column TYPE drift is the dangerous case: a
+    first epoch whose run_id dirs all looked numeric pins int, and a
+    later string run id would read back NULL under the pinned schema —
+    catch it loudly instead of corrupting pruned reads.  A schema that
+    is a typed SUBSET of pinned is fine: that is ADD COLUMN evolution
+    (:func:`evolve_table_schema`), where old files legitimately lack
+    the added columns."""
+    if full.schema != pinned and not _schema_compatible(
+        spark, path, pinned, sampled=full.schema
+    ):
+        raise ValueError(
+            f"table schema under {path} no longer matches the "
+            f"manifest's pinned schema (was {pinned.simpleString()}, "
+            f"now {full.schema.simpleString()}) — partition-column "
+            "type drift or a schema change; rebuild with "
+            "write_stats_manifest"
+        )
+
+
 def evolve_table_schema(
     spark: SparkSession,
     path: str,
@@ -558,31 +571,25 @@ def evolve_table_schema(
     data back as NULL, which is silent data loss, not evolution; a
     drop would orphan recorded stats/blooms and un-pin columns that
     readers project.  The supported path for either is an explicit
-    rewrite: ``select``-reshape + ``publish_versioned`` (new dir),
-    never in place."""
+    rewrite: ``select``-reshape into a new dir plus
+    :func:`write_stats_manifest` there, never in place."""
     if drop_cols:
         raise NotImplementedError(
             f"DROP COLUMN ({sorted(drop_cols)}) is not supported on a "
             "manifest-backed table: parquet footers, recorded stats "
-            "and blooms all bind by name — rewrite through "
-            "publish_versioned with the column projected away instead"
+            "and blooms all bind by name — rewrite into a new dir "
+            "with the column projected away instead"
         )
     if renames:
         raise NotImplementedError(
             f"RENAME COLUMN ({dict(renames)}) is not supported: "
             "parquet binds by NAME (no Iceberg field ids here), so a "
             "metadata rename would read existing data back as NULL — "
-            "rewrite through publish_versioned with the column "
-            "aliased instead"
+            "rewrite into a new dir with the column aliased instead"
         )
     if not added_ddl:
         raise ValueError("added_ddl is empty — nothing to evolve")
     epoch, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — publish a "
-            "new version with the new columns instead"
-        )
     new_fields = StructType.fromDDL(added_ddl).fields
     pinned = StructType.fromJson(meta["schema"])
     existing = set(pinned.fieldNames())
@@ -665,9 +672,7 @@ def _refresh_once(
 
     The stats columns must match the existing manifest's (they're its
     schema); a mismatch raises rather than silently producing rows
-    other readers can't prune on.  Refreshing an ``immutable``
-    manifest raises: the dir was published as never-changing, so an
-    append under it is a protocol violation, not a refresh case."""
+    other readers can't prune on."""
     try:
         epoch, meta = _load_meta(path)
     except FileNotFoundError:
@@ -677,12 +682,6 @@ def _refresh_once(
             **({"bloom_bits": bloom_bits} if bloom_bits else {}),
         )
         return n, 0
-    if meta["immutable"]:
-        raise ValueError(
-            f"manifest under {path} is marked immutable (published "
-            "snapshot): appending to the dir violates the snapshot "
-            "contract — publish a new version instead of refreshing"
-        )
     if list(cols) != meta["cols"]:
         raise ValueError(
             f"stats manifest at {path} covers columns {meta['cols']}; "
@@ -700,23 +699,7 @@ def _refresh_once(
         )
     pinned = StructType.fromJson(meta["schema"])
     full = _full_read(spark, path, pinned)
-    if full.schema != pinned and not _schema_compatible(
-        spark, path, pinned, sampled=full.schema
-    ):
-        # partition-column TYPE drift is the dangerous case: a first
-        # epoch whose run_id dirs all looked numeric pins int, and a
-        # later string run id would read back NULL under the pinned
-        # schema — catch it loudly instead of corrupting pruned reads.
-        # A merged schema that is a typed SUBSET of pinned is fine:
-        # that is ADD COLUMN evolution (evolve_table_schema), where
-        # old files legitimately lack the added columns
-        raise ValueError(
-            f"table schema under {path} no longer matches the "
-            f"manifest's pinned schema (was {pinned.simpleString()}, "
-            f"now {full.schema.simpleString()}) — partition-column "
-            "type drift or a schema change; rebuild with "
-            "write_stats_manifest"
-        )
+    _check_schema(spark, path, pinned, full)
     current = {_norm(f) for f in full.inputFiles()}
     root = _manifest_root(path)
     old = _manifest_df(spark, path, meta)
@@ -812,7 +795,13 @@ def _refresh_once(
     return len(new_files), len(removed)
 
 
-def _check_fresh(manifest_files: set[str], current: set[str], path: str):
+def _check_fresh(man: DataFrame, full: DataFrame, path: str) -> None:
+    """Refuse a manifest whose recorded files differ from the data
+    dir's listing (``full``, a :func:`_full_read`)."""
+    current = {_norm(f) for f in full.inputFiles()}
+    manifest_files = {
+        _norm(r["file"]) for r in man.select("file").collect()
+    }
     if manifest_files != current:
         missing = sorted(current - manifest_files)[:3]
         extra = sorted(manifest_files - current)[:3]
@@ -913,15 +902,8 @@ def _files_for_values_any(
 ) -> list[str]:
     _, meta = _load_meta(path)
     man = _manifest_df(spark, path, meta)
-    if not meta["immutable"]:
-        full = _full_read(
-            spark, path, StructType.fromJson(meta["schema"])
-        )
-        current = {_norm(f) for f in full.inputFiles()}
-        recorded = {
-            _norm(r["file"]) for r in man.select("file").collect()
-        }
-        _check_fresh(recorded, current, path)
+    full = _full_read(spark, path, StructType.fromJson(meta["schema"]))
+    _check_fresh(man, full, path)
     cand = _candidate_files_df(spark, man, meta, col, values)
     return [
         r["file"] for r in cand.select("file").distinct().collect()
@@ -1064,11 +1046,6 @@ def append_deletion_vectors(
     re-run the delete (it is idempotent — already-tombstoned rows are
     invisible to the classification scan)."""
     epoch, meta = _load_meta(path)
-    if meta["immutable"]:
-        raise ValueError(
-            f"{path} is an immutable published snapshot — publish a "
-            "new version without the rows instead"
-        )
     root = _manifest_root(path)
     new_epoch = _claim_epoch(root, epoch + 1)
     edir = _epoch_dir(root, new_epoch)
@@ -1331,29 +1308,16 @@ def apply_deletion_vectors_df(
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Manifest-aware FULL scan: pinned schema, freshness check on
-    mutable dirs, and deletion-vector application — the reader every
+    """Manifest-aware FULL scan: pinned schema, freshness check, and
+    deletion-vector application — the reader every
     query should use once a table may carry DVs (a bare
     ``spark.read.parquet`` cannot see tombstones; that is the
     documented trade of deferring the rewrite)."""
     _, meta = _load_meta(path)
     schema = StructType.fromJson(meta["schema"])
-    if not meta["immutable"]:
-        full = _full_read(spark, path, schema)
-        if full.schema != schema and not _schema_compatible(
-            spark, path, schema, sampled=full.schema
-        ):
-            raise ValueError(
-                f"table schema under {path} no longer matches the "
-                "manifest's pinned schema — rebuild with "
-                "write_stats_manifest"
-            )
-        man = _manifest_df(spark, path, meta)
-        current = {_norm(f) for f in full.inputFiles()}
-        recorded = {
-            _norm(r["file"]) for r in man.select("file").collect()
-        }
-        _check_fresh(recorded, current, path)
+    full = _full_read(spark, path, schema)
+    _check_schema(spark, path, schema, full)
+    _check_fresh(_manifest_df(spark, path, meta), full, path)
     from pyspark.errors import AnalysisException
 
     try:
@@ -1505,11 +1469,8 @@ def pruned_scan(
     ``files_for_values``, so a 10k-id list keeps a constant plan size
     instead of an OR-of-ANDs tree that breaks codegen.
 
-    Freshness: manifests over ``immutable`` snapshots are trusted
-    outright (no directory listing — the schema comes from the
-    manifest meta, so NO data-dir I/O happens at planning time);
-    mutable dirs verify the listing against the manifest and fail
-    loudly on drift.
+    Freshness: the data-dir listing is verified against the manifest
+    and drift fails loudly.
     """
     bounds = dict(bounds or {})
     points = dict(points or {})
@@ -1520,22 +1481,9 @@ def pruned_scan(
     _, meta = _load_meta(path)
     man = _manifest_df(spark, path, meta)
     schema = StructType.fromJson(meta["schema"])
-    if not meta["immutable"]:
-        full = _full_read(spark, path, schema)
-        if full.schema != schema and not _schema_compatible(
-            spark, path, schema, sampled=full.schema
-        ):
-            raise ValueError(
-                f"table schema under {path} no longer matches the "
-                "manifest's pinned schema — partition-column type "
-                "drift or a schema change; rebuild with "
-                "write_stats_manifest"
-            )
-        current = {_norm(f) for f in full.inputFiles()}
-        recorded = {
-            _norm(r["file"]) for r in man.select("file").collect()
-        }
-        _check_fresh(recorded, current, path)
+    full = _full_read(spark, path, schema)
+    _check_schema(spark, path, schema, full)
+    _check_fresh(man, full, path)
     files = [
         r["file"]
         for r in _planned_files(spark, man, meta, bounds, points)

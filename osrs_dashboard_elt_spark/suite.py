@@ -7848,8 +7848,8 @@ def q_cdc_merge(spark, sf_dir):
     change batch (delete every 13th customer, bump+retag every 7th,
     insert shifted clones of every 11th) applied to the customer
     snapshot in ONE full-outer join + decision projection — the
-    format-agnostic warehouse MERGE, composable with
-    publish_versioned for an ACID-ish upsert with time travel."""
+    format-agnostic warehouse MERGE, whose result publishes as a
+    whole snapshot (``io.publish_blue_green``)."""
     from .operators.cdc import merge_apply
 
     cust = _t(spark, sf_dir, "customer")
@@ -8237,10 +8237,7 @@ def q_time_travel(spark, sf_dir):
     would grow the plan per mutation and clamp at zero mid-chain,
     mis-reconstructing insert-then-delete histories).  No retained
     data files, no snapshot copies: O(changes) extra storage.  The
-    immutable-snapshot form of time travel
-    (``maintenance.publish_versioned``/``read_version``) is tested in
-    tests/test_maintenance.py; this is the mutable-table complement.
-    The oracle proves the rewound state equals base-minus-the-seq-1
+    oracle proves the rewound state equals base-minus-the-seq-1
     delete exactly."""
     from .sources.change_feed import read_table_as_of
 
@@ -8740,8 +8737,8 @@ def q_ivm_segmented(spark, sf_dir):
     """SEGMENTED incremental view maintenance (round-9 judge ask #2,
     sources/ivm.py::*_segmented): refreshes write ONLY the affected
     groups' new state rows into a fresh segment — O(changes) in WRITE
-    as well as compute (the versioned mode rewrites the full state per
-    refresh) — and the algebra widens past count/sum: MIN/MAX fold
+    as well as compute (a full-state refresh would rewrite every
+    group) — and the algebra widens past count/sum: MIN/MAX fold
     inserts and REBUILD retraction-dirty groups from a group-targeted
     scan, AVG derives at read, and DISTINCT rides per-group HLL
     register maps (MAX-merge on insert, rebuild on delete) whose

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from osrs_dashboard_elt_spark.sources.maintenance import (
@@ -192,20 +191,6 @@ def test_dv_redelete_is_noop_and_survives_refresh(spark, tmp_path):
     assert got.filter("doc_id = 8").count() == 0
 
 
-def test_dv_refuses_immutable_snapshot(spark, tmp_path):
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        publish_versioned,
-    )
-
-    root = str(tmp_path / "pub")
-    df = spark.range(10).select(F.col("id").alias("doc_id"))
-    v = publish_versioned(df, root, stats_cols=["doc_id"])
-    with pytest.raises(ValueError, match="immutable"):
-        targeted_delete(
-            spark, f"{root}/v{v}", "doc_id", [1], mode="dv"
-        )
-
-
 def test_full_rebuild_carries_dv_forward(spark, tmp_path):
     """write_stats_manifest over a dv-carrying table must carry the
     tombstones into the new meta — a rebuild that dropped meta['dv']
@@ -221,25 +206,6 @@ def test_full_rebuild_carries_dv_forward(spark, tmp_path):
     assert got.count() == 998
     assert got.filter("doc_id IN (10, 20)").count() == 0
     assert pruned_scan(spark, path, points={"doc_id": 10}).count() == 0
-
-
-def test_compact_files_respects_dv(spark, tmp_path):
-    """Compaction of a dv-carrying dir must route through the DV-aware
-    reader: the published snapshot physically excludes tombstoned
-    rows (and needs no DV of its own)."""
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        compact_files,
-        read_version,
-    )
-
-    path = str(tmp_path / "t")
-    _tbl(spark, path, n=1000, files=4)
-    targeted_delete(spark, path, "doc_id", [10, 20], mode="dv")
-    dest = str(tmp_path / "compacted")
-    v = compact_files(spark, path, dest, stats_cols=["doc_id"])
-    snap = read_version(spark, dest, v)
-    assert snap.count() == 998
-    assert snap.filter("doc_id IN (10, 20)").count() == 0
 
 
 def test_compaction_clears_dv_entries_of_removed_files(

@@ -6,14 +6,30 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
+from osrs_dashboard_elt_spark.literals import literal_frame
 from osrs_dashboard_elt_spark.operators.kmeans import (
     kmeans_assignments,
     kmeans_fit,
     kmeans_init,
     kmeans_iterate,
 )
+
+
+def _float32_vecs(spark, rows):
+    """``(vec_id, [x, ...])`` rows as an ``array<float>`` column, built
+    in the JVM (a VALUES relation) so the fits' jobs start no Python
+    worker; every x must be float32-exact."""
+    dim = len(rows[0][1])
+    cols = [f"e{d}" for d in range(dim)]
+    flat = literal_frame(
+        spark,
+        [(i, *v) for i, v in rows],
+        "vec_id bigint, " + ", ".join(f"{c} double" for c in cols),
+    )
+    return flat.selectExpr(
+        "vec_id", f"CAST(array({', '.join(cols)}) AS array<float>) AS embedding"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -26,7 +42,7 @@ def vecs(spark):
         for j in range(30):
             v = (np.array(center) + rng.normal(0, 0.03, 4)).astype("float32")
             rows.append((i * 100 + j, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return _float32_vecs(spark, rows)
 
 
 def _numpy_replay(vecs, k: int, n_iter: int, seed: int) -> np.ndarray:
@@ -64,12 +80,27 @@ def test_fit_is_deterministic_and_matches_numpy(spark, vecs):
 
 
 def test_two_round_fit_is_deterministic_and_matches_numpy(spark, vecs):
-    """Default-run representative of the soak-gated test above: k=3,
-    two rounds, one determinism repeat, the numpy replay."""
+    """k=3, two rounds, one determinism repeat, the numpy replay; then
+    a bit-exact replay on elements near 2^-20 in cells of 3."""
     c1 = kmeans_fit(vecs, "embedding", k=3, n_iter=2, seed=11)
     assert kmeans_fit(vecs, "embedding", k=3, n_iter=2, seed=11) == c1
     C = _numpy_replay(vecs, 3, 2, 11)
     assert float(np.abs(np.array(c1) - C).max()) < 1e-9
+
+    # Each mean must be ONE double rounding of the exact sum / n.  Here
+    # the scaled means are ~2^30 with non-terminating thirds, so a
+    # DECIMAL quotient (6 decimals of x*2^50) is coarser than a double
+    # and would change their last bits; a cell's three elements sum
+    # exactly in float64, so numpy's mean is that one rounding too.
+    u = 2.0**-20
+    tiny = _float32_vecs(spark, [
+        (0, [u, 2 * u]), (1, [1.0625 * u, 2.125 * u]),
+        (2, [1.1875 * u, 1.9375 * u]),
+        (10, [0.25 * u, 0.375 * u]), (11, [0.28125 * u, 0.3125 * u]),
+        (12, [0.3125 * u, 0.40625 * u]),
+    ])
+    got = kmeans_fit(tiny, "embedding", k=2, n_iter=2, seed=11)
+    assert got == _numpy_replay(tiny, 2, 2, 11).tolist()
 
 
 def test_empty_cell_keeps_previous_centroid(spark, vecs):

@@ -1,172 +1,9 @@
-"""Versioned publish (time travel), vacuum retention, and small-file
-compaction."""
+"""In-place small-file compaction (``compact_table``) and the
+mutation gate that serializes table rewrites."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from osrs_dashboard_elt_spark.sources.maintenance import (
-    compact_files,
-    list_versions,
-    publish_versioned,
-    read_version,
-    vacuum_versions,
-)
-
-
-def _df(spark, n, tag):
-    return spark.range(n).select(
-        F.col("id"), F.lit(tag).alias("tag")
-    )
-
-
-def test_concurrent_publishers_lose_nothing(spark, tmp_path):
-    """Two publishers racing on the same root must claim DISTINCT
-    versions and BOTH log entries must survive (a round-3 ADVICE
-    finding: the unguarded read-modify-write let the second writer
-    clobber the first's snapshot dir and drop its log entry)."""
-    import threading
-
-    root = str(tmp_path / "race")
-    publish_versioned(_df(spark, 5, "base"), root)  # v1 exists
-    results: list = [None, None]
-    errors: list = []
-    barrier = threading.Barrier(2)
-
-    def worker(i, tag):
-        try:
-            barrier.wait()
-            results[i] = publish_versioned(_df(spark, 10 + i, tag), root)
-        except Exception as exc:  # pragma: no cover - failure detail
-            errors.append(exc)
-
-    ts = [
-        threading.Thread(target=worker, args=(i, f"w{i}")) for i in range(2)
-    ]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    assert not errors, errors
-    assert sorted(results) == [2, 3]
-    log = list_versions(root)
-    assert [e["version"] for e in log] == [1, 2, 3]
-    # every entry's snapshot dir exists and reads back with its row count
-    for e in log:
-        assert read_version(spark, root, e["version"]).count() == e["rows"]
-    # stale-lock failure is loud, not a silent reset
-    open(os.path.join(root, "_versions.lock"), "w").close()
-    from osrs_dashboard_elt_spark.sources.maintenance import _log_lock
-
-    with pytest.raises(TimeoutError, match="version log lock"):
-        with _log_lock(root, timeout=0.2):
-            pass
-    os.remove(os.path.join(root, "_versions.lock"))
-
-
-def test_publish_and_time_travel(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    v1 = publish_versioned(_df(spark, 10, "a"), root, checksum_cols=["id", "tag"])
-    v2 = publish_versioned(_df(spark, 20, "b"), root, checksum_cols=["id", "tag"])
-    assert (v1, v2) == (1, 2)
-    assert read_version(spark, root).count() == 20  # head
-    old = read_version(spark, root, version=1)
-    assert old.count() == 10
-    assert old.select("tag").distinct().collect()[0][0] == "a"
-    log = list_versions(root)
-    assert [e["rows"] for e in log] == [10, 20]
-    assert all("checksum" in e for e in log)
-    # identical data -> identical checksum, different data -> different
-    v3 = publish_versioned(_df(spark, 10, "a"), root, checksum_cols=["id", "tag"])
-    log = list_versions(root)
-    assert log[2]["checksum"] == log[0]["checksum"]
-    assert log[1]["checksum"] != log[0]["checksum"]
-    assert v3 == 3
-
-
-def test_vacuum_keeps_head_and_retained(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    for i in range(4):
-        publish_versioned(_df(spark, 5 + i, f"t{i}"), root)
-    dropped = vacuum_versions(root, keep_last=2, retain={1})
-    assert dropped == [2]
-    assert {e["version"] for e in list_versions(root)} == {1, 3, 4}
-    # head still readable; vacuumed version raises with a clear message
-    assert read_version(spark, root).count() == 8
-    assert read_version(spark, root, version=1).count() == 5
-    with pytest.raises(ValueError, match="vacuumed"):
-        read_version(spark, root, version=2)
-    with pytest.raises(ValueError):
-        vacuum_versions(root, keep_last=0)
-
-
-def test_compaction_reduces_files_and_preserves_data(spark, tmp_path):
-    src = str(tmp_path / "small")
-    # 40 tiny files
-    spark.range(4000).repartition(40).write.parquet(src)
-    n_before = sum(
-        1 for f in os.listdir(src) if f.endswith(".parquet")
-    )
-    assert n_before == 40
-    dest = str(tmp_path / "compacted")
-    v = compact_files(
-        spark, src, dest, target_bytes=10 * 1024 * 1024, checksum_cols=["id"]
-    )
-    out = read_version(spark, dest, version=v)
-    vdir = os.path.join(dest, f"v{v}")
-    n_after = sum(1 for f in os.listdir(vdir) if f.endswith(".parquet"))
-    assert n_after < n_before
-    # data identical: same ids, same count
-    assert out.count() == 4000
-    assert out.agg(F.sum("id")).collect()[0][0] == sum(range(4000))
-
-
-def test_unreadable_log_raises_instead_of_resetting_history(spark, tmp_path):
-    """A transient log-read failure must NOT look like an empty table
-    — that would restart the version counter and overwrite v1."""
-    import os
-
-    root = str(tmp_path / "tbl")
-    publish_versioned(_df(spark, 5, "a"), root)
-    log = os.path.join(root, "_versions.json")
-    os.chmod(log, 0)
-    try:
-        if os.access(log, os.R_OK):  # running as root: chmod 0 is moot
-            pytest.skip("cannot revoke read permission in this environment")
-        with pytest.raises(PermissionError):
-            publish_versioned(_df(spark, 5, "b"), root)
-    finally:
-        os.chmod(log, 0o644)
-
-
-def test_cdc_merge_composes_with_versioned_publish(spark, tmp_path):
-    """The MERGE + snapshot story end-to-end: apply a change batch to
-    the current head, publish as the next version, and time-travel
-    back to the pre-merge snapshot."""
-    from osrs_dashboard_elt_spark.operators.cdc import merge_apply
-
-    root = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k BIGINT, name STRING"
-    )
-    v1 = publish_versioned(base, root, checksum_cols=["k", "name"])
-    changes = spark.createDataFrame(
-        [(2, "b2", "U"), (3, None, "D"), (4, "d", "I")],
-        "k BIGINT, name STRING, op STRING",
-    )
-    head = read_version(spark, root)
-    v2 = publish_versioned(
-        merge_apply(head, changes, ["k"]), root, checksum_cols=["k", "name"]
-    )
-    assert (v1, v2) == (1, 2)
-    now = {(r.k, r.name) for r in read_version(spark, root).collect()}
-    assert now == {(1, "a"), (2, "b2"), (4, "d")}
-    before = {(r.k, r.name) for r in read_version(spark, root, 1).collect()}
-    assert before == {(1, "a"), (2, "b"), (3, "c")}
-    # checksums recorded for both snapshots and differ
-    log = list_versions(root)
-    assert log[0]["checksum"] != log[1]["checksum"]
 
 
 # ---------------------------------------------------------------------------
@@ -233,6 +70,15 @@ def test_compact_table_packs_small_files(spark, tmp_path):
     # re-run: nothing left to pack below min_group
     res2 = compact_table(spark, path, target_bytes=1 << 20)
     assert res2["files_compacted"] == 0 or res2["files_written"] < 2
+    # a small target packs into SEVERAL files; the refreshed blooms
+    # still prune an id point read to a subset of them
+    path = _small_file_tbl(spark, tmp_path / "multi")
+    res = compact_table(spark, path, target_bytes=16 * 1024)
+    n_files = len(read_table(spark, path).inputFiles())
+    assert n_files == res["files_written"] > 1
+    got = pruned_scan(spark, path, points={"doc_id": 1717})
+    assert got.count() == 1
+    assert len(got.inputFiles()) < n_files
 
 
 def test_compact_table_leaves_big_files_untouched(spark, tmp_path):

@@ -418,3 +418,6 @@ def test_dense_scoring_stays_janino_safe(spark, all_queries):
         _members(emb, "embedding", cents, "vec_id", _checkpoint=False)
     )
     assert "transform(" in mem and "aggregate(" in mem, mem[:2000]
+    # the norm folds once per row, not once per element of the
+    # unit-scale lambda (CollapseProject inlines a norm column there)
+    assert "/ SQRT(aggregate(" not in mem, mem[:2000]

@@ -92,23 +92,6 @@ def test_stale_manifest_fails_loudly(spark, zpath, tmp_path):
     assert _rows(got) == _rows(want)
 
 
-def test_publish_versioned_carries_stats(spark, tmp_path):
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        publish_versioned,
-        read_version,
-    )
-
-    root = str(tmp_path / "pub")
-    v = publish_versioned(_grid(spark), root, stats_cols=["x"])
-    snap = f"{root}/v{v}"
-    # the snapshot read ignores the underscore manifest dir
-    assert read_version(spark, root, v).count() == 64 * 64
-    bounds = {"x": (0, 0)}
-    pruned = pruned_scan(spark, snap, bounds)
-    full = read_version(spark, root, v).filter("x = 0")
-    assert _rows(pruned) == _rows(full)
-
-
 def test_unbounded_bound_is_rejected(spark, zpath):
     """(None, None) adds no row predicate but would still skip
     all-NULL-stats files — must be rejected, not silently lossy."""
@@ -162,7 +145,7 @@ def test_incremental_refresh_stats_manifest(spark, tmp_path):
         refresh_stats_manifest(spark, compacted, ["y"])
 
 
-# ---- round 7: blooms, immutable handshake, partitioned dirs, swaps ----
+# ---- round 7: blooms, partitioned dirs, swaps ----
 
 
 def _ids(spark, n=4096, files=8):
@@ -240,33 +223,6 @@ def test_point_rejects_unknown_and_null(spark, bloom_path):
         pruned_scan(
             spark, bloom_path, bounds={"tag": (1, 2)}, points={"tag": 1}
         )
-
-
-def test_immutable_manifest_skips_listing(spark, tmp_path):
-    """The publish_versioned handshake: the snapshot manifest is
-    trusted outright, so a probe performs NO data-dir listing — proven
-    by dropping an unregistered file into the dir (the mutable path
-    raises stale; the immutable path never looks)."""
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        publish_versioned,
-    )
-
-    root = str(tmp_path / "pub")
-    v = publish_versioned(_grid(spark), root, stats_cols=["x"])
-    snap = f"{root}/v{v}"
-    want = _rows(spark.read.parquet(snap).filter("x >= 2 AND x <= 3"))
-    # contaminate the dir (protocol violation — immutable reads must
-    # not even notice, because they never list)
-    _grid(spark).limit(5).coalesce(1).write.mode("append").parquet(snap)
-    got = pruned_scan(spark, snap, {"x": (2, 3)})
-    assert _rows(got) == want
-    # refresh on an immutable manifest is a contract violation: loud
-    from osrs_dashboard_elt_spark.sources.stats_manifest import (
-        refresh_stats_manifest,
-    )
-
-    with pytest.raises(ValueError, match="immutable"):
-        refresh_stats_manifest(spark, snap, ["x"])
 
 
 def test_mutable_manifest_still_checks_freshness(spark, tmp_path):
@@ -402,7 +358,10 @@ def test_flat_manifest_layout_is_refused(spark, tmp_path):
 
 def test_manifest_meta_format_version_is_checked(spark, tmp_path):
     """Every committed meta carries ``format_version``; a meta without
-    it, or with another value, is refused by path on read."""
+    it, or with another value, is refused by path on read.  A version-1
+    meta may mark a published snapshot as never-changing; read under
+    the version-2 rules that table would turn silently rewritable, so
+    it is refused like any other unknown layout."""
     import json
     import os
 
@@ -412,18 +371,19 @@ def test_manifest_meta_format_version_is_checked(spark, tmp_path):
     _grid(spark).repartition(4).write.parquet(path)
     write_stats_manifest(spark, path, ["x"])
     epoch, meta = sm._load_meta(path)
-    assert meta["format_version"] == sm._FORMAT_VERSION == 1
+    assert meta["format_version"] == sm._FORMAT_VERSION == 2
     meta_path = os.path.join(
         sm._epoch_dir(sm._manifest_root(path), epoch), sm._META
     )
     for bad, found in (
         ({k: v for k, v in meta.items() if k != "format_version"}, "none"),
-        (dict(meta, format_version=2), "2"),
+        (dict(meta, format_version=1), "1"),
+        (dict(meta, format_version=3), "3"),
     ):
         with open(meta_path, "w") as f:
             json.dump(bad, f)
         with pytest.raises(
-            ValueError, match=f"format_version {found}, expected 1"
+            ValueError, match=f"format_version {found}, expected 2"
         ) as e:
             pruned_scan(spark, path, {"x": (0, 3)})
         assert meta_path in str(e.value)
@@ -472,31 +432,6 @@ def test_partition_type_drift_raises(spark, tmp_path):
         refresh_stats_manifest(spark, path, ["v"])
     with pytest.raises(ValueError, match="schema"):
         pruned_scan(spark, path, {"v": (0, 10)})
-
-
-def test_compacted_snapshot_serves_bloom_point_reads(spark, tmp_path):
-    """compact_files -> publish_versioned carries stats AND blooms, so
-    the compacted immutable snapshot serves id point reads with zero
-    listing and file pruning in one move (the small-files cure and the
-    takedown-era archive in one publish)."""
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        compact_files,
-        read_version,
-    )
-
-    src = str(tmp_path / "small")
-    _ids(spark, 2000, 16).write.parquet(src)
-    root = str(tmp_path / "pub")
-    v = compact_files(
-        spark, src, root, target_bytes=16 * 1024,
-        stats_cols=["tag"], bloom_cols=["doc_id"],
-    )
-    snap = f"{root}/v{v}"
-    n_files = len(read_version(spark, root, v).inputFiles())
-    assert n_files > 1
-    got = pruned_scan(spark, snap, points={"doc_id": 1717})
-    assert got.count() == 1
-    assert len(got.inputFiles()) < n_files
 
 
 def test_refresh_writes_only_a_batch_segment(spark, tmp_path):

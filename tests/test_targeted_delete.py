@@ -106,18 +106,6 @@ def test_null_rows_survive(spark, tmp_path):
     assert got == [(None, "keep-me"), (1, "a")]
 
 
-def test_immutable_snapshot_refuses(spark, tmp_path):
-    from osrs_dashboard_elt_spark.sources.maintenance import (
-        publish_versioned,
-    )
-
-    root = str(tmp_path / "pub")
-    df = spark.range(10).select(F.col("id").alias("doc_id"))
-    v = publish_versioned(df, root, stats_cols=["doc_id"])
-    with pytest.raises(ValueError, match="immutable"):
-        targeted_delete(spark, f"{root}/v{v}", "doc_id", [1])
-
-
 def test_stale_manifest_refuses(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _tbl(spark, path, n=100, files=2)
