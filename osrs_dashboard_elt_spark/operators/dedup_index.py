@@ -191,7 +191,16 @@ def delete_from_index(spark: SparkSession, table: str, ids) -> int:
 
 def clear_tombstones(spark: SparkSession, table: str, ids=None) -> None:
     """Explicitly re-admit tombstoned ids (``ids=None`` clears all) —
-    the only way a deleted corpus id becomes probe-visible again."""
+    the only way a deleted corpus id becomes probe-visible again.
+
+    A selective clear writes the surviving ids into the tombstone dir
+    as NEW files, then deletes the files listed before the write.
+    Every intermediate state (a crash, a failed delete, a concurrent
+    probe) is therefore a superset of the new set: a still-deleted id
+    is never re-admitted, only a cleared one may stay blocked until
+    the clear is re-run.  The survivors are read from the listed
+    files by name, never from the dir being appended to, so a
+    recompute (cache eviction, task retry) reads the same bytes."""
     import shutil
 
     path = _tombstone_path(spark, table)
@@ -200,20 +209,17 @@ def clear_tombstones(spark: SparkSession, table: str, ids=None) -> None:
     if ids is None:
         shutil.rmtree(path)
         return
-    # never overwrite the dir being read: an overwrite deletes the
-    # source files at job start, so any recompute (cache eviction,
-    # task retry) would re-read a deleted path and corrupt the set.
-    # Write the survivors to a sibling dir and swap by rename.
-    import uuid
-
-    tmp = f"{path}__swap-{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).filter(
+    old = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    if not old:
+        return
+    spark.read.parquet(*[os.path.join(path, f) for f in old]).filter(
         ~F.col("corpus_id").isin(list(ids))
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    ).coalesce(1).write.mode("append").parquet(path)
+    for f in old:
+        os.remove(os.path.join(path, f))
+        crc = os.path.join(path, f".{f}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def _without_tombstoned(

@@ -14,8 +14,8 @@ column (``insert`` / ``delete`` / ``update_preimage`` /
 create-if-absent markers and a change set becomes visible only when
 its ``_commit.json`` is atomically published, so readers never see a
 half-written delta.  Every control-plane atomic primitive goes
-through the injectable ``commitio`` backend — O_EXCL + rename on
-POSIX, conditional PUT on an object store.
+through the ``commitio`` protocol: whole-blob PUTs and conditional
+(create-if-absent) PUTs, as on an object store.
 
 Two consumers:
 
@@ -55,7 +55,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import dataio
+from . import commitio
 
 CHANGE_TYPES = (
     "insert", "delete", "update_preimage", "update_postimage",
@@ -105,8 +105,6 @@ def enable_change_feed(path: str) -> None:
     marker = os.path.join(root, _ENABLED)
     if os.path.exists(marker):
         return
-    from . import commitio
-
     commitio.publish_json(marker, {"enabled": True})
 
 
@@ -168,8 +166,6 @@ def _claim_seq(root: str) -> int:
         max(claimed) if claimed else 0,
         _seq_floor(root),
     ) + 1
-    from . import commitio
-
     return commitio.claim_slot(
         os.path.join(root, ".claim-c{:07d}"), seq
     )
@@ -259,9 +255,9 @@ def commit_changes(
     keep_subs: set[str] | None = None,
     files_info: dict | None = None,
 ) -> bool:
-    """Publish a staged change set — move its parts out of the
-    dot-staging dir (same-device renames), then atomically rename the
-    commit marker in; call AFTER the table mutation it describes
+    """Publish a staged change set — place its parts out of the
+    dot-staging dir (``commitio.place_file``), then atomically publish
+    the commit marker; call AFTER the table mutation it describes
     committed.  Idempotent: a crash mid-move is finished by the
     journal reconcile calling this again (remaining parts move, the
     marker lands last), and a re-commit of an already-committed dir
@@ -310,7 +306,7 @@ def commit_changes(
                     .strip("_.")
                     + "-"
                 )
-                dataio.place_file(
+                commitio.place_file(
                     os.path.join(dirpath, fn),
                     os.path.join(cdir, prefix + fn),
                 )
@@ -324,8 +320,6 @@ def commit_changes(
             # schema-only dir — readers would choke on it
             abort_changes(cdir)
             return False
-    from . import commitio
-
     if files_info is not None:
         commitio.publish_json(os.path.join(cdir, _FILES), files_info)
     # the commit point: one atomic blob publish
@@ -777,8 +771,6 @@ def checkpoint_feed_consumer(
     last_seq wins and drags the vacuum floor backward, the exact
     regression the monotonic contract promises to prevent (round-9
     ADVICE low)."""
-    from . import commitio
-
     cp = _consumer_path(path, name)
     os.makedirs(os.path.dirname(cp), exist_ok=True)
     with commitio.mutex(
@@ -849,8 +841,6 @@ def vacuum_change_feed(
                 "checkpoints or force=True to decommission them"
             )
     root = _changes_root(path)
-    from . import commitio
-
     victims = [
         s for s in _committed_seqs(root) if s <= keep_since_seq
     ]
@@ -952,8 +942,8 @@ def record_physical_break(path: str) -> None:
     older than the break can no longer be reverse-replayed from the
     per-seq file manifests — :func:`read_table_as_of` falls back to
     multiset arithmetic for sequence numbers at or before the break
-    floor.  Stores the latest committed seq at break time (atomic
-    tmp+rename under the mutation gate, so no concurrent writer)."""
+    floor.  Stores the latest committed seq at break time (an atomic
+    publish under the mutation gate, so no concurrent writer)."""
     if not change_feed_enabled(path):
         return
     root = _changes_root(path)
@@ -967,8 +957,6 @@ def record_physical_break(path: str) -> None:
     if head in rec["breaks"]:
         return
     rec["breaks"].append(head)
-    from . import commitio
-
     commitio.publish_json(pth, rec)
 
 
@@ -1019,8 +1007,6 @@ def record_physical_lineage(
             for g in groups
         ],
     }
-    from . import commitio
-
     # append via content-CAS, not a plain publish: vacuum's prune of
     # this blob CASes concurrently WITHOUT the mutation gate, and a
     # plain put landing inside its read-compare-write would be
@@ -1095,7 +1081,7 @@ def stream_change_feed(
 
     Works because commit order makes files appear atomically: parts
     stage under a dot-prefixed subdir every Spark listing skips, and
-    ``commit_changes`` renames them up only after the table mutation
+    ``commit_changes`` places them only after the table mutation
     committed — the stream can never observe a delta whose mutation
     aborted.  Schema is pinned to the CURRENT table schema (+
     ``_change_type``), so pre-evolution deltas read back NULL for

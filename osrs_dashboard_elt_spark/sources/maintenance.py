@@ -35,7 +35,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import dataio
+from . import commitio
 
 
 def _local(uri: str) -> str:
@@ -91,7 +91,7 @@ def _write_delete_journal(
     lineage: dict | None = None,
 ) -> None:
     """Intent record written BEFORE the first file mutation (atomic
-    tmp+rename): maps each original to its deterministic replacement
+    ``commitio`` publish): maps each original to its deterministic replacement
     (plus files the mutation will ADD, the staged change-feed dir
     with its op name, and — for dv-mode deletes, which mutate only
     the manifest — a probe of the tombstone pairs being appended) so
@@ -117,8 +117,6 @@ def _write_delete_journal(
         record["sizes"] = sizes
     if lineage:
         record["lineage"] = lineage
-    from . import commitio
-
     commitio.publish_json(jp, record)
 
 
@@ -265,7 +263,7 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
     try:
         for d in os.listdir(path):
             if d.startswith(".ins-stage-"):
-                # classic staging can only exist under the gate, so
+                # gated staging can only exist under the gate, so
                 # any survivor is a crash leftover — sweep eagerly
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
             elif d.startswith(_OCC_STAGE_PREFIX):
@@ -541,10 +539,10 @@ class _mutation_gate:
     / compaction): they share one intent journal and in-place file
     swaps, so two concurrent mutations would overwrite each other's
     journal and reconcile each other's in-flight state as crashes.
-    Create-if-absent lock blob with bounded spin (the _log_lock /
-    _commit_gate discipline, via ``commitio``): a writer that died holding it surfaces
-    as a loud timeout naming the lock file, never a silent lost
-    update.  Reentrant within the process (nested maintenance calls);
+    A ``commitio.mutex`` lease lock (the _commit_gate discipline): a
+    writer that died holding it is broken once its lease expires, a
+    live one blocks waiters into a loud timeout naming the lock file,
+    never a silent lost update.  Reentrant within the process (nested maintenance calls);
     cross-process it is a real mutex."""
 
     def __init__(self, path: str, timeout: float = 120.0) -> None:
@@ -558,8 +556,6 @@ class _mutation_gate:
         self.owned = False
 
     def __enter__(self) -> None:
-        from . import commitio
-
         if _GATE_HELD.get(self.key):
             _GATE_HELD[self.key] += 1
             return
@@ -576,7 +572,7 @@ class _mutation_gate:
         _GATE_HELD[self.key] -= 1
         if not _GATE_HELD[self.key]:
             del _GATE_HELD[self.key]
-            # forward the body's exception so a lease-mode fence
+            # forward the body's exception so a lease fence
             # discovered at release never masks it (commitio.mutex
             # raises LockFencedError only on an otherwise-clean exit)
             self._cm.__exit__(*(exc or (None, None, None)))
@@ -843,12 +839,12 @@ def _journal_and_swap(
     intent, let ``write_partials_fn(tmp_dir)`` produce one
     ``__src=<i>/`` dir per sorted partial file (plus one ``__ins/``
     dir when the mutation inserts — ``adds`` names its target files),
-    then swap replacements in with deterministic names (atomic
-    os.replace), drop originals, and move inserts in — metadata-only,
-    no jobs.  ``changes`` is the staged change-feed (dir, op) pair the
-    journal records so a crash commits/aborts the delta with the
-    mutation; ``op``/``subs`` ride the journal for the reconcile's
-    partial-completion policy.  Original sizes are captured BEFORE the
+    then place replacements at deterministic names
+    (``commitio.place_file``), drop originals, and place inserts —
+    metadata-only, no jobs.  ``changes`` is the staged change-feed
+    (dir, op) pair the journal records so a crash commits/aborts the
+    delta with the mutation; ``op``/``subs`` ride the journal for the
+    reconcile's partial-completion policy.  Original sizes are captured BEFORE the
     swap and journaled — the per-seq file manifests need the removed
     files' byte identity.  Returns (original->replacement map,
     original->pre-mutation size)."""
@@ -870,8 +866,9 @@ def _journal_and_swap(
         op=op, subs=subs, sizes=pre_sizes, lineage=lineage,
     )
     # stage INSIDE the table dir (dot-prefixed: invisible to readers):
-    # os.replace must stay same-device — /tmp is routinely a different
-    # filesystem (tmpfs) and a cross-device rename raises EXDEV.
+    # place_file links the staged file to its final name, which must
+    # stay same-device — /tmp is routinely a different filesystem
+    # (tmpfs), where it would degrade to a full copy.
     # ``staged_tmp`` = an occ mutation already staged UNGATED (the
     # long Spark jobs ran outside the gate); only the swap runs here
     tmp = staged_tmp or tempfile.mkdtemp(
@@ -881,13 +878,12 @@ def _journal_and_swap(
         if staged_tmp is None and (partials or adds):
             write_partials_fn(tmp)
         # data-plane fence point: the Spark write above is the LONG
-        # window a paused holder sleeps through; in lease mode,
-        # re-verify the lease before the first irreversible
-        # os.replace so a fenced straggler aborts here (its staged
-        # tmp dir is swept, its journal reconciled as a crash)
-        # instead of clobbering the thief's in-flight swaps.  The
-        # publishes are fenced automatically; raw renames are not.
-        from . import commitio
+        # window a paused holder sleeps through; re-verify the lease
+        # before the first irreversible placement so a fenced
+        # straggler aborts here (its staged tmp dir is swept, its
+        # journal reconciled as a crash) instead of clobbering the
+        # thief's in-flight swaps.  The publishes are fenced
+        # automatically; data-file placements and removals are not.
         from .stats_manifest import _manifest_root
 
         fence = os.path.join(_manifest_root(path), "x")
@@ -899,13 +895,11 @@ def _journal_and_swap(
                 if fn.endswith(".parquet")
             )
             # per-swap fence: one tiny local read per file, and only
-            # when a lease is actually held (classic mode early-outs)
+            # when this thread holds a lease (otherwise it early-outs)
             commitio.fence_point(fence)
-            target = rewrites[_local(f)]
-            if os.path.exists(target):  # stale orphan from a crash
-                os.remove(target)
-            dataio.place_file(
-                os.path.join(tmp, f"__src={i}", part), target
+            # place_file overwrites a stale orphan from a crash
+            commitio.place_file(
+                os.path.join(tmp, f"__src={i}", part), rewrites[_local(f)]
             )
             os.remove(_local(f))
         if adds:
@@ -921,11 +915,9 @@ def _journal_and_swap(
                 )
             for part, target in zip(ins_parts, adds):
                 commitio.fence_point(fence)
-                # a NEW partition's dir may not exist yet
-                os.makedirs(os.path.dirname(target), exist_ok=True)
-                if os.path.exists(target):  # stale orphan from a crash
-                    os.remove(target)
-                dataio.place_file(
+                # place_file creates a NEW partition's dir and
+                # overwrites a stale orphan from a crash
+                commitio.place_file(
                     os.path.join(tmp, "__ins", part), target
                 )
     finally:
@@ -990,9 +982,9 @@ def targeted_delete(
        so each original maps to exactly one replacement part-file
        (``repartition(src) + partitionBy(src)``) — the shuffle carries
        only the kept rows of partial files, never the table.
-    3. A driver-side metadata loop swaps replacements in (atomic
-       ``os.replace``) and drops originals — rename/unlink only, no
-       jobs.  A 5,000-file takedown costs the same two jobs as a
+    3. A driver-side metadata loop places replacements
+       (``commitio.place_file``) and drops originals — link/unlink
+       only, no jobs.  A 5,000-file takedown costs the same two jobs as a
        5-file one (the serial per-file form ran ~2 jobs per file;
        ``serial=True`` keeps it as the measurement baseline —
        SCALE.md).
@@ -1442,7 +1434,8 @@ def apply_deletion_vectors(
 
     Same O(1)-jobs shape as the batched delete: one physical-count
     scan + one live-count scan classify the cited files, one rewrite
-    job handles all partials, swaps are journaled metadata renames.
+    job handles all partials, swaps are journaled metadata-only
+    placements.
 
     Concurrency + drift safety: the clear drops ONLY the sidecar
     segments this compaction snapshotted, so tombstones appended by a
@@ -1667,7 +1660,7 @@ def _prestage_inserts(
 ) -> tuple[str, list[str], list[str]]:
     """Write the insert set into a dot-prefixed staging dir INSIDE the
     table (invisible to every reader; same-device for the final
-    rename) routed by ``partitionBy`` when the table is
+    placement) routed by ``partitionBy`` when the table is
     hive-partitioned, and derive the (staged file, final target)
     lists.  Using the writer's own partition dirs gives the correct
     hive value encoding for free — no driver-side re-implementation
@@ -1808,7 +1801,7 @@ def _table_append_impl(
         ins = os.path.join(tmp, "__ins")
         os.makedirs(ins, exist_ok=True)
         for i, sf in enumerate(staged_files):
-            dataio.place_file(sf, os.path.join(ins, f"{i:07d}.parquet"))
+            commitio.place_file(sf, os.path.join(ins, f"{i:07d}.parquet"))
 
     def _commit() -> dict:
         _journal_and_swap(
@@ -2372,7 +2365,7 @@ def _targeted_upsert_impl(
             ins = os.path.join(tmp, "__ins")
             os.makedirs(ins, exist_ok=True)
             for i, sf in enumerate(ins_staged):
-                dataio.place_file(
+                commitio.place_file(
                     sf, os.path.join(ins, f"{i:07d}.parquet")
                 )
 
@@ -2511,7 +2504,7 @@ def compact_table(
     Execution is O(1) Spark jobs: ONE rewrite job shuffled by group id
     writes every group's output (``repartition(groups) +
     partitionBy``), swaps ride the shared intent journal with
-    deterministic group names, and originals drop as metadata renames.
+    deterministic group names, and originals drop as metadata unlinks.
     ``sort_cols`` orders rows within each output file (clustering on
     write — pair with z-order keys so min/max stats stay tight after
     compaction).
@@ -2684,7 +2677,7 @@ def _compact_table_impl(
                 for fn in os.listdir(gdir)
                 if fn.endswith(".parquet")
             )
-            dataio.place_file(
+            commitio.place_file(
                 os.path.join(gdir, part),
                 os.path.join(ins, f"{j:07d}.parquet"),
             )

@@ -37,9 +37,9 @@ a manifest refresh).
 
 Commit protocol: each manifest write lands in a fresh epoch dir
 (``_stats_manifest/m0000001/...``) and becomes visible only when its
-``_meta.json`` is atomically renamed into place — readers always see a
-complete manifest (never the half-written or deleted-mid-swap states a
-delete-then-rename would expose).  An epoch's meta names the live
+``_meta.json`` is atomically published (``commitio``) — readers always
+see a complete manifest (never the half-written or deleted-mid-swap
+states a delete-then-write would expose).  An epoch's meta names the live
 SEGMENT dirs (each holding some files' rows) plus tombstoned file
 names: a refresh appends one O(batch) segment instead of rewriting the
 world, and folds to a single segment when the segment/tombstone bounds
@@ -218,8 +218,8 @@ def has_stats_manifest(path: str) -> bool:
 
 def _claim_epoch(root: str, start: int) -> int:
     """Claim the next epoch number with a create-if-absent marker
-    (``commitio.claim_slot`` — O_EXCL on POSIX, conditional PUT on an
-    object store) so concurrent writers get distinct dirs."""
+    (``commitio.claim_slot`` — one conditional PUT per probe) so
+    concurrent writers get distinct dirs."""
     from . import commitio
 
     os.makedirs(root, exist_ok=True)
@@ -240,8 +240,8 @@ def _commit_gate(root: str, timeout: float = 30.0):
     """Short mutex serializing the check-parent + publish-meta
     critical section (without it, two refreshers could both pass the
     lineage check and the second would still orphan the first) —
-    ``commitio.mutex``: claim-blob spin with a loud bounded timeout,
-    O_EXCL on POSIX / conditional PUT on an object store."""
+    ``commitio.mutex``: a lease lock on a conditional-PUT claim blob
+    with a loud bounded timeout."""
     from . import commitio
 
     return commitio.mutex(
@@ -251,7 +251,7 @@ def _commit_gate(root: str, timeout: float = 30.0):
 
 
 def _commit_epoch(root: str, epoch: int, meta: dict) -> None:
-    """Atomically publish the epoch (write-temp + rename of its meta —
+    """Atomically publish the epoch (one whole-blob PUT of its meta —
     the commit point, and the one write point, so every meta carries
     this module's ``format_version``), then vacuum epochs not
     referenced by the last ``keep_metas`` committed metas (kept so an
@@ -267,8 +267,8 @@ def _commit_epoch(root: str, epoch: int, meta: dict) -> None:
     writer interleaved, and committing a meta computed from the old
     head would silently omit the interleaved segment from the live
     set (caught only later by the staleness check, with a full
-    rebuild as the only recovery).  The check + rename run under a
-    short O_EXCL gate so two same-parent writers serialize; the loser
+    rebuild as the only recovery).  The check + publish run under a
+    short lease gate so two same-parent writers serialize; the loser
     raises :class:`ManifestCommitConflict` and
     ``refresh_stats_manifest`` retries it from the new head.  Metas
     without ``parent_epoch`` (full builds — they rebuild from the

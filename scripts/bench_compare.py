@@ -29,9 +29,12 @@ attribution imports the suite module but never starts Spark.
 from __future__ import annotations
 
 import json
+import os
 import re
 import subprocess
 import sys
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def load(path: str) -> dict[str, float]:
@@ -43,7 +46,7 @@ def load(path: str) -> dict[str, float]:
 def _touched_files(ref: str) -> set[str]:
     out = subprocess.run(
         ["git", "diff", "--name-only", ref, "--"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=_REPO,
     )
     return {
         line.rsplit("/", 1)[-1]
@@ -60,7 +63,7 @@ def _suite_changed_lines(ref: str) -> set[int]:
     out = subprocess.run(
         ["git", "diff", "-U0", ref, "--",
          "osrs_dashboard_elt_spark/suite.py"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=_REPO,
     )
     lines: set[int] = set()
     for m in re.finditer(
@@ -79,7 +82,7 @@ def _query_modules(name: str, suite_lines: set[int]) -> set[str]:
     OWN function body overlaps the changed suite lines."""
     import inspect
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     from osrs_dashboard_elt_spark import suite
 
     fn = suite.QUERIES.get(name)

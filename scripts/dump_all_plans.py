@@ -15,7 +15,8 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF_DIR", "/root/testdata/sf0.001")
 
@@ -24,7 +25,7 @@ def main() -> None:
     rnd = sys.argv[1] if len(sys.argv) > 1 else "r12"
     tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
-    outdir = f"/root/repo/plans/{rnd}"
+    outdir = os.path.join(_REPO, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
     from osrs_dashboard_elt_spark.session import get_spark

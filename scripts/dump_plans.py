@@ -5,9 +5,11 @@ the suite: ``python scripts/dump_plans.py``."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -76,7 +78,7 @@ def main() -> None:
         out.append(plan.rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
 

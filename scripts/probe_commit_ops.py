@@ -1,11 +1,13 @@
-"""Probe: control-plane commit operations per mutation kind over the
-object-store backend (sources/commitio.py, round-9 judge ask #1).
+"""Probe: commit operations per mutation kind over the object-store
+commit protocol (sources/commitio.py).
 
 On S3-class storage each conditional PUT / PUT / DELETE is a network
 round trip (~10-50 ms) where POSIX paid ~0.1 ms for a local rename —
 so the number that matters at 100 TB is OPS PER MUTATION, not
 seconds.  This counts them with the ConditionalPutBackend's op
-counters for each mutation kind at a fixed table size.
+counters for each mutation kind at a fixed table size; ``data_put``
+is the data files each mutation lands (every one a PUT, zero
+renames).
 
 Usage: python scripts/probe_commit_ops.py
 """
@@ -18,7 +20,7 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -44,9 +46,7 @@ def main() -> None:
     base = tempfile.mkdtemp(prefix="commit_ops_")
     path = os.path.join(base, "tbl")
     backend = commitio.ConditionalPutBackend()
-    from osrs_dashboard_elt_spark.sources import dataio
-
-    with commitio.use_backend(backend), dataio.use_mode("no_rename"):
+    with commitio.use_backend(backend):
         spark.range(100_000).select(
             F.col("id").alias("doc_id"),
             (F.col("id") % 97).alias("grp"),
@@ -59,19 +59,12 @@ def main() -> None:
         enable_change_feed(path)
 
         def snap():
-            s = dict(backend.ops)
-            # data-plane ops ride the same table: in no_rename mode
-            # every staged parquet lands via one PUT, zero renames —
-            # reported per mutation alongside the control-plane ops
-            s["data_put"] = dataio.OPS["put"]
-            s["data_replace"] = dataio.OPS["replace"]
-            return s
+            return dict(backend.ops)
 
         def diff(b, a):
             return {k: a[k] - b[k] for k in a if a[k] - b[k]}
 
-        out = {"op": "commit_ops", "backend": backend.name,
-               "data_plane": dataio.mode()}
+        out = {"op": "commit_ops", "backend": backend.name}
         b0 = snap()
         table_append(
             spark, path,

@@ -19,7 +19,7 @@ still commit contiguous seqs with exact rows/as-of/view.
 Usage:
   python scripts/probe_cross_process.py [batches_per_worker] [occ]
   python scripts/probe_cross_process.py worker <table> <view|-> \
-      <n> <worker_id> <classic|occ>            (internal)
+      <n> <worker_id> <gated|occ>            (internal)
 """
 
 from __future__ import annotations
@@ -32,11 +32,11 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def worker(
-    table: str, view: str, n: int, wid: int, mode: str = "classic"
+    table: str, view: str, n: int, wid: int, mode: str = "gated"
 ) -> None:
     from pyspark.sql import functions as F  # noqa: F401
 
@@ -67,7 +67,7 @@ def worker(
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "occ"]
-    mode = "occ" if "occ" in sys.argv[1:] else "classic"
+    mode = "occ" if "occ" in sys.argv[1:] else "gated"
     n = int(args[0]) if args else 5
     from pyspark.sql import functions as F
 
@@ -182,7 +182,7 @@ if __name__ == "__main__":
         worker(
             sys.argv[2], sys.argv[3], int(sys.argv[4]),
             int(sys.argv[5]),
-            sys.argv[6] if len(sys.argv) > 6 else "classic",
+            sys.argv[6] if len(sys.argv) > 6 else "gated",
         )
     else:
         main()

@@ -18,11 +18,12 @@ Usage: python scripts/probe_targeted_delete.py [max_files]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -42,13 +42,14 @@ Raw messages are synthesized deterministically from the events table
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession

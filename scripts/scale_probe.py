@@ -28,11 +28,12 @@ the t(max)/t(1) ratio per operator.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -19,7 +19,7 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # override with SPARK_GRAFT_ORACLE_SF_DIR to probe that no query has
 # sf-bound constants (e.g. sf0.001)

@@ -649,13 +649,13 @@ def test_partial_delete_crash_commits_completed_sub_deltas(
     path = str(tmp_path / "tbl")
     _mk_feed_tbl(spark, path)
     targets = [1, 99, 250, 333]  # spread over >= 2 files
-    # inject at the data-plane seam (both rename and no_rename modes
-    # flow through place_file): the 2nd replacement PLACEMENT crashes,
+    # inject at the data-plane seam (every data file lands through
+    # place_file): the 2nd replacement PLACEMENT crashes,
     # so file 1 completed (replacement live, original gone) and file
     # 2 never started — the exact partial state the reconcile splits
-    from osrs_dashboard_elt_spark.sources import dataio as _dio
+    from osrs_dashboard_elt_spark.sources import commitio
 
-    real_place = _dio.place_file
+    real_place = commitio.place_file
     state = {"placed": 0}
 
     def crashing_place(src, dst):
@@ -665,10 +665,10 @@ def test_partial_delete_crash_commits_completed_sub_deltas(
                 raise RuntimeError("simulated crash mid-swap")
         return real_place(src, dst)
 
-    monkeypatch.setattr(_dio, "place_file", crashing_place)
+    monkeypatch.setattr(commitio, "place_file", crashing_place)
     with pytest.raises(RuntimeError, match="simulated crash"):
         targeted_delete(spark, path, "doc_id", targets)
-    monkeypatch.setattr(_dio, "place_file", real_place)
+    monkeypatch.setattr(commitio, "place_file", real_place)
     # nothing committed yet (the mutation never reached its commit)
     assert read_change_feed(spark, path).count() == 0
     # the retry reconciles: the completed file's sub-delta commits,
@@ -730,12 +730,12 @@ def test_partial_upsert_crash_rolls_back_landed_inserts(
         [(0, 4, 9.0), (0, 1000, 2.0), (1, 1001, 3.0)],
         "day long, doc_id long, amount decimal(18,2)",
     )
-    # inject at the data-plane seam (works in rename AND no_rename
-    # modes): the 2nd insert PLACEMENT at its final part-ups name
+    # inject at the data-plane seam (every data file lands through
+    # place_file): the 2nd insert PLACEMENT at its final part-ups name
     # crashes — one insert landed, one didn't
-    from osrs_dashboard_elt_spark.sources import dataio as _dio
+    from osrs_dashboard_elt_spark.sources import commitio
 
-    real_place = _dio.place_file
+    real_place = commitio.place_file
     state = {"ins": 0}
 
     def crashing_place(src, dst):
@@ -745,10 +745,10 @@ def test_partial_upsert_crash_rolls_back_landed_inserts(
                 raise RuntimeError("simulated crash mid-insert")
         return real_place(src, dst)
 
-    monkeypatch.setattr(_dio, "place_file", crashing_place)
+    monkeypatch.setattr(commitio, "place_file", crashing_place)
     with pytest.raises(RuntimeError, match="simulated crash"):
         targeted_upsert(spark, path, "doc_id", ups)
-    monkeypatch.setattr(_dio, "place_file", real_place)
+    monkeypatch.setattr(commitio, "place_file", real_place)
     # retry completes; the landed insert was rolled back first
     targeted_upsert(spark, path, "doc_id", ups)
     got = read_table(spark, path)
@@ -939,10 +939,11 @@ def test_checkpoint_feed_consumer_concurrent_monotonic(
     read-compare-write — two concurrent checkpointers sharing a
     consumer name could interleave so the LOWER last_seq won,
     dragging the vacuum floor backward.  Writes are now serialized by
-    a per-consumer O_EXCL lock; hammering from many threads must end
+    a per-consumer lease lock; hammering from many threads must end
     at the maximum seq, and a held lock times out loudly."""
     import threading
 
+    from osrs_dashboard_elt_spark.sources import commitio
     from osrs_dashboard_elt_spark.sources.change_feed import (
         _consumer_path,
         checkpoint_feed_consumer,
@@ -978,10 +979,11 @@ def test_checkpoint_feed_consumer_concurrent_monotonic(
     # replay cannot regress
     checkpoint_feed_consumer(path, "sync", 5)
     assert feed_consumers(path)["sync"] == 200
-    # a crashed holder surfaces as a loud timeout naming the lock
+    # a holder whose lease has not expired surfaces as a loud timeout
+    # naming the lock
     lock = _consumer_path(path, "sync") + ".lock"
-    with open(lock, "w"):
-        pass
+    with open(lock, "wb") as f:
+        f.write(commitio._lease_blob("99999:foreign", 1, 3600.0))
     with pytest.raises(TimeoutError, match="checkpoint lock"):
         checkpoint_feed_consumer(path, "sync", 300, timeout=0.2)
     os.remove(lock)
@@ -1551,8 +1553,10 @@ def test_wedged_vacuum_lock_destroys_nothing(spark, tmp_path,
     targeted_delete(spark, path, "doc_id", [1])   # seq 1
     targeted_delete(spark, path, "doc_id", [2])   # seq 2
     root = cf._changes_root(path)
+    # a vacuum that crashed holding the lock less than a lease ago
     assert commitio.try_claim(
-        os.path.join(root, ".vacuum.lock"), b"crashed-vacuum")
+        os.path.join(root, ".vacuum.lock"),
+        commitio._lease_blob("99999:crashed-vacuum", 1, 3600.0))
     monkeypatch.setattr(cf, "_VACUUM_LOCK_TIMEOUT", 0.3)
     with pytest.raises(TimeoutError, match="vacuum metadata lock"):
         vacuum_change_feed(path, keep_since_seq=2)

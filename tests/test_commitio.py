@@ -1,11 +1,9 @@
-"""Injectable commit protocol (sources/commitio.py, round-9 judge ask
-#1): every control-plane atomic primitive — mutation gate, seq/epoch/
-version claims, commit markers, journals, checkpoints — flows through
-a backend interface whose POSIX implementation keeps the historical
-O_EXCL/rename semantics and whose ConditionalPutBackend provides
-object-store semantics (atomic whole-object PUT + server-side
-conditional create, NO rename primitive).  The race/crash guarantees
-must hold identically over both."""
+"""The commit protocol (sources/commitio.py): every control-plane
+atomic primitive — mutation gate, seq/epoch claims, commit markers,
+journals, checkpoints — flows through a backend with object-store
+semantics (atomic whole-object PUT + server-side conditional create,
+NO rename primitive), and every lock is a lease.  The race/crash
+guarantees must hold over it."""
 
 from __future__ import annotations
 
@@ -19,15 +17,13 @@ from pyspark.sql import functions as F
 from osrs_dashboard_elt_spark.sources import commitio
 from osrs_dashboard_elt_spark.sources.commitio import (
     ConditionalPutBackend,
-    PosixBackend,
 )
 
-BACKENDS = [PosixBackend, ConditionalPutBackend]
 
-
-@pytest.fixture(params=BACKENDS, ids=lambda b: b.name)
-def backend(request):
-    b = request.param()
+@pytest.fixture
+def backend():
+    """A fresh backend (fresh op counters) for one test."""
+    b = ConditionalPutBackend()
     with commitio.use_backend(b):
         yield b
 
@@ -42,8 +38,8 @@ def test_put_is_atomic_publish(backend, tmp_path):
 
 def test_put_if_absent_single_winner(backend, tmp_path):
     """N threads race one claim blob: exactly one wins — the
-    guarantee every seq/epoch/version claim and every lock builds
-    on, O_EXCL on POSIX and a conditional PUT on the object store."""
+    guarantee every seq/epoch claim and every lock builds on — a
+    conditional PUT on the object store."""
     p = str(tmp_path / "claim")
     wins = []
 
@@ -84,30 +80,50 @@ def test_claim_slot_concurrent_distinct(backend, tmp_path):
 
 
 def test_mutex_times_out_loudly(backend, tmp_path):
+    """A waiter blocked by a live (heartbeating) holder times out
+    loudly naming the lock blob; once the holder leaves, the lock is
+    free and a clean release leaves no blob behind."""
     p = str(tmp_path / "x.lock")
-    assert commitio.try_claim(p)  # a crashed holder
-    with pytest.raises(TimeoutError, match="x.lock"):
-        with commitio.mutex(p, 0.2, "test lock"):
-            pass  # pragma: no cover
-    commitio.release(p)
+    with commitio.mutex(p, 0.2, "holder"):
+        with pytest.raises(TimeoutError, match="x.lock"):
+            with commitio.mutex(p, 0.2, "test lock"):
+                pass  # pragma: no cover
+    assert not os.path.exists(p)
     with commitio.mutex(p, 0.2, "test lock"):
         assert os.path.exists(p)
     assert not os.path.exists(p)
+    with pytest.raises(ValueError, match="positive"):
+        with commitio.mutex(p, timeout=0.2, what="t", lease=-1.0):
+            pass  # pragma: no cover
 
 
-def test_no_rename_reaches_conditional_store(tmp_path, monkeypatch):
+def test_non_lease_lock_blob_is_refused(backend, tmp_path):
+    """Every lock blob is a lease record written whole by the claim
+    link.  Anything else (an empty blob, a bare pid) is a layout this
+    code does not know: the waiter refuses it naming the path instead
+    of guessing whether its holder is alive."""
+    for i, junk in enumerate((b"", b"12345", b'{"holder": "x"}')):
+        p = str(tmp_path / f"junk{i}.lock")
+        assert commitio.try_claim(p, junk)
+        with pytest.raises(ValueError, match=f"junk{i}.lock"):
+            with commitio.mutex(p, timeout=5.0, what="t"):
+                pass  # pragma: no cover
+        # refused, not broken: the blob is left for a human
+        with open(p, "rb") as f:
+            assert f.read() == junk
+
+
+def test_no_rename_reaches_conditional_store(backend, tmp_path):
     """The object-store backend must never be handed an app-level
     rename: its own put() may stage internally, but after a publish
     the blob is complete and no caller-side os.replace happened on
     the final path."""
-    b = ConditionalPutBackend()
-    with commitio.use_backend(b):
-        p = str(tmp_path / "m.json")
-        commitio.publish_json(p, {"a": 1})
-        assert b.ops["put"] == 1
-        assert commitio.try_claim(str(tmp_path / "c")) is True
-        assert commitio.try_claim(str(tmp_path / "c")) is False
-        assert b.ops["cond_put"] == 2
+    p = str(tmp_path / "m.json")
+    commitio.publish_json(p, {"a": 1})
+    assert backend.ops["put"] == 1
+    assert commitio.try_claim(str(tmp_path / "c")) is True
+    assert commitio.try_claim(str(tmp_path / "c")) is False
+    assert backend.ops["cond_put"] == 2
 
 
 # ---------------------------------------------------------------------------
@@ -135,11 +151,15 @@ def _mk_tbl(spark, path, n=200, files=2):
     enable_change_feed(path)
 
 
-def test_mutation_family_over_object_store(spark, tmp_path):
+def test_mutation_family_over_object_store(
+    spark, tmp_path, no_parquet_renames
+):
     """delete / upsert / append / compact / dv delete / time travel —
     the whole mutation tier — run with every control-plane commit
     going through conditional PUTs (no O_EXCL, no rename-as-commit),
-    and the results are exactly the POSIX-backend results."""
+    every gate a lease, and ``os.replace`` raising on any parquet
+    destination (no data file rides a rename); the results are exact
+    and no lock or CAS guard blob is left behind."""
     from osrs_dashboard_elt_spark.sources.change_feed import (
         read_table_as_of,
     )
@@ -182,10 +202,18 @@ def test_mutation_family_over_object_store(spark, tmp_path):
             read_table(spark, path)
             .filter("doc_id = 900").collect()[0]["text"] == "upd"
         )
+        # no lock or guard blobs left behind
+        leftovers = [
+            f for f in os.listdir(os.path.join(path, "_stats_manifest"))
+            if f.endswith(".lock") or f.endswith(".cas")
+        ]
+        assert leftovers == []
     # evidence the protocol actually carried the commits: every
-    # mutation claimed seqs and published markers through the store
+    # mutation claimed seqs and published markers through the store,
+    # and the rewrites landed their files by PUT
     assert b.ops["cond_put"] >= 5   # seq claims + gates
     assert b.ops["put"] >= 10       # journals, markers, metas
+    assert b.ops["data_put"] > 0
 
 
 def test_epoch_commit_conflict_over_object_store(spark, tmp_path):
@@ -294,9 +322,8 @@ def test_checkpoint_race_over_object_store(tmp_path, spark):
 
 
 # ---------------------------------------------------------------------------
-# Lease-mode locking (round-10: the classic mutex's documented gap —
-# "remove the lock by hand once no writer is live" — closed with
-# expiring leases, single-winner CAS breaks, and publish fencing)
+# Lease locking: expiring leases, single-winner CAS breaks, and
+# publish fencing
 # ---------------------------------------------------------------------------
 
 
@@ -318,7 +345,7 @@ def test_cas_swaps_only_on_exact_bytes(backend, tmp_path):
 
 def test_dead_holder_lease_is_broken_not_wedged(backend, tmp_path):
     """A crashed holder's expired lease is taken over automatically
-    (gen bumped) — the classic mode's manual-removal contract gone."""
+    (gen bumped) — no manual removal of a dead holder's lock."""
     p = str(tmp_path / "lock")
     # a holder that died: lease blob already past its expiry
     dead = commitio._lease_blob("999:deadbeef", 3, 0.0)
@@ -328,14 +355,6 @@ def test_dead_holder_lease_is_broken_not_wedged(backend, tmp_path):
         acquired["gen"] = h.gen
     assert acquired["gen"] == 4  # broke the dead gen-3 lease
     assert not os.path.exists(p)  # clean release deleted our blob
-
-
-def test_classic_mode_dead_holder_still_times_out(backend, tmp_path):
-    p = str(tmp_path / "lock")
-    assert commitio.try_claim(p, b"12345")  # classic pid blob
-    with pytest.raises(TimeoutError, match="remove the lock"):
-        with commitio.mutex(p, timeout=0.2, what="t"):
-            pass
 
 
 def test_lease_waiter_never_breaks_live_holder(backend, tmp_path):
@@ -453,42 +472,6 @@ def test_clean_exit_after_fence_raises(backend, tmp_path):
     assert rec["holder"] == "thief"
 
 
-def test_mutation_family_under_lease_env(spark, tmp_path, monkeypatch):
-    """The real substrate (append → targeted delete → as-of read)
-    runs green with lease-mode locking enabled run-wide over the
-    object-store backend — the deployment configuration a 100 TB
-    cluster would actually use."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_LEASE", "30")
-    from osrs_dashboard_elt_spark.sources import change_feed, maintenance
-
-    with commitio.use_backend(ConditionalPutBackend()):
-        tbl = str(tmp_path / "tbl")
-        spark.range(0, 100).select(
-            F.col("id"), (F.col("id") % 7).alias("k")
-        ).write.parquet(tbl)
-        from osrs_dashboard_elt_spark.sources.stats_manifest import (
-            write_stats_manifest,
-        )
-        write_stats_manifest(spark, tbl, cols=["id"], bloom_cols=["id"])
-        change_feed.enable_change_feed(tbl)
-        maintenance.table_append(
-            spark, tbl,
-            spark.range(100, 110).select(
-                F.col("id"), (F.col("id") % 7).alias("k")),
-        )
-        maintenance.targeted_delete(spark, tbl, "id", [5, 105])
-        got = {r.id for r in spark.read.parquet(tbl).collect()}
-        assert got == set(range(110)) - {5, 105}
-        rewound = change_feed.read_table_as_of(spark, tbl, 1)
-        assert rewound.count() == 110
-        # no lock or guard blobs left behind
-        leftovers = [
-            f for f in os.listdir(os.path.join(tbl, "_stats_manifest"))
-            if f.endswith(".lock") or f.endswith(".cas")
-        ]
-        assert leftovers == []
-
-
 def test_cas_corpse_sweep_single_sweeper(backend, tmp_path):
     """A crashed CAS's orphaned guard is swept safely: the sweep is
     serialized through a per-corpse marker and re-verifies the corpse
@@ -523,24 +506,9 @@ def test_cas_corpse_sweep_single_sweeper(backend, tmp_path):
     assert leftovers == []
 
 
-def test_lease_env_zero_means_classic_mode(backend, tmp_path,
-                                           monkeypatch):
-    """SPARK_GRAFT_LOCK_LEASE=0 must mean OFF, not lease=0.0 (a lock
-    born expired is continuously breakable — mutual exclusion gone)."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_LEASE", "0")
-    p = str(tmp_path / "lock")
-    assert commitio.try_claim(p, b"12345")  # classic dead holder
-    with pytest.raises(TimeoutError, match="remove the lock"):
-        with commitio.mutex(p, timeout=0.2, what="t"):
-            pass
-    with pytest.raises(ValueError, match="positive"):
-        with commitio.mutex(p, timeout=0.2, what="t", lease=-1.0):
-            pass
-
-
 def test_fence_point_covers_data_plane(backend, tmp_path):
     """commitio.fence_point — the explicit check _journal_and_swap
-    runs before its first irreversible os.replace — raises for a
+    runs before its first irreversible placement — raises for a
     thread whose lease was stolen, and passes for a live one."""
     import time as _t
     p = str(tmp_path / "tbl" / "_m" / ".mutation.lock")

@@ -1,78 +1,53 @@
-"""Object-store DATA plane (sources/dataio.py, round-10 judge ask
-#1): the control plane went injectable in round 10, but staged data
-files still became visible via raw os.replace renames.  In
-``no_rename`` mode every staged parquet lands at its final
-content-salted name via a single atomic directory-entry creation
-(the local model of a direct object PUT) and visibility is defined
-by the manifest/marker publishes through commitio alone.  The full
-mutation + feed + IVM family must run green with BOTH the
-conditional-put control plane AND ``os.replace`` patched to RAISE on
-any parquet destination — proving no data file ever rides a rename."""
+"""Object-store DATA plane (``commitio.place_file``): every staged
+parquet lands at its final content-salted name via a single atomic
+directory-entry creation (the local model of a direct object PUT) and
+visibility is defined by the manifest/marker publishes through
+commitio alone.  The full mutation + feed + IVM family must run green
+with ``os.replace`` patched to RAISE on any parquet destination —
+proving no data file ever rides a rename."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from osrs_dashboard_elt_spark.sources import commitio, dataio
+from osrs_dashboard_elt_spark.sources import commitio
 from osrs_dashboard_elt_spark.sources.commitio import (
     ConditionalPutBackend,
 )
 
 
-def test_place_file_both_modes(tmp_path):
+def test_place_file_overwrites_orphan_without_rename(
+    tmp_path, monkeypatch
+):
+    """place_file lands the staged bytes at the final name without
+    ``os.replace``, overwrites a crash orphan already at that name,
+    drops the staged entry, and counts one data PUT."""
     src = tmp_path / "stage" / "a.parquet"
     src.parent.mkdir()
-    src.write_bytes(b"AAA")
     dst = tmp_path / "tbl" / "part-del-xyz.parquet"
     dst.parent.mkdir()
-    with dataio.use_mode("rename"):
-        dataio.place_file(str(src), str(dst))
-    assert dst.read_bytes() == b"AAA" and not src.exists()
-    # no_rename: lands without os.replace, overwrites a crash orphan
+    dst.write_bytes(b"ORPHAN")
     src.write_bytes(b"BBB")
-    before = dict(dataio.OPS)
-    real_replace = os.replace
     calls = []
+    real_replace = os.replace
 
-    def spy(a, b):
+    def spy(a, b, *args, **kw):
         calls.append((a, b))
-        return real_replace(a, b)
+        return real_replace(a, b, *args, **kw)
 
-    with dataio.use_mode("no_rename"):
-        os.replace = spy
-        try:
-            dataio.place_file(str(src), str(dst))  # dst EXISTS
-        finally:
-            os.replace = real_replace
+    monkeypatch.setattr(os, "replace", spy)
+    b = ConditionalPutBackend()
+    with commitio.use_backend(b):
+        commitio.place_file(str(src), str(dst))  # dst EXISTS
     assert dst.read_bytes() == b"BBB" and not src.exists()
     assert calls == []  # the PUT never renamed
-    assert dataio.OPS["put"] == before["put"] + 1
-
-
-@pytest.fixture
-def no_parquet_renames(monkeypatch):
-    """os.replace patched to RAISE on *.parquet destinations — the
-    no-rename assertion from the round-10 verdict.  Control blobs
-    (.json/.lock/claim markers) still replace freely: the
-    conditional-put backend's internal _atomic_write models a single
-    atomic object PUT, which is not an app-level rename."""
-    real = os.replace
-
-    def guarded(src, dst, *a, **k):
-        if str(dst).endswith(".parquet"):
-            raise AssertionError(
-                f"os.replace on a DATA file: {src} -> {dst}"
-            )
-        return real(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "replace", guarded)
+    assert b.ops["data_put"] == 1
 
 
 def test_mutation_family_no_rename_object_store(
-    spark, tmp_path, monkeypatch, no_parquet_renames
+    spark, tmp_path, no_parquet_renames
 ):
     """Append -> rewrite delete -> DV delete -> upsert -> OPTIMIZE ->
     feed reads -> time travel -> segmented IVM, all with the
@@ -97,9 +72,8 @@ def test_mutation_family_no_rename_object_store(
         write_stats_manifest,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_DATA_PLANE", "no_rename")
-    puts0 = dataio.OPS["put"]
-    with commitio.use_backend(ConditionalPutBackend()):
+    b = ConditionalPutBackend()
+    with commitio.use_backend(b):
         path = str(tmp_path / "tbl")
         spark.range(200).select(
             F.col("id").alias("doc_id"),
@@ -168,4 +142,4 @@ def test_mutation_family_no_rename_object_store(
         }
         assert view == direct
     # the data plane really took the PUT path
-    assert dataio.OPS["put"] > puts0
+    assert b.ops["data_put"] > 0

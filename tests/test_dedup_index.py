@@ -4,6 +4,8 @@ bucketed index side must join WITHOUT an Exchange."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -458,3 +460,68 @@ def test_compaction_swap_is_atomic_for_readers(spark, docs, tmp_path):
         assert spark.read.parquet(str(tmp_path / "atomic")).count() == 2 * n
     finally:
         spark.sql("DROP TABLE IF EXISTS mh_atomic")
+
+
+def test_clear_tombstones_never_readmits_a_deleted_id(
+    spark, index, monkeypatch
+):
+    """A selective clear that dies part-way (crash, failed delete)
+    must leave a SUPERSET of the new tombstone set: an id that stays
+    deleted is never re-admitted, in any intermediate state.  The
+    clear's filesystem calls on the tombstone location fail at the
+    k-th call for k = 1, 2, ... until one run gets through."""
+    import shutil
+
+    from osrs_dashboard_elt_spark.operators.dedup_index import (
+        _tombstone_path,
+        _without_tombstoned,
+        clear_tombstones,
+        delete_from_index,
+    )
+
+    keep, cleared, other = 101, 202, 303
+    id_type = dict(spark.table(index).dtypes)["corpus_id"]
+    cand = spark.createDataFrame(
+        [(keep,), (cleared,), (other,)], "corpus_id long"
+    ).select(F.col("corpus_id").cast(id_type))
+
+    def visible():
+        return {
+            r.corpus_id
+            for r in _without_tombstoned(spark, cand, index).collect()
+        }
+
+    assert delete_from_index(spark, index, [keep, cleared]) == 2
+    assert visible() == {other}
+    root = _tombstone_path(spark, index)
+    real = {
+        "rename": os.rename, "remove": os.remove,
+        "rmtree": shutil.rmtree,
+    }
+    finished = False
+    for k in range(1, 20):
+        calls = {"n": 0}
+
+        def failing(name):
+            def call(*args, **kwargs):
+                if str(args[0]).startswith(root):
+                    calls["n"] += 1
+                    if calls["n"] == k:
+                        raise OSError(f"injected failure at call {k}")
+                return real[name](*args, **kwargs)
+            return call
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", failing("rename"))
+            m.setattr(os, "remove", failing("remove"))
+            m.setattr(shutil, "rmtree", failing("rmtree"))
+            try:
+                clear_tombstones(spark, index, ids=[cleared])
+                finished = True
+            except OSError:
+                pass
+        assert keep not in visible(), f"re-admitted after call {k}"
+        if finished:
+            break
+    assert finished and k > 1  # some run died part-way first
+    assert visible() == {cleared, other}

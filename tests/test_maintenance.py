@@ -196,10 +196,12 @@ def test_mutation_gate_serializes_and_times_out(spark, tmp_path):
 
     path = _small_file_tbl(spark, tmp_path, n=200, files=4)
     lock = os.path.join(path, "_stats_manifest", ".mutation.lock")
-    # a foreign holder (simulating another process): the mutation
-    # must time out loudly
-    with open(lock, "w") as f:
-        f.write("99999")
+    # a foreign holder (simulating another process) whose lease has
+    # not expired: the mutation must time out loudly
+    from osrs_dashboard_elt_spark.sources import commitio
+
+    with open(lock, "wb") as f:
+        f.write(commitio._lease_blob("99999:foreign", 1, 3600.0))
     import pytest as _pt
 
     with _pt.raises(TimeoutError, match="mutation gate"):
@@ -350,14 +352,16 @@ def test_cross_process_mutation_contention():
     committed feed seq per append, exact as-of at seq 0, maintained
     view equal to a direct recompute."""
     import json
+    import os
     import subprocess
     import sys
 
+    probe = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts", "probe_cross_process.py",
+    )
     out = subprocess.run(
-        [
-            sys.executable,
-            "/root/repo/scripts/probe_cross_process.py", "3",
-        ],
+        [sys.executable, probe, "3"],
         capture_output=True, text=True, timeout=600,
     )
     lines = [

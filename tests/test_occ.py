@@ -257,7 +257,7 @@ def test_occ_exhausted_retries_raise_loudly(
     assert latest_change_seq(path) == 0
     assert read_table(spark, path).count() == 50
     # no staged-delta or occ-staging debris that a later mutation
-    # would trip over; the next (classic) append runs clean
+    # would trip over; the next (gated) append runs clean
     table_append(spark, path, rows)
     assert read_table(spark, path).count() == 53
 
@@ -273,11 +273,12 @@ def test_cross_process_occ_contention():
     import subprocess
     import sys
 
+    probe = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts", "probe_cross_process.py",
+    )
     out = subprocess.run(
-        [
-            sys.executable,
-            "/root/repo/scripts/probe_cross_process.py", "3", "occ",
-        ],
+        [sys.executable, probe, "3", "occ"],
         capture_output=True, text=True, timeout=600,
     )
     lines = [

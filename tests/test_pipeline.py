@@ -3,9 +3,12 @@ stages chain, gold tables publish, and re-running is a no-op."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+)
 
 from run_pipeline import publish_all, run_pipeline  # noqa: E402
 
