@@ -392,6 +392,19 @@ def read_change_feed(
     )
 
 
+def _mid_commit(path: str) -> bool:
+    """A mutation's intent journal exists, so it may sit between its
+    file swap and its feed commit: its files are listed, its delta is
+    not.  As-of readers check this AFTER listing the table and BEFORE
+    re-listing the committed seqs — a mutation that finished in
+    between then shows up in the re-listing instead.  A crashed
+    mutation's journal reads the same until the next mutation of the
+    table reconciles it."""
+    from .maintenance import _delete_journal_path
+
+    return os.path.exists(_delete_journal_path(path))
+
+
 def _snapshot_file_state(
     spark: SparkSession, path: str, seq: int
 ) -> tuple[list[str], dict[str, set[int]]] | None:
@@ -462,7 +475,7 @@ def _snapshot_file_state(
         .select("file")
         .collect()
     }
-    if recorded != current:
+    if recorded != current or _mid_commit(path):
         return None
     # commit-race recheck: a mutation committing between the manifest
     # collection above and the listing would inject files no collected
@@ -673,6 +686,18 @@ def read_table_as_of(
             f"under {path} (a concurrent vacuum advanced it mid-"
             "plan) — the deltas needed to reconstruct it were "
             "vacuumed"
+        )
+    # a mutation between its file swap and its feed commit shows its
+    # files in ``current`` but not its delta — the replay would be off
+    # by that delta, silently
+    if _mid_commit(path) or [
+        s for s in _committed_seqs(_changes_root(path)) if s > seq
+    ] != expected_seqs:
+        raise ValueError(
+            f"as-of seq {seq} under {path} overlapped a mutation "
+            "mid-commit (its files were visible before its change-feed "
+            "delta) — retry; a crashed mutation is repaired by the "
+            "next mutation of the table"
         )
     if expected_seqs:
         want = F.array(*[F.lit(int(s)) for s in expected_seqs])

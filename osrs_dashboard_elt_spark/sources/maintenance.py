@@ -20,8 +20,10 @@ src/3_transform_data.py:771-798) to tables that change row by row:
 Time travel and retention live on the same table: the change feed
 records each mutation's delta (``change_feed.read_table_as_of``), and
 ``change_feed.vacuum_change_feed`` expires history behind registered
-consumers.  Mutations serialize under a per-table gate, or with
-``occ=True`` overlap their data work and validate at commit.
+consumers.  Every mutation runs one writer protocol: it plans and
+stages its Spark work outside the per-table gate, then validates and
+commits in a short gated window; on a conflict it runs once more
+holding the gate throughout (see ``_optimistic_then_gated``).
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ import os
 import shutil
 import tempfile
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -262,13 +265,9 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
 
     try:
         for d in os.listdir(path):
-            if d.startswith(".ins-stage-"):
-                # gated staging can only exist under the gate, so
-                # any survivor is a crash leftover — sweep eagerly
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            elif d.startswith(_OCC_STAGE_PREFIX):
-                # occ staging runs OUTSIDE the gate: a live stager's
-                # dir must survive another mutation's commit-window
+            if d.startswith(_OCC_STAGE_PREFIX):
+                # staging runs OUTSIDE the gate: a live stager's dir
+                # must survive another mutation's commit-window
                 # reconcile.  Age by the NEWEST mtime in the whole
                 # tree — Spark lands task output in SUBDIRS
                 # (__src=i/, _temporary/), which never bump the top
@@ -525,9 +524,9 @@ def _reconcile_delete_journal(spark: SparkSession, path: str) -> bool:
 
 
 # in-THREAD reentrancy for the mutation gate: auto-compaction calls
-# apply_deletion_vectors from inside a dv delete, and orphan
-# re-resolution calls targeted_delete from inside compaction — the
-# nested acquisition must not self-deadlock.  Keyed by (thread, path):
+# apply_deletion_vectors from inside a dv delete, and a mutation's
+# gated attempt nests its own commit window — the nested acquisition
+# must not self-deadlock.  Keyed by (thread, path):
 # a DIFFERENT thread of the same process (e.g. a foreachBatch worker)
 # must contend on the lock file like a foreign process, not ride the
 # first thread's hold
@@ -535,9 +534,9 @@ _GATE_HELD: dict[tuple, int] = {}
 
 
 class _mutation_gate:
-    """Per-table mutex serializing MUTATIONS (delete / upsert / append
-    / compaction): they share one intent journal and in-place file
-    swaps, so two concurrent mutations would overwrite each other's
+    """Per-table mutex serializing the commit windows of MUTATIONS
+    (delete / upsert / append / compaction): they share one intent
+    journal and in-place file swaps, so two concurrent mutations would overwrite each other's
     journal and reconcile each other's in-flight state as crashes.
     A ``commitio.mutex`` lease lock (the _commit_gate discipline): a
     writer that died holding it is broken once its lease expires, a
@@ -592,23 +591,21 @@ def _with_mutation_gate(fn):
 
 
 # ---------------------------------------------------------------------------
-# Optimistic writer concurrency (round-10 judge ask #2)
+# The writer protocol
 # ---------------------------------------------------------------------------
 #
-# The mutation gate is CORRECT but serializes everything: a
-# multi-minute OPTIMIZE and a 3-row takedown queue behind one lock.
-# At 100 TB — scheduled compactions + streaming appends + GDPR
-# deletes on one table — a whole-mutation lock is the write-
-# throughput ceiling.  ``occ=True`` on ``table_append`` /
-# ``targeted_delete`` / ``compact_table`` moves the LONG work
-# (planning scans, rewrite jobs, insert staging — all the Spark
-# jobs) OUTSIDE the gate and keeps only a short commit window under
-# it: revalidate the plan, journal, swap, refresh, commit the delta.
+# One protocol for every rewrite and append (lock elision): a
+# mutation first runs OPTIMISTICALLY — planning scans, rewrite jobs
+# and insert staging (all the Spark jobs) run OUTSIDE the mutation
+# gate, and only a short commit window takes it: reconcile,
+# revalidate the plan, journal, swap, refresh, commit the delta.
 # Disjoint mutations (an append racing a compaction of sealed files;
 # deletes whose victim files don't overlap) overlap their data work
-# and serialize only the metadata commit; overlapping mutations fail
-# validation and RETRY from planning (bounded), the Delta/Iceberg
-# OCC shape.
+# and serialize only the metadata commit.  An overlapping mutation
+# fails validation and runs ONCE more holding the gate for the whole
+# attempt — no gated writer can invalidate that second attempt, so a
+# caller never exhausts retries (the Delta/Iceberg OCC commit, with
+# the lock as the fallback instead of a retry budget).
 #
 # Validation is sufficient because data files are immutable once
 # written: every rewrite lands under a NEW deterministic name and
@@ -619,21 +616,79 @@ def _with_mutation_gate(fn):
 # tombstoned rows AFTER the stager's DV-aware read (without it, the
 # staged rewrite would resurrect those rows at swap time).
 
-_OCC_RETRIES = 3
 _OCC_STAGE_PREFIX = ".occ-stage-"
-_OCC_STAGE_TTL = 6 * 3600.0  # orphaned (crashed) occ staging dirs
+_OCC_STAGE_TTL = 6 * 3600.0  # orphaned (crashed) staging dirs
 
 
 class ConcurrentMutationError(RuntimeError):
-    """An ``occ=True`` mutation lost its commit-time validation
-    ``_OCC_RETRIES`` times in a row — writers keep touching this
-    mutation's file set.  Retry later, or serialize with
-    ``occ=False``."""
+    """A mutation failed commit-time validation while HOLDING the
+    mutation gate — only a writer that does not take the gate (e.g.
+    ``stats_manifest.evolve_table_schema``) can change the table then.
+    The staged delta was aborted and no staging dir is left; the
+    mutation can simply be re-run."""
 
 
 class _OccConflict(Exception):
-    """Internal: optimistic validation failed; the caller retries
-    from planning against the new table state."""
+    """Internal: optimistic validation failed; the caller runs the
+    mutation again under the gate against the new table state."""
+
+
+def _optimistic_then_gated(op: str, path: str, attempt):
+    """Run ``attempt()`` ungated; on :class:`_OccConflict` run it once
+    more holding the gate for the whole attempt (:func:`_gated` — the
+    gate is reentrant, so the attempt's own commit window nests).  In
+    the ungated attempt a stale-manifest refusal is a conflict too: a
+    planner that lists the table while another writer sits between
+    its swap and its manifest refresh sees the in-flight state, which
+    the gated attempt cannot.  In the gated attempt a stale manifest
+    is really stale and raises as always."""
+    from .stats_manifest import StaleManifestError
+
+    try:
+        return attempt()
+    except (_OccConflict, StaleManifestError):
+        pass
+    return _gated(op, path, attempt)
+
+
+def _gated(op: str, path: str, attempt):
+    """Run ``attempt()`` holding the mutation gate throughout.  No
+    gated writer can invalidate it, so a conflict here means a writer
+    that does not take the gate changed the table."""
+    with _mutation_gate(path):
+        try:
+            return attempt()
+        except _OccConflict as e:
+            raise ConcurrentMutationError(
+                f"{op} on {path} failed validation while holding the "
+                f"mutation gate ({e}) — a writer that does not take "
+                "the gate changed the table"
+            ) from None
+
+
+def _reconcile_if_journaled(spark: SparkSession, path: str) -> None:
+    """Repair a crashed mutation before planning — under the gate,
+    and only when its journal exists, so an uncontended mutation pays
+    one gate cycle (its commit window's reconcile, which also sweeps
+    aged staging dirs)."""
+    if os.path.exists(_delete_journal_path(path)):
+        with _mutation_gate(path):
+            _reconcile_delete_journal(spark, path)
+
+
+@contextmanager
+def _staging_dir(path: str):
+    """The mutation's dot-prefixed staging dir INSIDE the table
+    (invisible to readers): ``commitio.place_file`` links staged files
+    to their final names, which must stay same-device — /tmp is
+    routinely a different filesystem (tmpfs), where it would degrade
+    to a full copy.  Removed on exit; one left by a hard kill is swept
+    by the reconcile once older than ``_OCC_STAGE_TTL``."""
+    tmp = tempfile.mkdtemp(dir=path, prefix=_OCC_STAGE_PREFIX)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _occ_meta_fingerprint(meta: dict, fields: tuple) -> str:
@@ -646,6 +701,20 @@ def _occ_meta_fingerprint(meta: dict, fields: tuple) -> str:
 # invalidate it; rewrites also conflict on DV/stats-config change
 _OCC_META_FIELDS_APPEND = ("schema",)
 _OCC_META_FIELDS_REWRITE = ("schema", "dv", "cols", "bloom_cols")
+
+
+def _read_fingerprint(files: list[str]) -> dict[str, int]:
+    """The optimistic read set: every planned victim (local path) at
+    its plan-time size."""
+    fp = {}
+    for f in files:
+        try:
+            fp[f] = os.path.getsize(f)
+        except OSError:
+            raise _OccConflict(
+                f"planned file vanished mid-plan: {f}"
+            ) from None
+    return fp
 
 
 def _occ_validate(
@@ -679,16 +748,13 @@ def _occ_validate(
         )
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
-def _occ_scan_guard(occ: bool):
-    """An UNGATED occ planning/staging scan can race a concurrent
-    rewrite that removes one of its input files mid-job — Spark
-    surfaces that as a task FileNotFound failure.  Translate it into
-    the retryable conflict it is (replanning sees the new file set);
-    everything else propagates."""
+def _occ_scan_guard():
+    """An UNGATED planning/staging scan can race a concurrent rewrite
+    that removes one of its input files mid-job — Spark surfaces that
+    as a task FileNotFound failure.  Translate it into the conflict it
+    is (the gated attempt sees the new file set); everything else
+    propagates."""
     try:
         yield
     except _OccConflict:
@@ -696,10 +762,10 @@ def _occ_scan_guard(occ: bool):
     except Exception as e:
         # match Spark's FILE-read error classes only — a broad
         # "does not exist" substring converted unrelated analysis
-        # errors into 3x-retried "concurrent writer" misdiagnoses
+        # errors into "concurrent writer" misdiagnoses
         # (round-11 self-review)
         msg = str(e)
-        if occ and (
+        if (
             "FileNotFoundException" in msg
             or "PATH_NOT_FOUND" in msg
             or "FAILED_READ_FILE" in msg
@@ -746,78 +812,79 @@ def _occ_listing_fingerprint(path: str) -> str:
     return h.hexdigest()
 
 
+def _insert_watermark(path: str) -> tuple[int | None, str]:
+    """Plan-time (feed head, listing fingerprint) for the commit
+    window's concurrent-insert check: the victims check cannot see
+    files ADDED after planning, so a delete or merge scans the deltas
+    committed after the feed head for rows matching its plan (Delta
+    raises ConcurrentAppendException for the same overlap).  Feedless
+    tables fingerprint the full file listing instead."""
+    from .change_feed import change_feed_enabled, latest_change_seq
+
+    if change_feed_enabled(path):
+        return latest_change_seq(path), ""
+    return None, _occ_listing_fingerprint(path)
+
+
+def _check_concurrent_inserts(
+    spark: SparkSession,
+    path: str,
+    watermark: tuple[int | None, str],
+    match_fn,
+) -> None:
+    """Raise :class:`_OccConflict` when rows that ``match_fn`` selects
+    were inserted after the plan's ``_insert_watermark``.
+
+    With a change feed, scan the deltas committed after the plan's
+    feed head through ``match_fn`` — and skip the scan entirely when
+    no new seq committed, so the common uncontended commit runs NO
+    Spark job under the gate (an empty-feed probe would be a
+    createDataFrame-backed job, ~4.5 s of Python-worker spin-up on a
+    4-vCPU host — the exact trap ``literals.local_frame`` exists
+    for).  Feedless tables compare the full file-listing fingerprint
+    instead, which a ``refresh_stats=False`` append cannot slip
+    past."""
+    plan_head, plan_listing = watermark
+    if plan_head is None:
+        if _occ_listing_fingerprint(path) != plan_listing:
+            raise _OccConflict(
+                f"table file set changed under {path} after "
+                "planning (no change feed to pinpoint the overlap)"
+            )
+        return
+    from .change_feed import latest_change_seq, read_change_feed
+
+    if latest_change_seq(path) > plan_head:
+        newer = read_change_feed(
+            spark, path, since_seq=plan_head
+        ).filter(F.col("_change_type").isin("insert", "update_postimage"))
+        if not match_fn(newer).isEmpty():
+            raise _OccConflict(
+                "a concurrent mutation inserted rows matching this "
+                f"mutation's plan under {path} after planning"
+            )
+
+
 def _occ_commit_window(
     spark: SparkSession,
     path: str,
     read_fp: dict[str, int],
     meta_fp: str,
-    plan_head: int | None,
-    plan_listing: str,
-    match_fn,
+    meta_fields: tuple,
     commit_fn,
+    match_fn=None,
+    watermark: tuple[int | None, str] | None = None,
 ):
-    """The short gated OCC commit shared by delete and upsert:
-    reconcile, validate the plan, detect concurrently-INSERTED rows
-    that would dodge the staged mutation, then run the caller's
-    journal-swap-commit body under the gate.
-
-    The insert detector: with a change feed, scan the deltas
-    committed after ``plan_head`` through the caller's ``match_fn``
-    — and skip the scan entirely when no new seq committed, so the
-    common uncontended commit runs NO Spark job under the gate (an
-    empty-feed probe would be a createDataFrame-backed job, ~4.5 s
-    of Python-worker spin-up in this environment — the exact trap
-    ``literals.local_frame`` exists for).  Feedless tables compare
-    the full file-listing fingerprint instead, which a
-    ``refresh_stats=False`` append cannot slip past."""
+    """The short gated commit shared by every mutation: reconcile,
+    validate the plan, detect concurrently-INSERTED rows that would
+    dodge the staged mutation (when ``match_fn`` is given), then run
+    the caller's journal-swap-commit body under the gate."""
     with _mutation_gate(path):
         _reconcile_delete_journal(spark, path)
-        _occ_validate(
-            spark, path, read_fp, meta_fp, _OCC_META_FIELDS_REWRITE
-        )
-        if plan_head is not None:
-            from .change_feed import latest_change_seq, read_change_feed
-
-            if (
-                match_fn is not None
-                and latest_change_seq(path) > plan_head
-            ):
-                newer = read_change_feed(
-                    spark, path, since_seq=plan_head
-                ).filter(
-                    F.col("_change_type").isin(
-                        "insert", "update_postimage"
-                    )
-                )
-                if not match_fn(newer).isEmpty():
-                    raise _OccConflict(
-                        "a concurrent mutation inserted rows "
-                        "matching this mutation's plan under "
-                        f"{path} after planning"
-                    )
-        elif _occ_listing_fingerprint(path) != plan_listing:
-            raise _OccConflict(
-                f"table file set changed under {path} after "
-                "planning (no change feed to pinpoint the overlap)"
-            )
+        _occ_validate(spark, path, read_fp, meta_fp, meta_fields)
+        if match_fn is not None:
+            _check_concurrent_inserts(spark, path, watermark, match_fn)
         return commit_fn()
-
-
-def _occ_retry(op: str, path: str, attempt_fn):
-    """Run ``attempt_fn()`` retrying on :class:`_OccConflict` up to
-    ``_OCC_RETRIES`` times — each retry replans against the table
-    state that beat it."""
-    last: _OccConflict | None = None
-    for _ in range(_OCC_RETRIES):
-        try:
-            return attempt_fn()
-        except _OccConflict as e:
-            last = e
-    raise ConcurrentMutationError(
-        f"{op} on {path} lost optimistic validation {_OCC_RETRIES} "
-        f"times ({last}) — concurrent writers keep overlapping its "
-        "file set; retry later or serialize with occ=False"
-    )
 
 
 def _journal_and_swap(
@@ -825,26 +892,25 @@ def _journal_and_swap(
     path: str,
     partials: list[str],
     removes: list[str],
-    write_partials_fn,
-    adds: list[str] | None = None,
+    staged: str | None = None,
+    adds: dict[str, str] | None = None,
     changes: tuple[str, str] | None = None,
     op: str | None = None,
     subs: dict[str, str] | None = None,
     name_salt: str = "",
     lineage: dict | None = None,
-    staged_tmp: str | None = None,
 ) -> tuple[dict[str, str], dict[str, int]]:
-    """The crash-safe mutation section shared by ``targeted_delete``,
-    ``targeted_upsert`` and ``apply_deletion_vectors``: journal the
-    intent, let ``write_partials_fn(tmp_dir)`` produce one
-    ``__src=<i>/`` dir per sorted partial file (plus one ``__ins/``
-    dir when the mutation inserts — ``adds`` names its target files),
-    then place replacements at deterministic names
-    (``commitio.place_file``), drop originals, and place inserts —
-    metadata-only, no jobs.  ``changes`` is the staged change-feed
-    (dir, op) pair the journal records so a crash commits/aborts the
-    delta with the mutation; ``op``/``subs`` ride the journal for the
-    reconcile's partial-completion policy.  Original sizes are captured BEFORE the
+    """The crash-safe swap section shared by every rewrite and append:
+    journal the intent, then place each partial file's replacement
+    (the one part file under ``staged/__src=<i>/``, sorted partials)
+    at its deterministic name (``commitio.place_file``), drop
+    originals, place each staged insert at its target (``adds`` maps
+    target -> staged file) and drop the ``removes`` — metadata-only,
+    no jobs; every caller has already staged its files.  ``changes``
+    is the staged change-feed (dir, op) pair the journal records so a
+    crash commits/aborts the delta with the mutation;
+    ``op``/``subs`` ride the journal for the reconcile's
+    partial-completion policy.  Original sizes are captured BEFORE the
     swap and journaled — the per-seq file manifests need the removed
     files' byte identity.  Returns (original->replacement map,
     original->pre-mutation size)."""
@@ -855,73 +921,45 @@ def _journal_and_swap(
         )
         for f in partials
     }
-    adds = list(adds or [])
+    adds = dict(adds or {})
     pre_sizes = {
         f: os.path.getsize(f)
         for f in list(rewrites) + list(removes)
         if os.path.exists(f)
     }
     _write_delete_journal(
-        path, rewrites, removes, adds=adds, changes=changes,
+        path, rewrites, removes, adds=list(adds), changes=changes,
         op=op, subs=subs, sizes=pre_sizes, lineage=lineage,
     )
-    # stage INSIDE the table dir (dot-prefixed: invisible to readers):
-    # place_file links the staged file to its final name, which must
-    # stay same-device — /tmp is routinely a different filesystem
-    # (tmpfs), where it would degrade to a full copy.
-    # ``staged_tmp`` = an occ mutation already staged UNGATED (the
-    # long Spark jobs ran outside the gate); only the swap runs here
-    tmp = staged_tmp or tempfile.mkdtemp(
-        dir=path, prefix=".delete-batch-"
-    )
-    try:
-        if staged_tmp is None and (partials or adds):
-            write_partials_fn(tmp)
-        # data-plane fence point: the Spark write above is the LONG
-        # window a paused holder sleeps through; re-verify the lease
-        # before the first irreversible placement so a fenced
-        # straggler aborts here (its staged tmp dir is swept, its
-        # journal reconciled as a crash) instead of clobbering the
-        # thief's in-flight swaps.  The publishes are fenced
-        # automatically; data-file placements and removals are not.
-        from .stats_manifest import _manifest_root
+    # data-plane fence point: staging is the LONG window a paused
+    # holder sleeps through; re-verify the lease before the first
+    # irreversible placement so a fenced straggler aborts here (its
+    # journal reconciled as a crash) instead of clobbering the
+    # thief's in-flight swaps.  The publishes are fenced
+    # automatically; data-file placements and removals are not.
+    from .stats_manifest import _manifest_root
 
-        fence = os.path.join(_manifest_root(path), "x")
+    fence = os.path.join(_manifest_root(path), "x")
+    commitio.fence_point(fence)
+    for i, f in enumerate(sorted(partials)):
+        part = next(
+            fn
+            for fn in os.listdir(os.path.join(staged, f"__src={i}"))
+            if fn.endswith(".parquet")
+        )
+        # per-swap fence: one tiny local read per file, and only
+        # when this thread holds a lease (otherwise it early-outs)
         commitio.fence_point(fence)
-        for i, f in enumerate(sorted(partials)):
-            part = next(
-                fn
-                for fn in os.listdir(os.path.join(tmp, f"__src={i}"))
-                if fn.endswith(".parquet")
-            )
-            # per-swap fence: one tiny local read per file, and only
-            # when this thread holds a lease (otherwise it early-outs)
-            commitio.fence_point(fence)
-            # place_file overwrites a stale orphan from a crash
-            commitio.place_file(
-                os.path.join(tmp, f"__src={i}", part), rewrites[_local(f)]
-            )
-            os.remove(_local(f))
-        if adds:
-            ins_parts = sorted(
-                fn
-                for fn in os.listdir(os.path.join(tmp, "__ins"))
-                if fn.endswith(".parquet")
-            )
-            if len(ins_parts) != len(adds):
-                raise RuntimeError(
-                    f"insert writer produced {len(ins_parts)} part "
-                    f"files for {len(adds)} journaled targets"
-                )
-            for part, target in zip(ins_parts, adds):
-                commitio.fence_point(fence)
-                # place_file creates a NEW partition's dir and
-                # overwrites a stale orphan from a crash
-                commitio.place_file(
-                    os.path.join(tmp, "__ins", part), target
-                )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # place_file overwrites a stale orphan from a crash
+        commitio.place_file(
+            os.path.join(staged, f"__src={i}", part), rewrites[_local(f)]
+        )
+        os.remove(_local(f))
+    for target, src in adds.items():
+        commitio.fence_point(fence)
+        # place_file creates a NEW partition's dir and overwrites a
+        # stale orphan from a crash
+        commitio.place_file(src, target)
     for f in removes:
         commitio.fence_point(fence)
         os.remove(f)
@@ -934,32 +972,24 @@ def targeted_delete(
     col: str,
     values: list,
     refresh_stats: bool = True,
-    serial: bool = False,
     mode: str = "rewrite",
-    _log_changes: bool = True,
-    occ: bool = False,
 ) -> dict:
     """Delete all rows where ``col`` is one of ``values`` by rewriting
     ONLY the files that can contain them — the takedown/GDPR path.
 
-    ``occ=True`` runs OPTIMISTICALLY (rewrite mode only): planning
-    scans and the rewrite job stage outside the mutation gate, and
-    only a short validate-journal-swap-commit window takes it — so a
-    takedown no longer queues behind a multi-minute OPTIMIZE when
-    their file sets are disjoint.  An overlapping writer fails the
-    commit-time validation and this call retries from planning
-    (``_OCC_RETRIES`` attempts, then
-    :class:`ConcurrentMutationError`).  ``mode="dv"`` ignores ``occ``
-    — a DV delete is already metadata-only, the gate was never its
-    ceiling.
+    Rewrite mode runs the writer protocol (``_optimistic_then_gated``):
+    planning scans and the rewrite job stage outside the mutation
+    gate, and only a short validate-journal-swap-commit window takes
+    it — so a takedown does not queue behind a multi-minute OPTIMIZE
+    when their file sets are disjoint.  ``mode="dv"`` holds the gate
+    throughout — a DV delete is already metadata-only, the gate was
+    never its ceiling.
 
     When the table's CHANGE FEED is enabled
     (``change_feed.enable_change_feed``), the deleted rows are
     recorded as a ``delete`` delta — staged before the mutation
     (while still readable), committed after it, and reconciled with
-    the mutation's fate on a crash (``_log_changes=False`` is the
-    internal hook for physical-only rewrites like DV compaction,
-    whose rows already left the visible state at tombstone time).
+    the mutation's fate on a crash.
 
     Planning goes through the stats manifest
     (``stats_manifest.files_for_values``): per-file min/max bounds plus
@@ -985,9 +1015,7 @@ def targeted_delete(
     3. A driver-side metadata loop places replacements
        (``commitio.place_file``) and drops originals — link/unlink
        only, no jobs.  A 5,000-file takedown costs the same two jobs as a
-       5-file one (the serial per-file form ran ~2 jobs per file;
-       ``serial=True`` keeps it as the measurement baseline —
-       SCALE.md).
+       5-file one (SCALE.md round 8).
 
     Crash safety: replacement names are DETERMINISTIC
     (``part-del-<sha1(original)>``) and an intent journal is written
@@ -1022,19 +1050,13 @@ def targeted_delete(
     """
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"unknown delete mode {mode!r}")
-    if occ and mode == "rewrite":
-        return _occ_retry(
-            "targeted_delete", path,
-            lambda: _targeted_delete_impl(
-                spark, path, col, values, refresh_stats, serial,
-                mode, _log_changes, occ=True,
-            ),
-        )
-    with _mutation_gate(path):
-        return _targeted_delete_impl(
-            spark, path, col, values, refresh_stats, serial, mode,
-            _log_changes, occ=False,
-        )
+    run = _gated if mode == "dv" else _optimistic_then_gated
+    return run(
+        "targeted_delete", path,
+        lambda: _targeted_delete_impl(
+            spark, path, col, values, refresh_stats, mode
+        ),
+    )
 
 
 def _targeted_delete_impl(
@@ -1043,10 +1065,7 @@ def _targeted_delete_impl(
     col: str,
     values: list,
     refresh_stats: bool,
-    serial: bool,
     mode: str,
-    _log_changes: bool,
-    occ: bool,
 ) -> dict:
     from pyspark.sql.types import StructType
 
@@ -1077,27 +1096,8 @@ def _targeted_delete_impl(
         return _noop_result(0)
     if any(v is None for v in values):
         raise ValueError("delete values must be non-null")
-    plan_head = None
-    plan_listing = ""
-    if occ:
-        # reconcile needs the gate (it repairs shared state); take it
-        # briefly, then plan and stage with the gate RELEASED
-        with _mutation_gate(path):
-            _reconcile_delete_journal(spark, path)
-        # feed head at plan time: the commit window scans deltas
-        # AFTER this for concurrently-inserted rows matching the
-        # delete's values (the victims check can't see brand-new
-        # files — round-11 self-review; Delta raises
-        # ConcurrentAppendException for the same overlap).  Feedless
-        # tables fingerprint the full file listing instead
-        from .change_feed import change_feed_enabled, latest_change_seq
-
-        if change_feed_enabled(path):
-            plan_head = latest_change_seq(path)
-        else:
-            plan_listing = _occ_listing_fingerprint(path)
-    else:
-        _reconcile_delete_journal(spark, path)
+    _reconcile_if_journaled(spark, path)
+    watermark = _insert_watermark(path) if mode == "rewrite" else None
     _, meta = _load_meta(path)
     affected = files_for_values(spark, path, col, values)
     if not affected:
@@ -1136,7 +1136,7 @@ def _targeted_delete_impl(
                 F.when(F.col(col).isin(values), F.col(col))
             ).alias("matched")
         )
-    with _occ_scan_guard(occ):
+    with _occ_scan_guard():
         cls = (
             live.select("__file", F.col(col))
             .groupBy("__file")
@@ -1175,29 +1175,25 @@ def _targeted_delete_impl(
         # tombstoning IS the reader-visible delete: the delta commits
         # with the dv epoch, and the later physical compaction logs
         # nothing (the rows already left the visible state here)
-        staged = None
-        if _log_changes:
-            field_names = [f.name for f in pinned.fields]
-            dv_rows = live.filter(F.col(col).isin(values)).select(
-                *field_names
+        field_names = [f.name for f in pinned.fields]
+        dv_rows = live.filter(F.col(col).isin(values)).select(
+            *field_names
+        )
+        staged = stage_changes(path, [(dv_rows, "delete")])
+        if staged:
+            # journal BEFORE the dv commit: a crash between the
+            # tombstone epoch landing and the change commit must not
+            # lose the delta — the reconcile probes whether the
+            # sampled pairs made it into meta['dv'] and
+            # commits/aborts the staged dir accordingly
+            _write_delete_journal(
+                path, {}, [],
+                changes=(staged[1], "targeted_delete_dv"),
+                dv_check={
+                    "col": col,
+                    "pairs": [[f, str(v)] for f, v in dv_pairs[:3]],
+                },
             )
-            staged = stage_changes(path, [(dv_rows, "delete")])
-            if staged:
-                # journal BEFORE the dv commit: a crash between the
-                # tombstone epoch landing and the change commit must
-                # not lose the delta — the reconcile probes whether
-                # the sampled pairs made it into meta['dv'] and
-                # commits/aborts the staged dir accordingly
-                _write_delete_journal(
-                    path, {}, [],
-                    changes=(staged[1], "targeted_delete_dv"),
-                    dv_check={
-                        "col": col,
-                        "pairs": [
-                            [f, str(v)] for f, v in dv_pairs[:3]
-                        ],
-                    },
-                )
         from ..literals import local_frame
 
         pairs_df = local_frame(
@@ -1238,84 +1234,51 @@ def _targeted_delete_impl(
         }
     if not partials and not removes:
         return _noop_result(len(affected))
-    read_fp: dict[str, int] = {}
-    meta_fp = ""
-    if occ:
-        # the optimistic read set: every victim at its plan-time size
-        # (files are immutable once written, so existence+size at
-        # commit proves the staged rewrite is still exact)
-        for f in [_local(x) for x in partials] + removes:
-            try:
-                read_fp[f] = os.path.getsize(f)
-            except OSError:
-                raise _OccConflict(
-                    f"planned file vanished mid-plan: {f}"
-                ) from None
-        meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
+    # the optimistic read set: every victim at its plan-time size
+    # (files are immutable once written, so existence+size at commit
+    # proves the staged rewrite is still exact)
+    read_fp = _read_fingerprint([_local(x) for x in partials] + removes)
+    meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
     # sub-delta labels: one per victim file, so a partially-completed
     # crash commits exactly the deltas of the files it finished
     victims = sorted(partials + removes_uris)
     sub_map = {f: str(i) for i, f in enumerate(victims)}
     subs = {sub_map[f]: _local(f) for f in victims}
-    staged = None
-    if _log_changes:
-        from ..literals import local_frame
-        from .change_feed import stage_changes
+    from ..literals import local_frame
+    from .change_feed import abort_changes, commit_changes, stage_changes
 
-        field_names = [f.name for f in pinned.fields]
-        lbl_df = F.broadcast(
-            local_frame(
-                spark,
-                [(f, sub_map[f]) for f in victims],
-                "__file string, __sub string",
-            )
+    field_names = [f.name for f in pinned.fields]
+    lbl_df = F.broadcast(
+        local_frame(
+            spark,
+            [(f, sub_map[f]) for f in victims],
+            "__file string, __sub string",
         )
-        delta = (
-            live.filter(~keep_pred)
-            .join(lbl_df, "__file")
-            .select(*field_names, "__sub")
-        )
-        with _occ_scan_guard(occ):
-            staged = stage_changes(path, [(delta, "delete")])
+    )
+    delta = (
+        live.filter(~keep_pred)
+        .join(lbl_df, "__file")
+        .select(*field_names, "__sub")
+    )
+    with _occ_scan_guard():
+        staged = stage_changes(path, [(delta, "delete")])
 
     def _write_partials(tmp: str) -> None:
-        if serial:
-            # measurement baseline (SCALE.md): the round-7 shape —
-            # one rewrite job PER affected file
-            from .stats_manifest import _norm
-
-            for i, f in enumerate(sorted(partials)):
-                one = (
-                    spark.read.schema(pinned)
-                    .option("basePath", path).parquet(f)
-                    .withColumn("__file", F.lit(_norm(f)))
-                )
-                one = apply_deletion_vectors_df(
-                    spark, path, meta, one, file_col="__file"
-                )
-                one.filter(keep_pred).select(*data_cols).coalesce(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(tmp, f"__src={i}")
-                )
-        else:
-            # job 2: ONE rewrite shuffled by source file — each
-            # original's kept rows land in exactly one task, which
-            # writes exactly one part file under __src=<i>/
-            from ..literals import local_frame
-
-            src_map = local_frame(
-                spark,
-                [(f, i) for i, f in enumerate(sorted(partials))],
-                "__file string, __src int",
-            )
-            rw = (
-                live.join(F.broadcast(src_map), "__file")
-                .filter(keep_pred)
-                .select(*data_cols, "__src")
-                .repartition(len(partials), "__src")
-            )
-            rw.write.partitionBy("__src").mode("overwrite").parquet(tmp)
+        # job 2: ONE rewrite shuffled by source file — each original's
+        # kept rows land in exactly one task, which writes exactly one
+        # part file under __src=<i>/
+        src_map = local_frame(
+            spark,
+            [(f, i) for i, f in enumerate(sorted(partials))],
+            "__file string, __src int",
+        )
+        rw = (
+            live.join(F.broadcast(src_map), "__file")
+            .filter(keep_pred)
+            .select(*data_cols, "__src")
+            .repartition(len(partials), "__src")
+        )
+        rw.write.partitionBy("__src").mode("overwrite").parquet(tmp)
 
     import hashlib
 
@@ -1323,8 +1286,12 @@ def _targeted_delete_impl(
         "\x00".join(sorted(map(str, values))).encode()
     ).hexdigest()[:12]
 
-    def _commit_tail(rewritten: dict, pre_sizes: dict) -> dict:
-        # post-swap bookkeeping — runs under the gate on both paths.
+    def _commit(tmp: str) -> dict:
+        rewritten, pre_sizes = _journal_and_swap(
+            spark, path, partials, removes, tmp,
+            changes=(staged[1], "targeted_delete") if staged else None,
+            op="delete", subs=subs, name_salt=salt,
+        )
         # DV entries citing the rewritten/removed originals are DEAD
         # (the rewrite ran through the DV-aware reader, physically
         # applying their tombstones) — clear them NOW, or a later
@@ -1348,8 +1315,6 @@ def _targeted_delete_impl(
             # delta.  The per-seq file manifest rides the commit: what
             # this mutation added/rewrote/removed, with byte sizes —
             # the zero-shuffle time-travel substrate
-            from .change_feed import commit_changes
-
             commit_changes(
                 staged[1], "targeted_delete",
                 files_info={
@@ -1376,50 +1341,29 @@ def _targeted_delete_impl(
             "rows_deleted": rows_deleted,
         }
 
-    if occ:
-        # stage the rewrite UNGATED (the long Spark job), then take
-        # the gate only for validate + journal + swap + commit
-        occ_tmp = tempfile.mkdtemp(dir=path, prefix=_OCC_STAGE_PREFIX)
-        try:
+    # stage the rewrite UNGATED (the long Spark job), then take the
+    # gate only for validate + journal + swap + commit
+    try:
+        with _staging_dir(path) as tmp:
             if partials:
-                with _occ_scan_guard(True):
-                    _write_partials(occ_tmp)
-            def _do_commit() -> dict:
-                rewritten, pre_sizes = _journal_and_swap(
-                    spark, path, partials, removes, _write_partials,
-                    changes=(
-                        (staged[1], "targeted_delete")
-                        if staged else None
-                    ),
-                    op="delete", subs=subs, name_salt=salt,
-                    staged_tmp=occ_tmp,
-                )
-                return _commit_tail(rewritten, pre_sizes)
-
+                with _occ_scan_guard():
+                    _write_partials(tmp)
             return _occ_commit_window(
-                spark, path, read_fp, meta_fp, plan_head,
-                plan_listing,
+                spark, path, read_fp, meta_fp, _OCC_META_FIELDS_REWRITE,
+                lambda: _commit(tmp),
                 # rows matching this delete inserted AFTER planning
                 # live in files the victims check never saw
-                lambda newer: newer.filter(F.col(col).isin(values)),
-                _do_commit,
+                match_fn=lambda newer: newer.filter(
+                    F.col(col).isin(values)
+                ),
+                watermark=watermark,
             )
-        except _OccConflict:
-            # the staged delta belongs to the LOSING plan — abort it;
-            # the retry restages against the new table state
-            if staged:
-                from .change_feed import abort_changes
-
-                abort_changes(staged[1])
-            raise
-        finally:
-            shutil.rmtree(occ_tmp, ignore_errors=True)
-    rewritten, pre_sizes = _journal_and_swap(
-        spark, path, partials, removes, _write_partials,
-        changes=(staged[1], "targeted_delete") if staged else None,
-        op="delete", subs=subs, name_salt=salt,
-    )
-    return _commit_tail(rewritten, pre_sizes)
+    except _OccConflict:
+        # the staged delta belongs to the LOSING plan — abort it; the
+        # next attempt restages against the new table state
+        if staged:
+            abort_changes(staged[1])
+        raise
 
 
 @_with_mutation_gate
@@ -1598,10 +1542,13 @@ def apply_deletion_vectors(
                 from .change_feed import record_physical_break
 
                 record_physical_break(path)  # pre-swap: conservative
-            _journal_and_swap(
-                spark, path, partials, removes, _write_partials,
-                op="dv_compact", lineage=lineage,
-            )
+            with _staging_dir(path) as tmp:
+                if partials:
+                    _write_partials(tmp)
+                _journal_and_swap(
+                    spark, path, partials, removes, tmp,
+                    op="dv_compact", lineage=lineage,
+                )
             if lineage is not None:
                 _record_journal_lineage(path, lineage)
     if refresh_stats and (partials or removes):
@@ -1651,28 +1598,27 @@ def _table_files(
 
 
 def _prestage_inserts(
+    stage: str,
     path: str,
     ins_df: DataFrame,
     data_cols: list[str],
     part_cols: list[str],
     name_seed: str,
-    prefix: str = ".ins-stage-",
-) -> tuple[str, list[str], list[str]]:
-    """Write the insert set into a dot-prefixed staging dir INSIDE the
-    table (invisible to every reader; same-device for the final
-    placement) routed by ``partitionBy`` when the table is
-    hive-partitioned, and derive the (staged file, final target)
-    lists.  Using the writer's own partition dirs gives the correct
-    hive value encoding for free — no driver-side re-implementation
-    of partition-path escaping.  One output file per partition dir
+) -> dict[str, str]:
+    """Write the insert set under the mutation's staging dir
+    (``_staging_dir``: invisible to every reader, same-device for the
+    final placement) routed by ``partitionBy`` when the table is
+    hive-partitioned, and map each final target to its staged file.
+    Using the writer's own partition dirs gives the correct hive value
+    encoding for free — no driver-side re-implementation of
+    partition-path escaping.  One output file per partition dir
     (``repartition`` on the partition columns), each with a
     DETERMINISTIC final name derived from (changeset seed, partition
     path) so a crashed mutation's retry finds its orphans instead of
-    duplicating rows.  Stale staging dirs from crashes are swept by
-    the journal reconcile (they can only exist under the gate)."""
+    duplicating rows."""
     import hashlib
 
-    pre = tempfile.mkdtemp(dir=path, prefix=prefix)
+    pre = os.path.join(stage, "__ins")
     if part_cols:
         (
             ins_df.repartition(*[F.col(c) for c in part_cols])
@@ -1691,7 +1637,7 @@ def _prestage_inserts(
                 by_rel.setdefault(
                     "" if rel == "." else rel, []
                 ).append(os.path.join(dirpath, fn))
-    staged, adds = [], []
+    adds = {}
     for rel in sorted(by_rel):
         parts = by_rel[rel]
         if len(parts) != 1:
@@ -1702,13 +1648,10 @@ def _prestage_inserts(
         h = hashlib.sha1(
             f"{name_seed}\x00{rel}".encode()
         ).hexdigest()[:16]
-        staged.append(parts[0])
-        adds.append(
-            os.path.join(
-                path, rel, f"part-ups-{h}.snappy.parquet"
-            )
-        )
-    return pre, staged, adds
+        adds[
+            os.path.join(path, rel, f"part-ups-{h}.snappy.parquet")
+        ] = parts[0]
+    return adds
 
 
 def table_append(
@@ -1716,7 +1659,6 @@ def table_append(
     path: str,
     rows: DataFrame,
     refresh_stats: bool = True,
-    occ: bool = False,
 ) -> dict:
     """Append ``rows`` to a manifest-backed table, journaled and
     crash-safe: the write stages inside the table dir, the journal
@@ -1728,27 +1670,19 @@ def table_append(
     change feed enabled the batch is recorded as an ``insert`` delta
     (partition values materialized as columns, like every delta).
 
-    ``occ=True`` stages the batch OUTSIDE the mutation gate (an
-    append reads no existing file, so only a schema evolution or an
-    immutability flip can invalidate it) and takes the gate only for
-    the journal-move-commit window — a streaming append no longer
-    queues behind a long compaction.
+    The batch stages OUTSIDE the mutation gate (an append reads no
+    existing file, so only a schema evolution can invalidate it) and
+    takes the gate only for the journal-move-commit window — a
+    streaming append does not queue behind a long compaction.
 
     This is the CDC-shaped append (batch-sized changesets riding the
     same journal/refresh machinery as delete/upsert) — bulk loads
     should use the partitioned/bucketed writers and a manifest
     refresh instead.  Returns {files_added, rows_inserted}."""
-    if occ:
-        return _occ_retry(
-            "table_append", path,
-            lambda: _table_append_impl(
-                spark, path, rows, refresh_stats, occ=True
-            ),
-        )
-    with _mutation_gate(path):
-        return _table_append_impl(
-            spark, path, rows, refresh_stats, occ=False
-        )
+    return _optimistic_then_gated(
+        "table_append", path,
+        lambda: _table_append_impl(spark, path, rows, refresh_stats),
+    )
 
 
 def _table_append_impl(
@@ -1756,19 +1690,14 @@ def _table_append_impl(
     path: str,
     rows: DataFrame,
     refresh_stats: bool,
-    occ: bool,
 ) -> dict:
     from pyspark.sql.types import StructType
 
-    from .change_feed import commit_changes, stage_changes
+    from .change_feed import abort_changes, commit_changes, stage_changes
     from .stats_manifest import _load_meta
     from .stats_manifest import refresh_stats_manifest as _refresh
 
-    if occ:
-        with _mutation_gate(path):
-            _reconcile_delete_journal(spark, path)
-    else:
-        _reconcile_delete_journal(spark, path)
+    _reconcile_if_journaled(spark, path)
     _, meta = _load_meta(path)
     pinned = StructType.fromJson(meta["schema"])
     data_cols, part_cols = _data_columns(meta)
@@ -1786,69 +1715,54 @@ def _table_append_impl(
     shaped = rows.select(
         *[F.col(c).cast(pinned[c].dataType).alias(c) for c in all_cols]
     ).persist()
-    n = shaped.count()
-    if n == 0:
-        shaped.unpersist()
-        return {"files_added": 0, "rows_inserted": 0}
-    staged = stage_changes(path, [(shaped, "insert")])
-    pre, staged_files, adds = _prestage_inserts(
-        path, shaped, data_cols, part_cols,
-        f"append:{n}:{os.urandom(8).hex()}",
-        prefix=_OCC_STAGE_PREFIX if occ else ".ins-stage-",
-    )
-
-    def _write(tmp: str) -> None:
-        ins = os.path.join(tmp, "__ins")
-        os.makedirs(ins, exist_ok=True)
-        for i, sf in enumerate(staged_files):
-            commitio.place_file(sf, os.path.join(ins, f"{i:07d}.parquet"))
-
-    def _commit() -> dict:
-        _journal_and_swap(
-            spark, path, [], [], _write, adds=adds,
-            changes=(staged[1], "table_append") if staged else None,
-            op="append",
-        )
-        append_files_info = {
-            "rewrites": {},
-            "removes": {},
-            "adds": {_uri(a): os.path.getsize(a) for a in adds},
-        }
-        if refresh_stats:
-            _refresh(spark, path, meta["cols"])
-        if staged:
-            commit_changes(
-                staged[1], "table_append",
-                files_info=append_files_info,
-            )
-        try:
-            os.remove(_delete_journal_path(path))
-        except FileNotFoundError:
-            pass
-        return {"files_added": len(adds), "rows_inserted": n}
-
     try:
-        if occ:
-            # commit window: an append stages only NEW files, so the
-            # validation is just the metadata fingerprint (schema /
-            # immutability); the journal-move-commit is metadata-fast
-            try:
-                with _mutation_gate(path):
-                    _reconcile_delete_journal(spark, path)
-                    _occ_validate(
-                        spark, path, {}, meta_fp,
-                        _OCC_META_FIELDS_APPEND,
-                    )
-                    return _commit()
-            except _OccConflict:
-                from .change_feed import abort_changes
+        n = shaped.count()
+        if n == 0:
+            return {"files_added": 0, "rows_inserted": 0}
+        staged = stage_changes(path, [(shaped, "insert")])
 
-                if staged:
-                    abort_changes(staged[1])
-                raise
-        return _commit()
+        def _commit(adds: dict[str, str]) -> dict:
+            _journal_and_swap(
+                spark, path, [], [], adds=adds,
+                changes=(staged[1], "table_append") if staged else None,
+                op="append",
+            )
+            append_files_info = {
+                "rewrites": {},
+                "removes": {},
+                "adds": {_uri(a): os.path.getsize(a) for a in adds},
+            }
+            if refresh_stats:
+                _refresh(spark, path, meta["cols"])
+            if staged:
+                commit_changes(
+                    staged[1], "table_append",
+                    files_info=append_files_info,
+                )
+            try:
+                os.remove(_delete_journal_path(path))
+            except FileNotFoundError:
+                pass
+            return {"files_added": len(adds), "rows_inserted": n}
+
+        # commit window: an append stages only NEW files, so the
+        # validation is just the schema fingerprint; the
+        # journal-move-commit is metadata-fast
+        try:
+            with _staging_dir(path) as tmp:
+                adds = _prestage_inserts(
+                    tmp, path, shaped, data_cols, part_cols,
+                    f"append:{n}:{os.urandom(8).hex()}",
+                )
+                return _occ_commit_window(
+                    spark, path, {}, meta_fp, _OCC_META_FIELDS_APPEND,
+                    lambda: _commit(adds),
+                )
+        except _OccConflict:
+            if staged:
+                abort_changes(staged[1])
+            raise
     finally:
-        shutil.rmtree(pre, ignore_errors=True)
         shaped.unpersist()
 
 
@@ -1860,46 +1774,28 @@ def targeted_upsert(
     refresh_stats: bool = True,
     max_driver_rows: int = 100_000,
     distributed: bool | None = None,
-    occ: bool = False,
 ) -> dict:
-    # thin cleanup shell: the distributed path persists the shaped
-    # changeset, and EVERY exit (validation ValueError, planning
-    # failure, swap crash) must unpersist it or the cached partitions
-    # stay pinned for the session (self-review finding)
-    persisted: list[DataFrame] = []
-    try:
-        if occ:
-            # occ=True: classification + rewrite + insert staging run
-            # OUTSIDE the gate; a short validated commit window takes
-            # it (the delete/compact OCC discipline, incl. the
-            # concurrent-matching-append conflict — Delta's
-            # ConcurrentAppendException shape for MERGE)
-            def _attempt():
-                try:
-                    return _targeted_upsert_impl(
-                        spark, path, key_col, updates, refresh_stats,
-                        max_driver_rows, distributed, persisted,
-                        occ=True,
-                    )
-                except _OccConflict:
-                    # release the LOSING attempt's cached changeset
-                    # now — a conflicting backfill-scale MERGE would
-                    # otherwise pin up to _OCC_RETRIES multi-GB
-                    # copies at once (round-11 self-review)
-                    for df in persisted:
-                        df.unpersist()
-                    persisted.clear()
-                    raise
-
-            return _occ_retry("targeted_upsert", path, _attempt)
-        with _mutation_gate(path):
+    def _attempt():
+        # thin cleanup shell: the distributed path persists the shaped
+        # changeset, and EVERY exit of an attempt (validation
+        # ValueError, planning failure, conflict, swap crash) must
+        # unpersist it or the cached partitions stay pinned for the
+        # session (self-review finding)
+        persisted: list[DataFrame] = []
+        try:
             return _targeted_upsert_impl(
                 spark, path, key_col, updates, refresh_stats,
-                max_driver_rows, distributed, persisted, occ=False,
+                max_driver_rows, distributed, persisted,
             )
-    finally:
-        for df in persisted:
-            df.unpersist()
+        finally:
+            for df in persisted:
+                df.unpersist()
+
+    # classification + rewrite + insert staging run OUTSIDE the gate; a
+    # short validated commit window takes it (incl. the
+    # concurrent-matching-append conflict — Delta's
+    # ConcurrentAppendException shape for MERGE)
+    return _optimistic_then_gated("targeted_upsert", path, _attempt)
 
 
 def _targeted_upsert_impl(
@@ -1911,7 +1807,6 @@ def _targeted_upsert_impl(
     max_driver_rows: int,
     distributed: bool | None,
     _persisted: list,
-    occ: bool = False,
 ) -> dict:
     """MERGE a batch-sized changeset into a manifest-backed table,
     copy-on-write: rows whose key (``key_col`` — one column name or a
@@ -1982,7 +1877,7 @@ def _targeted_upsert_impl(
     rows_inserted}."""
     from pyspark.sql.types import StructType
 
-    from .change_feed import commit_changes, stage_changes
+    from .change_feed import abort_changes, commit_changes, stage_changes
     from .stats_manifest import (
         _load_meta,
         _norm_col,
@@ -1992,19 +1887,8 @@ def _targeted_upsert_impl(
     )
     from .stats_manifest import refresh_stats_manifest as _refresh
 
-    plan_head = None
-    plan_listing = ""
-    if occ:
-        with _mutation_gate(path):
-            _reconcile_delete_journal(spark, path)
-        from .change_feed import change_feed_enabled, latest_change_seq
-
-        if change_feed_enabled(path):
-            plan_head = latest_change_seq(path)
-        else:
-            plan_listing = _occ_listing_fingerprint(path)
-    else:
-        _reconcile_delete_journal(spark, path)
+    _reconcile_if_journaled(spark, path)
+    watermark = _insert_watermark(path)
     _, meta = _load_meta(path)
     pinned = StructType.fromJson(meta["schema"])
     data_cols, part_cols = _data_columns(meta)
@@ -2192,7 +2076,7 @@ def _targeted_upsert_impl(
                     )
                 ).alias("matched")
             )
-        with _occ_scan_guard(occ):
+        with _occ_scan_guard():
             cls = (
                 live.select("__file", *key_cols, *guard_cols)
                 .join(upd_keys, key_cols, "left")
@@ -2216,17 +2100,8 @@ def _targeted_upsert_impl(
             if not dist:
                 matched_keys |= {tuple(k) for k in r["matched"]}
             partials.append(r["__file"])
-    read_fp: dict[str, int] = {}
-    meta_fp = ""
-    if occ:
-        for f in [_local(x) for x in partials]:
-            try:
-                read_fp[f] = os.path.getsize(f)
-            except OSError:
-                raise _OccConflict(
-                    f"planned file vanished mid-plan: {f}"
-                ) from None
-        meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
+    read_fp = _read_fingerprint([_local(x) for x in partials])
+    meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
     n_inserts = 0
     ins_df = None
     if dist:
@@ -2239,7 +2114,7 @@ def _targeted_upsert_impl(
             )
         else:
             ins_df = upd_df
-        with _occ_scan_guard(occ):
+        with _occ_scan_guard():
             n_inserts = ins_df.count()
         if n_inserts == 0:
             ins_df = None
@@ -2255,25 +2130,10 @@ def _targeted_upsert_impl(
             "files_affected": len(affected), "files_rewritten": 0,
             "rows_updated": 0, "rows_inserted": 0,
         }
-    adds: list[str] = []
-    pre_dir = None
-    ins_staged: list[str] = []
     if not dist and n_inserts:
         ins_df = local_frame(
             spark, [tuple(r) for r in insert_rows], ddl
         )
-    if ins_df is not None:
-        # seed from the changeset CONTENT (not randomness): a crashed
-        # merge's retry re-derives the same targets and reconciles
-        # orphans instead of duplicating rows; content-addressing also
-        # means two DIFFERENT merges can never reuse a file name, the
-        # identity assumption of the per-seq file manifests
-        with _occ_scan_guard(occ):
-            pre_dir, ins_staged, adds = _prestage_inserts(
-                path, ins_df, data_cols, part_cols,
-                f"{changeset_salt}:ins",
-                prefix=_OCC_STAGE_PREFIX if occ else ".ins-stage-",
-            )
     # merged view of the partial files: matched rows take the update's
     # columns (broadcast left join on the key columns), others pass
     # through
@@ -2311,7 +2171,6 @@ def _targeted_upsert_impl(
             *[c for c in src.columns if c not in data_cols],
         )
 
-    staged = None
     parts = []
     # sub-delta labels per rewritten file (plus "ins" for the insert
     # set) — the crash reconcile commits exactly the completed subset
@@ -2345,10 +2204,10 @@ def _targeted_upsert_impl(
         parts.append(
             (ins_df.withColumn("__sub", F.lit("ins")), "insert")
         )
-    with _occ_scan_guard(occ):
+    with _occ_scan_guard():
         staged = stage_changes(path, parts)
 
-    def _write(tmp: str) -> None:
+    def _write(tmp: str) -> dict[str, str]:
         if partials:
             src_map = local_frame(
                 spark,
@@ -2361,15 +2220,25 @@ def _targeted_upsert_impl(
                 len(partials), "__src"
             )
             rw.write.partitionBy("__src").mode("overwrite").parquet(tmp)
-        if ins_staged:
-            ins = os.path.join(tmp, "__ins")
-            os.makedirs(ins, exist_ok=True)
-            for i, sf in enumerate(ins_staged):
-                commitio.place_file(
-                    sf, os.path.join(ins, f"{i:07d}.parquet")
-                )
+        if ins_df is None:
+            return {}
+        # seed from the changeset CONTENT (not randomness): a crashed
+        # merge's retry re-derives the same targets and reconciles
+        # orphans instead of duplicating rows; content-addressing also
+        # means two DIFFERENT merges can never reuse a file name, the
+        # identity assumption of the per-seq file manifests.  Staged
+        # after the rewrite, whose overwrite would clear the dir
+        return _prestage_inserts(
+            tmp, path, ins_df, data_cols, part_cols,
+            f"{changeset_salt}:ins",
+        )
 
-    def _commit_tail(rewritten: dict, pre_sizes: dict) -> dict:
+    def _commit(tmp: str, adds: dict[str, str]) -> dict:
+        rewritten, pre_sizes = _journal_and_swap(
+            spark, path, partials, [], tmp, adds=adds,
+            changes=(staged[1], "targeted_upsert") if staged else None,
+            op="upsert", subs=subs, name_salt=changeset_salt,
+        )
         # rewritten originals' DV entries are dead (tombstones
         # physically applied by the DV-aware rewrite) — clear before
         # they can be mis-read as orphans (round-8 ADVICE high)
@@ -2409,55 +2278,25 @@ def _targeted_upsert_impl(
         }
 
     try:
-        if occ:
-            occ_tmp = tempfile.mkdtemp(
-                dir=path, prefix=_OCC_STAGE_PREFIX
+        with _staging_dir(path) as tmp:
+            with _occ_scan_guard():
+                adds = _write(tmp)
+            return _occ_commit_window(
+                spark, path, read_fp, meta_fp, _OCC_META_FIELDS_REWRITE,
+                lambda: _commit(tmp, adds),
+                # a row whose key matches this changeset inserted AFTER
+                # planning would silently dodge the merge (classified
+                # neither update nor insert)
+                match_fn=lambda newer: newer.join(
+                    upd_df.select(*key_cols).distinct(),
+                    key_cols, "semi",
+                ),
+                watermark=watermark,
             )
-            try:
-                with _occ_scan_guard(True):
-                    _write(occ_tmp)
-                def _do_commit() -> dict:
-                    rewritten, pre_sizes = _journal_and_swap(
-                        spark, path, partials, [], _write, adds=adds,
-                        changes=(
-                            (staged[1], "targeted_upsert")
-                            if staged else None
-                        ),
-                        op="upsert", subs=subs,
-                        name_salt=changeset_salt,
-                        staged_tmp=occ_tmp,
-                    )
-                    return _commit_tail(rewritten, pre_sizes)
-
-                return _occ_commit_window(
-                    spark, path, read_fp, meta_fp, plan_head,
-                    plan_listing,
-                    # a row whose key matches this changeset inserted
-                    # AFTER planning would silently dodge the merge
-                    # (classified neither update nor insert)
-                    lambda newer: newer.join(
-                        upd_df.select(*key_cols).distinct(),
-                        key_cols, "semi",
-                    ),
-                    _do_commit,
-                )
-            except _OccConflict:
-                if staged:
-                    from .change_feed import abort_changes
-
-                    abort_changes(staged[1])
-                raise
-            finally:
-                shutil.rmtree(occ_tmp, ignore_errors=True)
-        rewritten, pre_sizes = _journal_and_swap(
-            spark, path, partials, [], _write, adds=adds,
-            changes=(staged[1], "targeted_upsert") if staged else None,
-            op="upsert", subs=subs, name_salt=changeset_salt,
-        )
-        return _commit_tail(rewritten, pre_sizes)
-    finally:
-        if pre_dir:
-            shutil.rmtree(pre_dir, ignore_errors=True)
+    except _OccConflict:
+        if staged:
+            abort_changes(staged[1])
+        raise
 
 
 # the public entry point carries the full contract docstring
@@ -2485,16 +2324,15 @@ def compact_table(
     min_group: int = 2,
     sort_cols: list[str] | None = None,
     refresh_stats: bool = True,
-    occ: bool = False,
 ) -> dict:
     """Incremental in-place small-file compaction of a manifest-backed
     table — Delta's ``OPTIMIZE`` re-expressed on the journal/swap
-    machinery.  ``occ=True`` runs the (long) group rewrite OUTSIDE
-    the mutation gate and commits under a short validated window —
-    the compaction's inputs are SEALED files, so concurrent appends
-    and disjoint deletes proceed while it packs; a writer that
-    touches one of its inputs fails the commit-time validation and
-    the compaction replans.  Files smaller than ``target_bytes`` are bin-packed
+    machinery.  The (long) group rewrite runs OUTSIDE the mutation
+    gate and commits under a short validated window — the
+    compaction's inputs are SEALED files, so concurrent appends and
+    disjoint deletes proceed while it packs; a writer that touches
+    one of its inputs fails the commit-time validation and the
+    compaction replans under the gate.  Files smaller than ``target_bytes`` are bin-packed
     (first-fit over a size-sorted list) into groups of ~``target_bytes``
     and each group is rewritten as ONE file; files already at target
     size are left byte-untouched, so the cost is O(small files), not
@@ -2516,19 +2354,13 @@ def compact_table(
     visible row multiset is unchanged, so time travel and CDC
     consumers are oblivious — pinned by test).  Returns
     {files_compacted, files_written, rows}."""
-    if occ:
-        return _occ_retry(
-            "compact_table", path,
-            lambda: _compact_table_impl(
-                spark, path, target_bytes, min_group, sort_cols,
-                refresh_stats, occ=True,
-            ),
-        )
-    with _mutation_gate(path):
-        return _compact_table_impl(
+    return _optimistic_then_gated(
+        "compact_table", path,
+        lambda: _compact_table_impl(
             spark, path, target_bytes, min_group, sort_cols,
-            refresh_stats, occ=False,
-        )
+            refresh_stats,
+        ),
+    )
 
 
 def _compact_table_impl(
@@ -2538,7 +2370,6 @@ def _compact_table_impl(
     min_group: int,
     sort_cols: list[str] | None,
     refresh_stats: bool,
-    occ: bool,
 ) -> dict:
     from pyspark.sql.types import StructType
 
@@ -2550,11 +2381,7 @@ def _compact_table_impl(
     )
     from .stats_manifest import refresh_stats_manifest as _refresh
 
-    if occ:
-        with _mutation_gate(path):
-            _reconcile_delete_journal(spark, path)
-    else:
-        _reconcile_delete_journal(spark, path)
+    _reconcile_if_journaled(spark, path)
     _, meta = _load_meta(path)
     pinned = StructType.fromJson(meta["schema"])
     all_files = _table_files(spark, path, meta)
@@ -2572,13 +2399,9 @@ def _compact_table_impl(
         try:
             sized.append((os.path.getsize(_local(f)), f))
         except FileNotFoundError:
-            if occ:  # a concurrent writer won this file — replan
-                raise _OccConflict(
-                    f"{f} vanished during compaction planning"
-                ) from None
-            raise ValueError(
-                f"{f} vanished during compaction planning — another "
-                f"writer is mutating {path}; serialize maintenance"
+            # a concurrent writer won this file — replan
+            raise _OccConflict(
+                f"{f} vanished during compaction planning"
             ) from None
     small = sorted(
         (s, f) for s, f in sized if s < target_bytes
@@ -2620,7 +2443,7 @@ def _compact_table_impl(
     # no output file — its originals are pure removes (without this,
     # the remap below would look for a __grp dir that was never
     # written and wedge the compaction on every retry)
-    with _occ_scan_guard(occ):
+    with _occ_scan_guard():
         live_counts = {
             int(r["__grp"]): int(r["n"])
             for r in live.join(F.broadcast(grp_map), "__file")
@@ -2639,25 +2462,16 @@ def _compact_table_impl(
         )
         for i in alive
     ]
-    read_fp: dict[str, int] = {}
-    meta_fp = ""
-    if occ:
-        for f in removes:
-            try:
-                read_fp[f] = os.path.getsize(f)
-            except OSError:
-                raise _OccConflict(
-                    f"planned file vanished mid-plan: {f}"
-                ) from None
-        meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
+    read_fp = _read_fingerprint(removes)
+    meta_fp = _occ_meta_fingerprint(meta, _OCC_META_FIELDS_REWRITE)
     # rows written = the live (post-DV) counts already computed for
-    # the alive/remove split — no post-commit read job, and in occ
-    # mode no read AFTER the gate released (a concurrent rewrite of a
-    # fresh output file would turn a committed OPTIMIZE into a
-    # spurious hard error — round-11 self-review)
+    # the alive/remove split — no post-commit read job, so no read
+    # AFTER the gate released (a concurrent rewrite of a fresh output
+    # file would turn a committed OPTIMIZE into a spurious hard error
+    # — round-11 self-review)
     n_rows = sum(live_counts.get(i, 0) for i in alive)
 
-    def _write(tmp: str) -> None:
+    def _write(tmp: str) -> dict[str, str]:
         rw = (
             live.join(F.broadcast(grp_map), "__file")
             .select(*data_cols, "__grp")
@@ -2666,21 +2480,16 @@ def _compact_table_impl(
         if sort_cols:
             rw = rw.sortWithinPartitions(*sort_cols)
         rw.write.partitionBy("__grp").mode("overwrite").parquet(tmp)
-        # group dirs come back as __grp=<i>; remap to the __ins
-        # contract (one sorted part per add target, alive groups only)
-        ins = os.path.join(tmp, "__ins")
-        os.makedirs(ins, exist_ok=True)
-        for j, i in enumerate(alive):
+        # group dirs come back as __grp=<i>: map each alive group's
+        # one part file to its add target
+        staged = {}
+        for target, i in zip(adds, alive):
             gdir = os.path.join(tmp, f"__grp={i}")
             part = next(
-                fn
-                for fn in os.listdir(gdir)
-                if fn.endswith(".parquet")
+                fn for fn in os.listdir(gdir) if fn.endswith(".parquet")
             )
-            commitio.place_file(
-                os.path.join(gdir, part),
-                os.path.join(ins, f"{j:07d}.parquet"),
-            )
+            staged[target] = os.path.join(gdir, part)
+        return staged
 
     # files change with NO feed delta: instead of a hard physical
     # break (which forced every pre-compaction seq onto the arithmetic
@@ -2705,23 +2514,19 @@ def _compact_table_impl(
                     "adds": (
                         [add_by_group[i]] if i in add_by_group else []
                     ),
-                    "removes": {
-                        _local(f): os.path.getsize(_local(f))
-                        for f in g
-                    },
+                    "removes": {_local(f): read_fp[_local(f)] for f in g},
                 }
                 for i, g in enumerate(groups)
             ],
         }
-    def _commit() -> None:
+    def _commit(staged: dict[str, str]) -> None:
         if lineage is None:
             from .change_feed import record_physical_break
 
             record_physical_break(path)  # pre-swap: conservative
         _journal_and_swap(
-            spark, path, [], removes, _write, adds=adds,
+            spark, path, [], removes, adds=staged,
             op="compact", lineage=lineage,
-            staged_tmp=occ_tmp if occ else None,
         )
         if lineage is not None:
             _record_journal_lineage(path, lineage)
@@ -2742,26 +2547,16 @@ def _compact_table_impl(
         except FileNotFoundError:
             pass
 
-    if occ:
-        # stage the group rewrite UNGATED; commit under a short
-        # validated window — inputs are sealed files, so appends and
-        # disjoint deletes proceed while the pack job runs
-        occ_tmp = tempfile.mkdtemp(dir=path, prefix=_OCC_STAGE_PREFIX)
-        try:
-            with _occ_scan_guard(True):
-                _write(occ_tmp)
-            with _mutation_gate(path):
-                _reconcile_delete_journal(spark, path)
-                _occ_validate(
-                    spark, path, read_fp, meta_fp,
-                    _OCC_META_FIELDS_REWRITE,
-                )
-                _commit()
-        finally:
-            shutil.rmtree(occ_tmp, ignore_errors=True)
-    else:
-        occ_tmp = None
-        _commit()
+    # stage the group rewrite UNGATED; commit under a short validated
+    # window — inputs are sealed files, so appends and disjoint
+    # deletes proceed while the pack job runs
+    with _staging_dir(path) as tmp:
+        with _occ_scan_guard():
+            staged = _write(tmp)
+        _occ_commit_window(
+            spark, path, read_fp, meta_fp, _OCC_META_FIELDS_REWRITE,
+            lambda: _commit(staged),
+        )
     return {
         "files_compacted": len(removes),
         "files_written": len(adds),

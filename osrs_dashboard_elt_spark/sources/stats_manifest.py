@@ -795,6 +795,13 @@ def _refresh_once(
     return len(new_files), len(removed)
 
 
+class StaleManifestError(ValueError):
+    """The manifest's recorded files differ from the data dir's
+    listing.  A planner that lists the table while a writer sits
+    between its file swap and its manifest refresh sees this too —
+    the mutation protocol treats it as a conflict outside the gate."""
+
+
 def _check_fresh(man: DataFrame, full: DataFrame, path: str) -> None:
     """Refuse a manifest whose recorded files differ from the data
     dir's listing (``full``, a :func:`_full_read`)."""
@@ -805,7 +812,7 @@ def _check_fresh(man: DataFrame, full: DataFrame, path: str) -> None:
     if manifest_files != current:
         missing = sorted(current - manifest_files)[:3]
         extra = sorted(manifest_files - current)[:3]
-        raise ValueError(
+        raise StaleManifestError(
             f"stats manifest for {path} is stale: "
             f"{len(current - manifest_files)} data files have no stats "
             f"(e.g. {missing}), {len(manifest_files - current)} stats "

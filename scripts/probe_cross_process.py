@@ -10,16 +10,14 @@ final row count, one committed feed seq per append with no gaps or
 double-claims, an exact as-of read at seq 0, and the maintained view
 equal to a direct recompute.
 
-With ``occ`` as the final argument the workers append with
-``occ=True`` (optimistic concurrency: staging outside the gate,
-validated commit window) — the cross-process extension of the
-round-11 OCC work: two real processes stage simultaneously and must
-still commit contiguous seqs with exact rows/as-of/view.
+Every append runs the one writer protocol (staging outside the gate,
+validated commit window), so the two processes stage simultaneously
+and must still commit contiguous seqs with exact rows/as-of/view.
 
 Usage:
-  python scripts/probe_cross_process.py [batches_per_worker] [occ]
+  python scripts/probe_cross_process.py [batches_per_worker]
   python scripts/probe_cross_process.py worker <table> <view|-> \
-      <n> <worker_id> <gated|occ>            (internal)
+      <n> <worker_id>                        (internal)
 """
 
 from __future__ import annotations
@@ -35,9 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def worker(
-    table: str, view: str, n: int, wid: int, mode: str = "gated"
-) -> None:
+def worker(table: str, view: str, n: int, wid: int) -> None:
     from pyspark.sql import functions as F  # noqa: F401
 
     from osrs_dashboard_elt_spark.literals import local_frame
@@ -59,16 +55,14 @@ def worker(
             [(base, base % 13, "w"), (base + 1, (base + 1) % 13, "w")],
             "doc_id long, grp long, text string",
         )
-        table_append(spark, table, df, occ=(mode == "occ"))
+        table_append(spark, table, df)
         if view != "-":
             refresh_view_segmented(spark, table, view)
     print(f"WORKER {wid} DONE")
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "occ"]
-    mode = "occ" if "occ" in sys.argv[1:] else "gated"
-    n = int(args[0]) if args else 5
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     from pyspark.sql import functions as F
 
     from osrs_dashboard_elt_spark.session import get_spark
@@ -117,7 +111,6 @@ def main() -> None:
             [
                 sys.executable, os.path.abspath(__file__), "worker",
                 table, view if wid == 1 else "-", str(n), str(wid),
-                mode,
             ],
             stdout=outs[wid - 1], stderr=subprocess.STDOUT,
         )
@@ -132,7 +125,6 @@ def main() -> None:
     ]
     out = {
         "op": "cross_process_contention",
-        "mode": mode,
         "batches_per_worker": n,
         "worker_rcs": rcs,
         "wall_s": round(time.time() - t0, 2),
@@ -182,7 +174,6 @@ if __name__ == "__main__":
         worker(
             sys.argv[2], sys.argv[3], int(sys.argv[4]),
             int(sys.argv[5]),
-            sys.argv[6] if len(sys.argv) > 6 else "gated",
         )
     else:
         main()

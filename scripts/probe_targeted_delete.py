@@ -1,18 +1,16 @@
-"""Probe: batched vs serial targeted_delete at growing affected-file
-counts (the round-8 scale fix, sources/maintenance.py).
+"""Probe: targeted_delete at growing affected-file counts (the
+round-8 scale fix, sources/maintenance.py).
 
-The serial form (round 7) schedules ~2 Spark jobs PER affected file —
-at 2,000 files that is ~4,000 sequential job launches, pure scheduling
-latency.  The batched form runs ONE classification scan + ONE rewrite
-job regardless of |affected|.  This probe builds a table with exactly
-one target value per file (per-file min_doc_id from the manifest, so
-EVERY file is affected), times both modes, and prints one JSON line
-per (mode, n_files) plus a summary.
+The round-7 per-file form scheduled ~2 Spark jobs PER affected file
+(SCALE.md keeps its figures); the batched form runs ONE
+classification scan + ONE rewrite job regardless of |affected|.  This
+probe builds a table with exactly one target value per file (per-file
+min_doc_id from the manifest, so EVERY file is affected), times the
+delete, and prints one JSON line per n_files plus a summary of the
+job counts (flat in n_files).
 
 Usage: python scripts/probe_targeted_delete.py [max_files]
-       (default 2048; serial runs are capped at 512 — beyond that the
-       serial wall clock is minutes of scheduling and the slope is
-       already unambiguous)
+       (default 2048)
 """
 
 from __future__ import annotations
@@ -38,7 +36,6 @@ from osrs_dashboard_elt_spark.sources.stats_manifest import (  # noqa: E402
 )
 
 ROWS_PER_FILE = 200
-SERIAL_CAP = 512
 
 
 def build(spark, path: str, n_files: int) -> list:
@@ -81,37 +78,26 @@ def main() -> None:
     sizes = [n for n in (128, 512, 2048) if n <= max_files]
     results = []
     for n_files in sizes:
-        for mode in ("batched", "serial"):
-            if mode == "serial" and n_files > SERIAL_CAP:
-                continue
-            path = tempfile.mkdtemp(prefix=f"tdel_{mode}_") + "/tbl"
-            values = build(spark, path, n_files)
-            dt, jobs, res = timed(
-                spark,
-                lambda: targeted_delete(
-                    spark, path, "doc_id", values,
-                    serial=(mode == "serial"),
-                ),
-            )
-            rec = {
-                "mode": mode,
-                "n_files": n_files,
-                "sec": round(dt, 2),
-                "jobs": jobs,
-                "files_rewritten": res["files_rewritten"],
-                "rows_deleted": res["rows_deleted"],
-            }
-            assert res["rows_deleted"] == n_files, rec
-            results.append(rec)
-            print(json.dumps(rec), flush=True)
-    by = {(r["mode"], r["n_files"]): r for r in results}
-    summary = {"summary": "targeted_delete batched vs serial"}
-    if ("serial", 512) in by and ("batched", 512) in by:
-        summary["speedup_512"] = round(
-            by[("serial", 512)]["sec"] / by[("batched", 512)]["sec"], 1
+        path = tempfile.mkdtemp(prefix="tdel_") + "/tbl"
+        values = build(spark, path, n_files)
+        dt, jobs, res = timed(
+            spark, lambda: targeted_delete(spark, path, "doc_id", values)
         )
+        rec = {
+            "n_files": n_files,
+            "sec": round(dt, 2),
+            "jobs": jobs,
+            "files_rewritten": res["files_rewritten"],
+            "rows_deleted": res["rows_deleted"],
+        }
+        assert res["rows_deleted"] == n_files, rec
+        results.append(rec)
+        print(json.dumps(rec), flush=True)
+    summary = {
+        "summary": "targeted_delete jobs by affected files",
+        "jobs": {r["n_files"]: r["jobs"] for r in results},
+    }
     print(json.dumps(summary), flush=True)
-
 
 if __name__ == "__main__":
     main()

@@ -31,8 +31,6 @@ _SOAK = {
     ("test_maintenance.py", "test_cross_process_mutation_contention"),
     ("test_maintenance.py", "test_compact_crash_rolls_forward_or_back"),
     ("test_maintenance.py", "test_mutation_gate_serializes_and_times_out"),
-    ("test_occ.py", "test_cross_process_occ_contention"),
-    ("test_occ.py", "test_asof_arithmetic_stable_under_concurrent_occ_appends"),
     ("test_ivm.py", "test_segmented_view_writes_only_affected_groups_and_folds"),
     ("test_ivm.py", "test_segmented_view_value_maps_absorb_distinct_retractions"),
     ("test_ivm.py", "test_segmented_view_rings_absorb_retractions"),

@@ -347,8 +347,9 @@ def test_cross_process_mutation_contention():
     """Round-9 judge ask #7: the mutation gate's foreign-process story
     was only ever exercised single-process.  Two SEPARATE python
     processes (own SparkSessions) append to one table concurrently —
-    one also refreshing a segmented IVM view through the same gate —
-    and serialization must really hold: exact rows, one contiguous
+    staging outside the gate simultaneously, one also refreshing a
+    segmented IVM view through the same gate — and serialization of
+    the commit windows must really hold: exact rows, one contiguous
     committed feed seq per append, exact as-of at seq 0, maintained
     view equal to a direct recompute."""
     import json
@@ -368,7 +369,10 @@ def test_cross_process_mutation_contention():
         ln for ln in out.stdout.splitlines()
         if ln.startswith('{"op"')
     ]
-    assert out.returncode == 0, (out.stdout[-2000:], out.stderr[-500:])
-    rec = json.loads(lines[-1])
+    # parse the record BEFORE the rc assert: a failure must surface
+    # the probe's own per-check verdicts (incl. the raw seq list),
+    # not a progress-bar-filled stdout tail (round-11 flake note)
+    rec = json.loads(lines[-1]) if lines else None
+    assert out.returncode == 0, (rec, out.stderr[-500:])
     assert rec["ok"] is True, rec
-    assert rec["seqs_contiguous"] and rec["committed_seqs"] == 6
+    assert rec["seqs_contiguous"] and rec["committed_seqs"] == 6, rec

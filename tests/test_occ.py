@@ -1,15 +1,17 @@
-"""Optimistic writer concurrency (round-10 judge ask #2): ``occ=True``
-mutations stage their Spark work OUTSIDE the table mutation gate and
-take it only for a short validate-journal-swap-commit window, so
-DISJOINT mutations (append vs. compaction of sealed files, deletes on
-different files) overlap their data work; OVERLAPPING mutations fail
-commit-time validation and retry from planning.
+"""The writer protocol (optimistic concurrency with a gated fallback):
+every table mutation stages its Spark work OUTSIDE the table mutation
+gate and takes it only for a short validate-journal-swap-commit
+window, so DISJOINT mutations (append vs. compaction of sealed files,
+deletes on different files) overlap their data work; an OVERLAPPING
+mutation fails commit-time validation and runs exactly once more
+holding the gate for the whole attempt.
 
-The rendezvous trick: occ staging dirs are created through
+The rendezvous trick: staging dirs are created through
 ``tempfile.mkdtemp(prefix='.occ-stage-')`` — intercepting that call
 parks each writer at the START of its ungated staging phase until
 both have arrived, proving the overlap is real (both mutations are
-mid-flight simultaneously), not a lucky interleave."""
+mid-flight simultaneously), not a lucky interleave.  Attempts are
+counted at the retry point, ``maintenance._optimistic_then_gated``."""
 
 from __future__ import annotations
 
@@ -80,6 +82,44 @@ def _stage_rendezvous(monkeypatch, parties=2, timeout=120.0):
     return state
 
 
+def _count_attempts(monkeypatch):
+    """Patch the retry point so every attempt (optimistic and gated)
+    records the name of the thread running it."""
+    attempts: list[str] = []
+    real = maintenance._optimistic_then_gated
+
+    def counting(op, path_, fn):
+        def counted():
+            attempts.append(threading.current_thread().name)
+            return fn()
+
+        return real(op, path_, counted)
+
+    monkeypatch.setattr(maintenance, "_optimistic_then_gated", counting)
+    return attempts
+
+
+def _pause_first_stage(monkeypatch):
+    """Park the first mutation that creates a staging dir until the
+    returned release event is set; the staged event fires when it
+    parks."""
+    staged_ev = threading.Event()
+    release_ev = threading.Event()
+    real_mkdtemp = maintenance.tempfile.mkdtemp
+
+    def pausing(*a, **k):
+        d = real_mkdtemp(*a, **k)
+        if str(k.get("prefix", "")).startswith(
+            maintenance._OCC_STAGE_PREFIX
+        ) and not staged_ev.is_set():
+            staged_ev.set()
+            assert release_ev.wait(120)
+        return d
+
+    monkeypatch.setattr(maintenance.tempfile, "mkdtemp", pausing)
+    return staged_ev, release_ev
+
+
 def _run_threads(*fns):
     out: dict[int, object] = {}
     errs: dict[int, BaseException] = {}
@@ -118,10 +158,8 @@ def test_occ_append_and_compact_overlap_and_both_commit(
         F.concat(F.lit("t"), F.col("id")).alias("text"),
     )
     res = _run_threads(
-        lambda: table_append(spark, path, new_rows, occ=True),
-        lambda: compact_table(
-            spark, path, target_bytes=1 << 20, occ=True
-        ),
+        lambda: table_append(spark, path, new_rows),
+        lambda: compact_table(spark, path, target_bytes=1 << 20),
     )
     assert res[0]["rows_inserted"] == 20
     assert res[1]["files_compacted"] >= 2
@@ -147,8 +185,8 @@ def test_occ_disjoint_deletes_both_commit_exact_deltas(
     _stage_rendezvous(monkeypatch, parties=2)
     a_ids, b_ids = [5, 17, 40], [350, 371]
     res = _run_threads(
-        lambda: targeted_delete(spark, path, "doc_id", a_ids, occ=True),
-        lambda: targeted_delete(spark, path, "doc_id", b_ids, occ=True),
+        lambda: targeted_delete(spark, path, "doc_id", a_ids),
+        lambda: targeted_delete(spark, path, "doc_id", b_ids),
     )
     assert res[0]["rows_deleted"] == 3
     assert res[1]["rows_deleted"] == 2
@@ -175,56 +213,33 @@ def test_occ_disjoint_deletes_both_commit_exact_deltas(
 def test_occ_overlapping_delete_conflicts_then_retries_exact(
     spark, tmp_path, monkeypatch
 ):
-    """An occ delete whose victims get rewritten UNDER it (a gated
-    delete commits while it stages) must fail validation and retry —
-    the retry replans against the new state, finds nothing left to
-    delete, and the final state is exact with no double delta."""
+    """A delete whose victims get rewritten UNDER it (another delete
+    commits while it stages) fails validation and runs exactly once
+    more, holding the gate — that attempt replans against the new
+    state, and the final state is exact with no double delta."""
     path = str(tmp_path / "tbl")
     _mk_tbl(spark, path, n=400, files=4)
-    staged_ev = threading.Event()
-    release_ev = threading.Event()
-    real_mkdtemp = maintenance.tempfile.mkdtemp
-
-    def pausing(*a, **k):
-        d = real_mkdtemp(*a, **k)
-        if str(k.get("prefix", "")).startswith(
-            maintenance._OCC_STAGE_PREFIX
-        ) and not staged_ev.is_set():
-            staged_ev.set()
-            assert release_ev.wait(120)
-        return d
-
-    monkeypatch.setattr(maintenance.tempfile, "mkdtemp", pausing)
-    # count ATTEMPTS through the retry loop: the conflict may surface
-    # at commit-time validation OR as a mid-stage vanished-file scan
-    # guard — both are the same retryable race
-    attempts = []
-    real_retry = maintenance._occ_retry
-
-    def counting_retry(op, path_, fn):
-        def counted():
-            attempts.append(op)
-            return fn()
-
-        return real_retry(op, path_, counted)
-
-    monkeypatch.setattr(maintenance, "_occ_retry", counting_retry)
+    staged_ev, release_ev = _pause_first_stage(monkeypatch)
+    # the conflict may surface at commit-time validation OR as a
+    # mid-stage vanished-file scan guard — both are the same race
+    attempts = _count_attempts(monkeypatch)
     ids = [5, 17]
     out = {}
     t = threading.Thread(
         target=lambda: out.update(
-            r=targeted_delete(spark, path, "doc_id", ids, occ=True)
-        )
+            r=targeted_delete(spark, path, "doc_id", ids)
+        ),
+        name="paused-delete",
     )
     t.start()
     assert staged_ev.wait(120)
-    # a gated delete beats the paused stager to the same file
-    res_gated = targeted_delete(spark, path, "doc_id", [7], occ=False)
-    assert res_gated["rows_deleted"] == 1
+    # another delete beats the paused stager to the same file
+    res_other = targeted_delete(spark, path, "doc_id", [7])
+    assert res_other["rows_deleted"] == 1
     release_ev.set()
     t.join(timeout=600)
-    assert "r" in out, "occ delete never finished"
-    assert len(attempts) >= 2, "expected a conflict-driven retry"
+    assert "r" in out, "paused delete never finished"
+    assert attempts.count("paused-delete") == 2, attempts
     assert out["r"]["rows_deleted"] == 2
     got = {r.doc_id for r in read_table(spark, path).collect()}
     assert got == set(range(400)) - {5, 7, 17}
@@ -237,9 +252,15 @@ def test_occ_overlapping_delete_conflicts_then_retries_exact(
 def test_occ_exhausted_retries_raise_loudly(
     spark, tmp_path, monkeypatch
 ):
-    """A mutation that keeps losing validation surfaces as
-    ConcurrentMutationError after bounded retries — never a silent
-    partial commit; the aborted attempts leave no feed delta."""
+    """A STANDING conflict (validation fails even under the gate —
+    what a writer that skips the gate produces) gets exactly one
+    optimistic attempt plus one gated attempt, then
+    ConcurrentMutationError naming the path — never a silent partial
+    commit; no feed delta and no staging dir are left behind."""
+    from osrs_dashboard_elt_spark.sources.change_feed import (
+        _changes_root,
+    )
+
     path = str(tmp_path / "tbl")
     _mk_tbl(spark, path, n=50, files=1)
 
@@ -247,96 +268,130 @@ def test_occ_exhausted_retries_raise_loudly(
         raise _OccConflict("synthetic standing conflict")
 
     monkeypatch.setattr(maintenance, "_occ_validate", always_conflict)
+    attempts = _count_attempts(monkeypatch)
     rows = spark.range(5000, 5003).select(
         F.col("id").alias("doc_id"),
         (F.col("id") % 7).alias("grp"),
         F.lit("x").alias("text"),
     )
-    with pytest.raises(ConcurrentMutationError, match="table_append"):
-        table_append(spark, path, rows, occ=True)
+    with pytest.raises(ConcurrentMutationError, match="table_append") as ei:
+        table_append(spark, path, rows)
+    assert path in str(ei.value)
+    assert len(attempts) == 2, attempts
     assert latest_change_seq(path) == 0
+    root = _changes_root(path)
+    assert not [
+        d for d in os.listdir(root)
+        if os.path.isdir(os.path.join(root, d))
+    ], "aborted attempts left a staged delta"
+    assert not [
+        d for d in os.listdir(path)
+        if d.startswith(maintenance._OCC_STAGE_PREFIX)
+    ], "aborted attempts left a staging dir"
     assert read_table(spark, path).count() == 50
-    # no staged-delta or occ-staging debris that a later mutation
-    # would trip over; the next (gated) append runs clean
+    # the next append runs clean
+    monkeypatch.undo()
     table_append(spark, path, rows)
     assert read_table(spark, path).count() == 53
 
 
-def test_cross_process_occ_contention():
-    """Round-10 judge ask #2 done-criterion: the cross-process probe
-    extended to the CONCURRENT (occ) case — two separate python
-    processes (own SparkSessions) append optimistically to one table,
-    staging outside the gate simultaneously; serialization of the
-    commit windows must still give contiguous seqs, exact rows, exact
-    as-of, and a maintained view equal to direct recompute."""
-    import json
-    import subprocess
-    import sys
+def test_occ_delete_plans_through_a_parked_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Writer A is parked between its file swap and its manifest
+    refresh (inside its commit window) while writer B plans a DISJOINT
+    delete: B's planner lists A's half-committed files and the
+    manifest freshness check refuses.  Outside the gate that refusal
+    is a conflict — B runs again under the gate after A commits, so
+    both deletes land exactly and the feed holds each once."""
+    from osrs_dashboard_elt_spark.sources import stats_manifest
 
-    probe = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts", "probe_cross_process.py",
+    path = str(tmp_path / "tbl")
+    _mk_tbl(spark, path, n=400, files=4)
+    a_parked = threading.Event()
+    b_planned = threading.Event()
+    b_planning = threading.Event()
+    real_refresh = stats_manifest.refresh_stats_manifest
+    real_ffv = stats_manifest.files_for_values
+
+    def parking_refresh(*a, **k):
+        if threading.current_thread().name == "writer-a":
+            a_parked.set()
+            assert b_planned.wait(120), "B never planned"
+        return real_refresh(*a, **k)
+
+    def gated_ffv(*a, **k):
+        if (
+            threading.current_thread().name == "writer-b"
+            and not b_planned.is_set()
+        ):
+            b_planning.set()
+            assert a_parked.wait(120), "A never parked"
+            try:
+                return real_ffv(*a, **k)
+            finally:
+                b_planned.set()
+        return real_ffv(*a, **k)
+
+    monkeypatch.setattr(
+        stats_manifest, "refresh_stats_manifest", parking_refresh
     )
-    out = subprocess.run(
-        [sys.executable, probe, "3", "occ"],
-        capture_output=True, text=True, timeout=600,
+    monkeypatch.setattr(stats_manifest, "files_for_values", gated_ffv)
+    a_ids, b_ids = [5, 17], [350]
+    out: dict = {}
+    errs: dict = {}
+
+    def run(name, ids):
+        try:
+            out[name] = targeted_delete(spark, path, "doc_id", ids)
+        except BaseException as e:  # surfaced below
+            errs[name] = e
+            b_planned.set()
+
+    tb = threading.Thread(
+        target=run, args=("writer-b", b_ids), name="writer-b"
     )
-    lines = [
-        ln for ln in out.stdout.splitlines()
-        if ln.startswith('{"op"')
-    ]
-    # parse the record BEFORE the rc assert: a failure must surface
-    # the probe's own per-check verdicts (incl. the raw seq list),
-    # not a progress-bar-filled stdout tail (round-11 flake note: one
-    # full-suite run failed with the diagnostic truncated away)
-    rec = json.loads(lines[-1]) if lines else None
-    assert out.returncode == 0, (rec, out.stderr[-500:])
-    assert rec["ok"] is True, rec
-    assert rec["mode"] == "occ"
-    assert rec["seqs_contiguous"] and rec["committed_seqs"] == 6, rec
+    tb.start()
+    # B is inside its planner before A writes its journal
+    assert b_planning.wait(120)
+    ta = threading.Thread(
+        target=run, args=("writer-a", a_ids), name="writer-a"
+    )
+    ta.start()
+    ta.join(timeout=600)
+    tb.join(timeout=600)
+    assert not errs, errs
+    assert out["writer-a"]["rows_deleted"] == 2
+    assert out["writer-b"]["rows_deleted"] == 1
+    got = {r.doc_id for r in read_table(spark, path).collect()}
+    assert got == set(range(400)) - set(a_ids) - set(b_ids)
+    dels = read_change_feed(spark, path).filter(
+        "_change_type = 'delete'"
+    )
+    assert sorted(r["doc_id"] for r in dels.collect()) == sorted(
+        a_ids + b_ids
+    )
 
 
 def test_occ_delete_conflicts_on_concurrent_matching_append(
     spark, tmp_path, monkeypatch
 ):
-    """Round-11 self-review (high): an occ delete's victims check
-    cannot see files ADDED after planning — a concurrent append of
-    rows MATCHING the delete's values must conflict the commit (the
-    retry's plan then covers them), or a takedown reports success
+    """Round-11 self-review (high): a delete's victims check cannot
+    see files ADDED after planning — a concurrent append of rows
+    MATCHING the delete's values must conflict the commit (the gated
+    attempt's plan then covers them), or a takedown reports success
     while matching rows stay live (Delta raises
     ConcurrentAppendException for the same overlap)."""
     path = str(tmp_path / "tbl")
     _mk_tbl(spark, path, n=100, files=2)
-    staged_ev = threading.Event()
-    release_ev = threading.Event()
-    real_mkdtemp = maintenance.tempfile.mkdtemp
-
-    def pausing(*a, **k):
-        d = real_mkdtemp(*a, **k)
-        if str(k.get("prefix", "")).startswith(
-            maintenance._OCC_STAGE_PREFIX
-        ) and not staged_ev.is_set():
-            staged_ev.set()
-            assert release_ev.wait(120)
-        return d
-
-    monkeypatch.setattr(maintenance.tempfile, "mkdtemp", pausing)
-    attempts = []
-    real_retry = maintenance._occ_retry
-
-    def counting_retry(op, path_, fn):
-        def counted():
-            attempts.append(op)
-            return fn()
-
-        return real_retry(op, path_, counted)
-
-    monkeypatch.setattr(maintenance, "_occ_retry", counting_retry)
+    staged_ev, release_ev = _pause_first_stage(monkeypatch)
+    attempts = _count_attempts(monkeypatch)
     out = {}
     t = threading.Thread(
         target=lambda: out.update(
-            r=targeted_delete(spark, path, "doc_id", [7], occ=True)
-        )
+            r=targeted_delete(spark, path, "doc_id", [7])
+        ),
+        name="paused-delete",
     )
     t.start()
     assert staged_ev.wait(120)
@@ -352,8 +407,8 @@ def test_occ_delete_conflicts_on_concurrent_matching_append(
     )
     release_ev.set()
     t.join(timeout=600)
-    assert "r" in out, "occ delete never finished"
-    assert len(attempts) >= 2, "append overlap did not force a retry"
+    assert "r" in out, "paused delete never finished"
+    assert attempts.count("paused-delete") == 2, attempts
     # the retry covered BOTH copies: no doc_id=7 row survives
     assert read_table(spark, path).filter("doc_id = 7").isEmpty()
     feed = read_change_feed(spark, path)
@@ -401,69 +456,85 @@ def test_occ_stage_ttl_judges_whole_tree(spark, tmp_path):
 
 
 def test_asof_arithmetic_stable_under_concurrent_occ_appends(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Round-11 self-review (high): the as-of window-completeness
-    guard and the delta scan now share ONE committed-seq listing —
-    a mutation committing between two separate listings used to fire
-    the mid-read poison on a healthy read.  Hammer arithmetic as-of
-    at seq 0 while occ appends commit: every read returns the exact
-    seq-0 count or trips the (legitimate) consistency guard — never
-    the spurious lost-deltas error."""
-    from osrs_dashboard_elt_spark.sources.change_feed import (
-        read_table_as_of as rta,
-    )
+    guard and the delta scan share ONE committed-seq listing — a
+    mutation committing between two separate listings used to fire
+    the mid-read poison on a healthy read.  Read arithmetic as-of at
+    seq 0 at fixed points of each of 4 appends — after its file swap,
+    just before its change-feed commit, just after it, and once the
+    append returns: every read gives the exact seq-0 count or a
+    designed refusal, never the lost-deltas error; the read after each
+    append is exact.  Just before the feed commit the default (snapshot
+    first) mode is read too: the new file is listed while its delta is
+    not, which both paths must refuse rather than count."""
+    from osrs_dashboard_elt_spark.sources import change_feed
 
     path = str(tmp_path / "tbl")
     _mk_tbl(spark, path, n=120, files=2)
     n0 = 120
-    spurious: list = []
-    wrongs: list = []
-    stop = threading.Event()
+    seen: list = []
 
-    def reader():
-        while not stop.is_set():
-            try:
-                n = rta(spark, path, 0, mode="arithmetic").count()
-                if n != n0:
-                    wrongs.append(n)
-            except Exception as e:
-                msg = str(e)
-                if "lost deltas MID-READ" in msg:
-                    spurious.append(msg[:200])
-                # negative-multiplicity / freshness refusals are the
-                # designed loud outcome for a read racing a commit
-
-    t = threading.Thread(target=reader)
-    t.start()
-    try:
-        for i in range(4):
-            table_append(
-                spark, path,
-                spark.range(3).select(
-                    (F.lit(7000 + 10 * i) + F.col("id")).alias(
-                        "doc_id"
-                    ),
-                    F.lit(0).cast("long").alias("grp"),
-                    F.lit("w").alias("text"),
-                ),
-                occ=True,
+    def probe(point, mode="arithmetic"):
+        try:
+            n = change_feed.read_table_as_of(
+                spark, path, 0, mode=mode
+            ).count()
+        except Exception as e:
+            msg = str(e)
+            assert "lost deltas MID-READ" not in msg, (point, msg[:300])
+            assert "stale" in msg or "mid-commit" in msg, (
+                point, mode, msg[:300],
             )
-    finally:
-        stop.set()
-        t.join(timeout=300)
-    assert not spurious, f"spurious mid-read failures: {spurious[:2]}"
-    assert not wrongs, f"wrong as-of counts: {wrongs[:5]}"
+            seen.append((point, "refused"))
+            return
+        assert n == n0, (point, mode, n)
+        seen.append((point, n))
+
+    real_swap = maintenance._journal_and_swap
+    real_commit = change_feed.commit_changes
+
+    def swap_then_read(*a, **k):
+        out = real_swap(*a, **k)
+        probe("after_swap")
+        return out
+
+    def commit_between_reads(*a, **k):
+        probe("before_commit")
+        probe("before_commit", mode="auto")
+        out = real_commit(*a, **k)
+        probe("after_commit")
+        return out
+
+    monkeypatch.setattr(maintenance, "_journal_and_swap", swap_then_read)
+    monkeypatch.setattr(change_feed, "commit_changes", commit_between_reads)
+    for i in range(4):
+        table_append(
+            spark, path,
+            spark.range(3).select(
+                (F.lit(7000 + 10 * i) + F.col("id")).alias("doc_id"),
+                F.lit(0).cast("long").alias("grp"),
+                F.lit("w").alias("text"),
+            ),
+        )
+        probe("after_append")
+    points = [p for p, _ in seen]
+    assert points == [
+        "after_swap", "before_commit", "before_commit", "after_commit",
+        "after_append",
+    ] * 4, points
+    assert all(v == n0 for p, v in seen if p == "after_append"), seen
 
 
 def test_occ_upsert_overlaps_append_and_conflicts_on_matching_keys(
     spark, tmp_path, monkeypatch
 ):
-    """OCC completes the writer surface with MERGE: an occ upsert and
-    an occ append of UNRELATED rows overlap and both commit; a
-    concurrent append whose rows match the merge's keys forces a
-    conflict-retry so the merge's semantics hold over the final
-    state (Delta's ConcurrentAppendException shape)."""
+    """MERGE rides the same protocol: an upsert and an append of
+    UNRELATED rows overlap and both commit; a concurrent append whose
+    rows match the merge's keys forces exactly one gated re-run so the
+    merge's semantics hold over the final state (Delta's
+    ConcurrentAppendException shape)."""
     from osrs_dashboard_elt_spark.sources.maintenance import (
         targeted_upsert,
     )
@@ -481,10 +552,8 @@ def test_occ_upsert_overlaps_append_and_conflicts_on_matching_keys(
         F.lit("w").alias("text"),
     )
     res = _run_threads(
-        lambda: targeted_upsert(
-            spark, path, "doc_id", ups, occ=True
-        ),
-        lambda: table_append(spark, path, unrelated, occ=True),
+        lambda: targeted_upsert(spark, path, "doc_id", ups),
+        lambda: table_append(spark, path, unrelated),
     )
     assert res[0]["rows_updated"] == 1
     assert res[0]["rows_inserted"] == 1
@@ -494,39 +563,17 @@ def test_occ_upsert_overlaps_append_and_conflicts_on_matching_keys(
     assert got.filter("doc_id = 5").collect()[0]["text"] == "updated"
     assert latest_change_seq(path) == 2
     # ---- overlap case: append a row with a MERGE key mid-staging
-    staged_ev = threading.Event()
-    release_ev = threading.Event()
-    real_mkdtemp = maintenance.tempfile.mkdtemp
-
-    def pausing(*a, **k):
-        d = real_mkdtemp(*a, **k)
-        if str(k.get("prefix", "")).startswith(
-            maintenance._OCC_STAGE_PREFIX
-        ) and not staged_ev.is_set():
-            staged_ev.set()
-            assert release_ev.wait(120)
-        return d
-
-    monkeypatch.setattr(maintenance.tempfile, "mkdtemp", pausing)
-    attempts = []
-    real_retry = maintenance._occ_retry
-
-    def counting_retry(op, path_, fn):
-        def counted():
-            attempts.append(op)
-            return fn()
-
-        return real_retry(op, path_, counted)
-
-    monkeypatch.setattr(maintenance, "_occ_retry", counting_retry)
+    staged_ev, release_ev = _pause_first_stage(monkeypatch)
+    attempts = _count_attempts(monkeypatch)
     ups2 = spark.createDataFrame(
         [(17, 3, "v2")], "doc_id long, grp long, text string"
     )
     out = {}
     t = threading.Thread(
         target=lambda: out.update(
-            r=targeted_upsert(spark, path, "doc_id", ups2, occ=True)
-        )
+            r=targeted_upsert(spark, path, "doc_id", ups2)
+        ),
+        name="paused-upsert",
     )
     t.start()
     assert staged_ev.wait(120)
@@ -539,7 +586,7 @@ def test_occ_upsert_overlaps_append_and_conflicts_on_matching_keys(
     release_ev.set()
     t.join(timeout=600)
     assert "r" in out
-    assert len(attempts) >= 2, "matching append did not force retry"
+    assert attempts.count("paused-upsert") == 2, attempts
     # the retry's merge covered BOTH copies of key 17
     rows17 = read_table(spark, path).filter("doc_id = 17").collect()
     assert {r["text"] for r in rows17} == {"v2"}
@@ -549,13 +596,13 @@ def test_occ_upsert_overlaps_append_and_conflicts_on_matching_keys(
 def test_occ_feedless_table_never_misses_silent_append(
     spark, tmp_path, monkeypatch
 ):
-    """Round-11 self-review: on a FEEDLESS table the occ commit
-    window cannot scan deltas for concurrently-inserted matching
-    rows, and a refresh_stats=False append advances no manifest
-    epoch — the full file-LISTING fingerprint is the detector.  The
-    occ delete must conflict; its retry then either covers the new
-    row (fresh manifest) or refuses loudly on the stale one — never
-    a 'successful' takedown leaving matching rows live."""
+    """Round-11 self-review: on a FEEDLESS table the commit window
+    cannot scan deltas for concurrently-inserted matching rows, and a
+    refresh_stats=False append advances no manifest epoch — the full
+    file-LISTING fingerprint is the detector.  The delete must
+    conflict; its gated attempt then either covers the new row (fresh
+    manifest) or refuses loudly on the stale one — never a
+    'successful' takedown leaving matching rows live."""
     from osrs_dashboard_elt_spark.sources.stats_manifest import (
         write_stats_manifest,
     )
@@ -572,29 +619,13 @@ def test_occ_feedless_table_never_misses_silent_append(
         )
 
     def run_case(p, refresh_stats):
-        staged_ev = threading.Event()
-        release_ev = threading.Event()
-        real_mkdtemp = tempfile_mod.mkdtemp
-
-        def pausing(*a, **k):
-            d = real_mkdtemp(*a, **k)
-            if str(k.get("prefix", "")).startswith(
-                maintenance._OCC_STAGE_PREFIX
-            ) and not staged_ev.is_set():
-                staged_ev.set()
-                assert release_ev.wait(120)
-            return d
-
-        monkeypatch.setattr(
-            maintenance.tempfile, "mkdtemp", pausing
-        )
+        # a second call chains onto the first's (spent) pause
+        staged_ev, release_ev = _pause_first_stage(monkeypatch)
         out: dict = {}
 
         def worker():
             try:
-                out["r"] = targeted_delete(
-                    spark, p, "doc_id", [7], occ=True
-                )
+                out["r"] = targeted_delete(spark, p, "doc_id", [7])
             except Exception as e:
                 out["err"] = e
 
@@ -611,12 +642,7 @@ def test_occ_feedless_table_never_misses_silent_append(
         )
         release_ev.set()
         t.join(timeout=600)
-        monkeypatch.setattr(
-            maintenance.tempfile, "mkdtemp", real_mkdtemp
-        )
         return out
-
-    import tempfile as tempfile_mod
 
     # fresh-manifest append: the conflict retry replans over the new
     # file and removes BOTH copies

@@ -329,17 +329,19 @@ def test_crash_after_remove_is_reconciled(spark, tmp_path):
     )
 
 
-def test_serial_baseline_equals_batched(spark, tmp_path):
-    """serial=True is the round-7 measurement baseline (SCALE.md):
-    identical results, per-file jobs."""
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    _tbl(spark, a, n=1000, files=4)
-    _tbl(spark, b, n=1000, files=4)
+def test_batched_delete_exact_id_set(spark, tmp_path):
+    """The one batched rewrite (one classification scan + one rewrite
+    job) leaves exactly the non-target rows, each row intact."""
+    path = str(tmp_path / "tbl")
+    _tbl(spark, path, n=1000, files=4)
     targets = [3, 500, 999]
-    ra = targeted_delete(spark, a, "doc_id", targets)
-    rb = targeted_delete(spark, b, "doc_id", targets, serial=True)
-    assert ra == rb
-    rows = lambda p: sorted(
-        tuple(r) for r in spark.read.parquet(p).collect()
+    res = targeted_delete(spark, path, "doc_id", targets)
+    assert res["rows_deleted"] == 3
+    rows = spark.read.parquet(path).collect()
+    assert sorted(r["doc_id"] for r in rows) == sorted(
+        set(range(1000)) - set(targets)
     )
-    assert rows(a) == rows(b)
+    assert all(
+        r["tag"] == r["doc_id"] % 13 and r["text"] == f"t{r['doc_id']}"
+        for r in rows
+    )
